@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{PrefixMatch, TemplateFilters}
+import graft.sources.TsvFileFormat
 
 /** GeoNames domain pipeline — the reference's `transform` step
   * (geonames.js:223–254) re-expressed as a single declarative Spark plan.
@@ -34,9 +35,10 @@ import graft.operators.{PrefixMatch, TemplateFilters}
   *     `obj.uri`.
   *
   * Scale design: both admin dimensions are broadcast (≈100k rows total at
-  * full GeoNames scale); the main table is never shuffled — the whole
-  * plan is scan → filter → project → 2 broadcast joins → union → sink,
-  * i.e. map-only over the 8M-row (or 100 TB) fact side.
+  * full GeoNames scale); the main table is never shuffled and is scanned
+  * once — the whole plan is scan → filter → classify → 2 broadcast left
+  * joins → project pit and relation JSON → explode → sink, i.e. map-only
+  * over the 8M-row (or 100 TB) fact side.
   */
 object GeoNames {
 
@@ -45,7 +47,11 @@ object GeoNames {
 
   /** geonames.js:24–44. All strings at the bronze layer (SURVEY §1.2);
     * typed projections happen downstream so a malformed row can never
-    * fail the scan under ANSI mode.
+    * fail the scan under ANSI mode. Both dump schemas are read with
+    * [[TsvFileFormat]]: GeoNames files are unquoted, so a stray '"' is data
+    * and never glues lines together, and empty or missing fields read as
+    * "" (not null) to mirror JS `R.zipObj` semantics: present-but-empty,
+    * falsy for truthiness checks, serialized as "".
     */
   val allCountriesSchema: StructType = StructType(Seq(
     "geonameid", "name", "asciiname", "alternatenames", "latitude",
@@ -78,24 +84,12 @@ object GeoNames {
 
   // ------------------------------------------------------------- readers
 
-  /** TSV scan with fixed positional schema; GeoNames files are unquoted,
-    * so quoting is disabled (a stray '"' must not glue lines together).
-    * Empty fields read as "" (not null) to mirror JS `R.zipObj` semantics:
-    * present-but-empty, falsy for truthiness checks, serialized as "".
-    */
-  private def readTsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("quote", "\u0000") // disable quote handling entirely
-      .schema(schema)
-      .csv(path)
-      .na.fill("", schema.fieldNames)
-
-  /** Main table scan; drops blank trailing lines (which the reference
-    * passes to its filter and drops there — same end state).
+  /** Main table scan; drops blank lines and rows with an empty id (the
+    * reference passes blank trailing lines to its filter and drops them
+    * there — same end state).
     */
   def readAllCountries(spark: SparkSession, path: String): DataFrame =
-    readTsv(spark, path, allCountriesSchema)
+    TsvFileFormat.read(spark, path, allCountriesSchema)
       .where(length(col("geonameid")) > 0)
 
   /** Admin-code dimension with the reference's last-write-wins on
@@ -103,7 +97,7 @@ object GeoNames {
     * the row with the highest file position per code.
     */
   def readAdminCodes(spark: SparkSession, path: String): DataFrame = {
-    val raw = readTsv(spark, path, adminCodesSchema)
+    val raw = TsvFileFormat.read(spark, path, adminCodesSchema)
       .where(length(col("code")) > 0)
       .withColumn("_pos", monotonically_increasing_id())
     raw.groupBy(col("code"))
@@ -132,9 +126,6 @@ object GeoNames {
       .where(col("type").isNotNull)
   }
 
-  /** Place-In-Time records with the reference's exact nested shape and
-    * field order (geonames.js:137–158).
-    */
   /** ECMAScript Number→String (radix 10) rendering of a double, as
     * JSON.stringify emits it: "null" for non-finite (parseFloat("") is
     * NaN and stringifies to JSON null), no ".0" on integral values,
@@ -156,24 +147,75 @@ object GeoNames {
           org.apache.spark.sql.graft.ColumnBridge.expression(c))),
       lit("null"))
 
+  /** Place-In-Time fields with the reference's exact nested shape and
+    * field order (geonames.js:137–158), over a classified row.
+    */
+  private def pitFields: Seq[Column] = Seq(
+    concat(lit(baseUri), col("geonameid")).as("uri"),
+    col("name"),
+    col("type"),
+    struct(
+      lit("Point").as("type"),
+      // pre-rendered JS-style number strings; pitJson splices them back
+      // to bare JSON numbers. try_cast, not cast: the reference's
+      // parseFloat("") is NaN (→ JSON null), where the ANSI cast would
+      // abort the whole job on one empty field. (parseFloat's
+      // prefix-parse of garbage like "3.5abc" is NOT mirrored — no such
+      // values exist in GeoNames dumps, and silently truncating them is
+      // worse than a null.)
+      array(jsNum(expr("try_cast(longitude as double)")),
+        jsNum(expr("try_cast(latitude as double)"))).as("coordinates")).as("geometry"),
+    struct(dataFields.map(col): _*).as("data"))
+
+  /** liesIn edge fields (geonames.js:116–120) over a row with `_parent`. */
+  private def relationFields(config: Config): Seq[Column] = Seq(
+    concat(lit(baseUri), col("geonameid")).as("from"),
+    concat(lit(baseUri), col("_parent")).as("to"),
+    lit(config.liesIn).as("type"))
+
+  /** `{"type":"pit","obj":{...}}` (geonames.js:160–163). The coordinates
+    * are pre-rendered JS-number STRINGS inside the struct (see
+    * [[pitFields]]); unquote them structurally. The anchor is safe: an
+    * unescaped `"coordinates":["` sequence cannot occur inside a JSON
+    * string value (to_json escapes quotes as \"), and the rendered
+    * numbers contain no quotes.
+    */
+  private def pitJson: Column =
+    regexp_replace(
+      to_json(struct(lit("pit").as("type"), struct(pitFields: _*).as("obj"))),
+      "\"coordinates\":\\[\"([^\"]*)\",\"([^\"]*)\"\\]",
+      "\"coordinates\":[$1,$2]")
+
+  /** `{"type":"relation","obj":{...}}` (geonames.js:165–169). */
+  private def relationJson(config: Config): Column =
+    to_json(struct(lit("relation").as("type"), struct(relationFields(config): _*).as("obj")))
+
+  /** Place-In-Time records (geonames.js:137–158), keyed by `geonameid`. */
   def pits(places: DataFrame, config: Config): DataFrame =
-    classified(places, config).select(
-      col("geonameid"),
-      concat(lit(baseUri), col("geonameid")).as("uri"),
-      col("name"),
-      col("type"),
-      struct(
-        lit("Point").as("type"),
-        // pre-rendered JS-style number strings; envelopes() splices
-        // them back to bare JSON numbers. try_cast, not cast: the
-        // reference's parseFloat("") is NaN (→ JSON null), where the
-        // ANSI cast would abort the whole job on one empty field.
-        // (parseFloat's prefix-parse of garbage like "3.5abc" is NOT
-        // mirrored — no such values exist in GeoNames dumps, and
-        // silently truncating them is worse than a null.)
-        array(jsNum(expr("try_cast(longitude as double)")),
-          jsNum(expr("try_cast(latitude as double)"))).as("coordinates")).as("geometry"),
-      struct(dataFields.map(col): _*).as("data"))
+    classified(places, config).select(col("geonameid") +: pitFields: _*)
+
+  /** Classified rows plus `_parent`, the geonameid of each row's liesIn
+    * parent (geonames.js:100–123), or null when the row has none. Only rows
+    * with exactly 3 truthy admin codes get probe keys: `_k2` (all three,
+    * '.'-joined) into admin2 and `_k1` (the first two) into admin1, whose
+    * id is the parent when the admin2 parent is the row itself. Both
+    * dimension joins are broadcast LEFT joins, so every row survives
+    * exactly once provided each dimension's `code` is unique (as
+    * [[readAdminCodes]] guarantees); an unresolvable parent is null (see
+    * DEVIATION above).
+    */
+  private def withParent(typed: DataFrame, admin1: DataFrame, admin2: DataFrame): DataFrame = {
+    val keyed = typed
+      .withColumn("_codes", truthyAdminCodes)
+      .withColumn("_codes", when(size(col("_codes")) === 3, col("_codes")))
+      .withColumn("_k2", array_join(col("_codes"), "."))
+      .withColumn("_k1", array_join(slice(col("_codes"), 1, 2), "."))
+    val a2 = broadcast(admin2.select(col("code").as("_k2"), col("geonameid").as("_p2")))
+    val a1 = broadcast(admin1.select(col("code").as("_k1"), col("geonameid").as("_p1")))
+    keyed.join(a2, Seq("_k2"), "left").join(a1, Seq("_k1"), "left")
+      .withColumn("_parent",
+        when(col("_p2") === col("geonameid"), col("_p1")).otherwise(col("_p2")))
+  }
 
   /** liesIn edges (geonames.js:100–123): exactly-3-truthy admin codes,
     * admin2 probe with admin1 fallback when the parent is the row itself.
@@ -181,50 +223,29 @@ object GeoNames {
     * (see DEVIATION above).
     */
   def relations(places: DataFrame, admin1: DataFrame, admin2: DataFrame,
-                config: Config): DataFrame = {
-    val cand = classified(places, config)
-      .withColumn("_codes", truthyAdminCodes)
-      .where(size(col("_codes")) === 3)
-      .select(col("geonameid"),
-        array_join(col("_codes"), ".").as("_k2"),
-        array_join(slice(col("_codes"), 1, 2), ".").as("_k1"))
-    val a2 = broadcast(admin2.select(col("code").as("_k2"), col("geonameid").as("_p2")))
-    val a1 = broadcast(admin1.select(col("code").as("_k1"), col("geonameid").as("_p1")))
-    cand.join(a2, Seq("_k2"), "left").join(a1, Seq("_k1"), "left")
-      .withColumn("_parent",
-        when(col("_p2") === col("geonameid"), col("_p1")).otherwise(col("_p2")))
+                config: Config): DataFrame =
+    withParent(classified(places, config), admin1, admin2)
       .where(col("_parent").isNotNull)
-      .select(
-        concat(lit(baseUri), col("geonameid")).as("from"),
-        concat(lit(baseUri), col("_parent")).as("to"),
-        lit(config.liesIn).as("type"))
-  }
+      .select(relationFields(config): _*)
 
-  /** Tagged NDJSON envelope stream — pit lines then relation lines, each
-    * `{"type":...,"obj":{...}}` (geonames.js:160–170). One DataFrame with
-    * a single `value` string column, ready for `df.write.text`.
+  /** Tagged NDJSON envelope stream, each line `{"type":...,"obj":{...}}`
+    * (geonames.js:160–170), as one DataFrame with a single `value` string
+    * column, ready for `df.write.text`. Like the reference's per-row step,
+    * one pass over `places` emits each place's pit line followed directly
+    * by its relation line, if it has one, so a sink writes one part file
+    * per input split. Precondition: `code` is unique in both admin
+    * dimensions ([[readAdminCodes]] output is); a duplicate key would
+    * repeat the place's pit line.
     */
   def envelopes(places: DataFrame, admin1: DataFrame, admin2: DataFrame,
-                config: Config): DataFrame = {
-    // coordinates are pre-rendered JS-number STRINGS inside the struct
-    // (see pits); unquote them structurally. The anchor is safe: an
-    // unescaped `"coordinates":["` sequence cannot occur inside a JSON
-    // string value (to_json escapes quotes as \"), and the rendered
-    // numbers contain no quotes.
-    val pitJson = pits(places, config).select(
-      regexp_replace(
-        to_json(struct(
-          lit("pit").as("type"),
-          struct(col("uri"), col("name"), col("type"), col("geometry"),
-            col("data")).as("obj"))),
-        "\"coordinates\":\\[\"([^\"]*)\",\"([^\"]*)\"\\]",
-        "\"coordinates\":[$1,$2]").as("value"))
-    val relJson = relations(places, admin1, admin2, config).select(
-      to_json(struct(
-        lit("relation").as("type"),
-        struct(col("from"), col("to"), col("type")).as("obj"))).as("value"))
-    pitJson.unionByName(relJson)
-  }
+                config: Config): DataFrame =
+    // the JSON is projected before the generator, so the renderer stays
+    // in a whole-stage-codegen'd Project
+    withParent(classified(places, config), admin1, admin2)
+      .select(
+        pitJson.as("_pit"),
+        when(col("_parent").isNotNull, relationJson(config)).as("_rel"))
+      .select(explode(filter(array(col("_pit"), col("_rel")), _.isNotNull)).as("value"))
 
   /** Bronze materialization of the main table, partitioned by country —
     * at full GeoNames scale (or 100 TB) partition pruning makes a

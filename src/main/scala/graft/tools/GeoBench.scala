@@ -10,8 +10,8 @@ import graft.geonames.GeoNames
 /** GeoNames pipeline throughput harness: generates an N-row synthetic
   * allCountries extract (deterministic, GeoNames-shaped, ~125 B/row)
   * plus admin-code dimensions, runs the full transform (filter →
-  * classify → pits ∪ relations → NDJSON), and prints one JSON line with
-  * rows/sec. The reference processes the real dump strictly
+  * classify → pit and relation envelopes → NDJSON), and prints one
+  * JSON line with rows/sec. The reference processes the real dump strictly
   * sequentially, one row at a time (geonames.js:249–252) and publishes
   * no timings; this gives our side a measured number at the same
   * workload shape.

@@ -453,4 +453,26 @@ class PlanSpec extends SparkSpec {
     p should include("BroadcastHashJoin")
     (p should not).include("CartesianProduct")
   }
+
+  test("Par.spreadSmallScan: the one-split scale gate, pinned on both sides of the bound") {
+    // the spread fires iff the optimizer's size estimate is at most one
+    // scan split (spark.sql.files.maxPartitionBytes): pin the bound to the
+    // estimate itself (fires) and to one byte below it (identity)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val li = graft.sources.Tables.lineitem(spark, dir)
+    val est = li.queryExecution.optimizedPlan.stats.sizeInBytes
+    est should be > BigInt(1)
+    def spreadPlan(bound: BigInt): String = {
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, bound.toString)
+      try graft.operators.Par.spreadSmallScan(li, org.apache.spark.sql.functions.col("l_orderkey"))
+        .queryExecution.executedPlan.toString
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val below = spreadPlan(est)
+    below should include("Exchange hashpartitioning(xxhash64(l_orderkey")
+    val above = spreadPlan(est - 1)
+    (above should not).include("Exchange")
+    (li.queryExecution.executedPlan.toString should not).include("Exchange")
+  }
 }

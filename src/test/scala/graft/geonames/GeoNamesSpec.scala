@@ -6,7 +6,13 @@ import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions.{col, lit, regexp_replace, struct, to_json}
+
+/** Plan traversal that descends into adaptive query stages. */
+private object Aqe extends AdaptiveSparkPlanHelper
 
 /** End-to-end pipeline test on a synthetic GeoNames extract exercising
   * every SURVEY §1.4 edge case, plus a golden NDJSON comparison.
@@ -172,6 +178,57 @@ class GeoNamesSpec extends SparkSpec {
       """{"type":"relation","obj":{"from":"http://sws.geonames.org/1001","to":"http://sws.geonames.org/1002","type":"hg:liesIn"}}""",
       """{"type":"relation","obj":{"from":"http://sws.geonames.org/1002","to":"http://sws.geonames.org/5332922","type":"hg:liesIn"}}""").sorted
     out should contain theSameElementsInOrderAs expected
+  }
+
+  test("envelopes: one pass equals the rendered pits ∪ relations, each relation after its pit") {
+    // oracle: pits and relations rendered on their own, then unioned
+    val pitLines = GeoNames.pits(places, config).select(regexp_replace(
+      to_json(struct(lit("pit").as("type"),
+        struct(col("uri"), col("name"), col("type"), col("geometry"), col("data")).as("obj"))),
+      "\"coordinates\":\\[\"([^\"]*)\",\"([^\"]*)\"\\]", "\"coordinates\":[$1,$2]"))
+    val relLines = GeoNames.relations(places, admin1, admin2, config).select(
+      to_json(struct(lit("relation").as("type"),
+        struct(col("from"), col("to"), col("type")).as("obj"))))
+    val env = GeoNames.envelopes(places, admin1, admin2, config).as[String].collect().toSeq
+    env.sorted shouldBe pitLines.union(relLines).as[String].collect().toSeq.sorted
+    // in line order, a relation's `from` is the uri of the line before it
+    val uri = "\"(?:uri|from)\":\"([^\"]*)\"".r
+    env.zip(env.drop(1)).collect { case (prev, rel) if rel.contains("\"relation\"") =>
+      prev should include("\"type\":\"pit\"")
+      uri.findFirstMatchIn(prev).map(_.group(1)) shouldBe uri.findFirstMatchIn(rel).map(_.group(1))
+    }.size shouldBe 2
+  }
+
+  test("envelopes: duplicate admin codes still give exactly one pit line per place") {
+    val d = Files.createTempDirectory("geonames-dups").toFile.getAbsolutePath
+    write(s"$d/allCountries.txt", rows.map(_.mkString("\t")).mkString("\n") + "\n")
+    // both dimensions repeat a code; the reference's last write wins
+    write(s"$d/admin1CodesASCII.txt", (admin1Rows :+ admin1Rows.last)
+      .map(_.mkString("\t")).mkString("\n") + "\n")
+    write(s"$d/admin2Codes.txt",
+      (Seq("US.CA.075", "Shadowed", "Shadowed", "7777") +: admin2Rows :+ admin2Rows.last)
+        .map(_.mkString("\t")).mkString("\n") + "\n")
+    val env = GeoNames.envelopes(
+      GeoNames.readAllCountries(spark, s"$d/allCountries.txt"),
+      GeoNames.readAdminCodes(spark, s"$d/admin1CodesASCII.txt"),
+      GeoNames.readAdminCodes(spark, s"$d/admin2Codes.txt"), config).as[String].collect()
+    val pitUris = env.flatMap("\"uri\":\"([^\"]*)\"".r.findFirstMatchIn(_)).map(_.group(1))
+    pitUris.length shouldBe 5
+    pitUris.distinct.length shouldBe 5
+    env.sorted shouldBe GeoNames.envelopes(places, admin1, admin2, config).as[String].collect().sorted
+  }
+
+  test("envelopes plan: one scan of the places file, no Union, two broadcast hash joins") {
+    val env = GeoNames.envelopes(places, admin1, admin2, config)
+    env.collect()
+    val plan = env.queryExecution.executedPlan
+    val placeScans = Aqe.collect(plan) {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.endsWith("/allCountries.txt")) => s
+    }
+    placeScans.size shouldBe 1
+    Aqe.collect(plan) { case u: UnionExec => u } shouldBe empty
+    Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.size shouldBe 2
   }
 
   test("transform writes NDJSON files end-to-end; readEnvelopes round-trips") {
