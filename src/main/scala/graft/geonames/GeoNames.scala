@@ -35,10 +35,13 @@ import graft.sources.TsvFileFormat
   *     `obj.uri`.
   *
   * Scale design: both admin dimensions are broadcast (≈100k rows total at
-  * full GeoNames scale); the main table is never shuffled and is scanned
-  * once — the whole plan is scan → filter → classify → 2 broadcast left
-  * joins → project pit and relation JSON → explode → sink, i.e. map-only
-  * over the 8M-row (or 100 TB) fact side.
+  * full GeoNames scale), each built by one scan task with no shuffle; the
+  * main table is never shuffled and is scanned once. The fact side — scan
+  * → filter → classify → 2 broadcast left joins → project pit and relation
+  * JSON → explode → drop null lines — is one whole-stage-codegen pipeline,
+  * map-only over the 8M-row (or 100 TB) dump: every per-row step is a
+  * built-in Catalyst expression that generates code (no higher-order
+  * lambda, no regex), and the country filter is one hash-set probe.
   */
 object GeoNames {
 
@@ -94,12 +97,18 @@ object GeoNames {
 
   /** Admin-code dimension with the reference's last-write-wins on
     * duplicate codes (geonames.js:75–77 overwrites the map entry): keep
-    * the row with the highest file position per code.
+    * the row with the highest file position per code. `_pos` is assigned
+    * per input split, before the splits are coalesced into one task, and
+    * that task deduplicates: the aggregate needs no shuffle, and the
+    * dimension costs one job. One task is enough because the dimension is
+    * broadcast, so it must fit on one node anyway (at full GeoNames scale
+    * `admin2Codes.txt` is a single split).
     */
   def readAdminCodes(spark: SparkSession, path: String): DataFrame = {
     val raw = TsvFileFormat.read(spark, path, adminCodesSchema)
       .where(length(col("code")) > 0)
       .withColumn("_pos", monotonically_increasing_id())
+      .coalesce(1)
     raw.groupBy(col("code"))
       .agg(max_by(col("geonameid"), col("_pos")).as("geonameid"))
   }
@@ -107,10 +116,12 @@ object GeoNames {
   // ----------------------------------------------------------- transform
 
   /** Truthy admin-code values in key order (JS `R.filter(R.identity,
-    * R.values(R.pick(adminKeys, obj)))`, geonames.js:103).
+    * R.values(R.pick(adminKeys, obj)))`, geonames.js:103). Null and ""
+    * are both falsy; coalescing null to "" lets one `array_remove` drop
+    * them.
     */
   private def truthyAdminCodes: Column =
-    filter(array(adminKeys.map(col): _*), c => length(c) > 0)
+    array_remove(array(adminKeys.map(k => coalesce(col(k), lit(""))): _*), "")
 
   /** The filtered, classified core: input rows + `type` column, untyped
     * rows dropped. Shared by pits and relations (relations are derived
@@ -147,25 +158,31 @@ object GeoNames {
           org.apache.spark.sql.graft.ColumnBridge.expression(c))),
       lit("null"))
 
-  /** Place-In-Time fields with the reference's exact nested shape and
-    * field order (geonames.js:137–158), over a classified row.
-    */
-  private def pitFields: Seq[Column] = Seq(
+  /** The pit's leading fields `uri`, `name`, `type` (geonames.js:137–140). */
+  private def pitHead: Seq[Column] = Seq(
     concat(lit(baseUri), col("geonameid")).as("uri"),
     col("name"),
-    col("type"),
-    struct(
-      lit("Point").as("type"),
-      // pre-rendered JS-style number strings; pitJson splices them back
-      // to bare JSON numbers. try_cast, not cast: the reference's
-      // parseFloat("") is NaN (→ JSON null), where the ANSI cast would
-      // abort the whole job on one empty field. (parseFloat's
-      // prefix-parse of garbage like "3.5abc" is NOT mirrored — no such
-      // values exist in GeoNames dumps, and silently truncating them is
-      // worse than a null.)
-      array(jsNum(expr("try_cast(longitude as double)")),
-        jsNum(expr("try_cast(latitude as double)"))).as("coordinates")).as("geometry"),
-    struct(dataFields.map(col): _*).as("data"))
+    col("type"))
+
+  /** `[longitude, latitude]` as pre-rendered JS-style number strings.
+    * try_cast, not cast: the reference's parseFloat("") is NaN (→ JSON
+    * null), where the ANSI cast would abort the whole job on one empty
+    * field. (parseFloat's prefix-parse of garbage like "3.5abc" is NOT
+    * mirrored — no such values exist in GeoNames dumps, and silently
+    * truncating them is worse than a null.)
+    */
+  private def coordinates: Seq[Column] =
+    Seq(jsNum(expr("try_cast(longitude as double)")), jsNum(expr("try_cast(latitude as double)")))
+
+  private def pitData: Column = struct(dataFields.map(col): _*).as("data")
+
+  /** Place-In-Time fields with the reference's exact nested shape and
+    * field order (geonames.js:137–158), over a classified row. The
+    * coordinates are the rendered number strings.
+    */
+  private def pitFields: Seq[Column] = pitHead ++ Seq(
+    struct(lit("Point").as("type"), array(coordinates: _*).as("coordinates")).as("geometry"),
+    pitData)
 
   /** liesIn edge fields (geonames.js:116–120) over a row with `_parent`. */
   private def relationFields(config: Config): Seq[Column] = Seq(
@@ -173,18 +190,22 @@ object GeoNames {
     concat(lit(baseUri), col("_parent")).as("to"),
     lit(config.liesIn).as("type"))
 
-  /** `{"type":"pit","obj":{...}}` (geonames.js:160–163). The coordinates
-    * are pre-rendered JS-number STRINGS inside the struct (see
-    * [[pitFields]]); unquote them structurally. The anchor is safe: an
-    * unescaped `"coordinates":["` sequence cannot occur inside a JSON
-    * string value (to_json escapes quotes as \"), and the rendered
-    * numbers contain no quotes.
+  /** `{"type":"pit","obj":{...}}` (geonames.js:160–163), concatenated from
+    * fragments: the JSON of the leading fields with its closing brace
+    * trimmed, the geometry with the rendered coordinates spliced in as bare
+    * numbers, then the JSON of `data`. Jackson still escapes every string
+    * value. The trim removes exactly one `}`: the last leading field,
+    * `type`, is a non-null string, so its closing quote precedes the brace.
     */
-  private def pitJson: Column =
-    regexp_replace(
-      to_json(struct(lit("pit").as("type"), struct(pitFields: _*).as("obj"))),
-      "\"coordinates\":\\[\"([^\"]*)\",\"([^\"]*)\"\\]",
-      "\"coordinates\":[$1,$2]")
+  private def pitJson: Column = {
+    val Seq(lon, lat) = coordinates
+    concat(
+      lit("{\"type\":\"pit\",\"obj\":"),
+      rtrim(to_json(struct(pitHead: _*)), "}"),
+      lit(",\"geometry\":{\"type\":\"Point\",\"coordinates\":["), lon, lit(","), lat,
+      lit("]},\"data\":"), to_json(pitData),
+      lit("}}"))
+  }
 
   /** `{"type":"relation","obj":{...}}` (geonames.js:165–169). */
   private def relationJson(config: Config): Column =
@@ -239,13 +260,15 @@ object GeoNames {
     */
   def envelopes(places: DataFrame, admin1: DataFrame, admin2: DataFrame,
                 config: Config): DataFrame =
-    // the JSON is projected before the generator, so the renderer stays
-    // in a whole-stage-codegen'd Project
+    // the JSON is projected before the generator, and the generator is a
+    // plain explode, so projection, explode and the null-line filter stay
+    // in the scan's whole-stage-codegen'd stage
     withParent(classified(places, config), admin1, admin2)
       .select(
         pitJson.as("_pit"),
         when(col("_parent").isNotNull, relationJson(config)).as("_rel"))
-      .select(explode(filter(array(col("_pit"), col("_rel")), _.isNotNull)).as("value"))
+      .select(explode(array(col("_pit"), col("_rel"))).as("value"))
+      .where(col("value").isNotNull)
 
   /** Bronze materialization of the main table, partitioned by country —
     * at full GeoNames scale (or 100 TB) partition pruning makes a

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -26,9 +28,24 @@ object TemplateFilters {
     * documented edge (SURVEY.md §1.4.3): with no templates nothing passes,
     * not even whitelisted ids, because the whitelist disjunct lives inside
     * the per-template closure.
+    *
+    * Single-key templates on the same column are one `IN` list, placed
+    * where the first of them was: `k = a OR k = b` and `k IN (a, b)` agree
+    * under three-valued logic, and Catalyst turns a list of more than 10
+    * values into an `InSet` hash probe, so a config of 25 countries costs
+    * one probe per row instead of 25 string comparisons. A column with only
+    * one single-key template keeps its plain equality.
     */
-  def anyTemplate(filters: Seq[Map[String, Any]]): Column =
-    filters.map(whereEq).reduceOption(_ || _).getOrElse(lit(false))
+  def anyTemplate(filters: Seq[Map[String, Any]]): Column = {
+    val valuesByKey = filters.filter(_.size == 1).map(_.head).groupMap(_._1)(_._2)
+    val merged = mutable.Set.empty[String]
+    filters.flatMap {
+      case t if t.size == 1 && valuesByKey(t.head._1).size > 1 =>
+        val k = t.head._1
+        if (merged.add(k)) Some(col(k).isin(valuesByKey(k): _*)) else None
+      case t => Some(whereEq(t))
+    }.reduceOption(_ || _).getOrElse(lit(false))
+  }
 
   /** Full reference filter: (any template matches) OR (id ∈ whitelist) —
     * but only when at least one template exists (see [[anyTemplate]]).

@@ -6,8 +6,12 @@ import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import graft.sources.TsvFileFormat
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, InSet}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, InputAdapter, SparkPlan,
+  UnionExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.{col, lit, regexp_replace, struct, to_json}
 
@@ -76,6 +80,17 @@ class GeoNamesSpec extends SparkSpec {
   test("admin-code dim: duplicate code keeps the LAST row (reference overwrite)") {
     val a1 = admin1.as[(String, String)].collect().toMap
     a1("US.CA") shouldBe "5332922"
+    // the same file read as several splits: file positions are assigned
+    // per split, before the splits meet in the one deduplicating task
+    val confs = Seq("spark.sql.files.maxPartitionBytes" -> "16", "spark.sql.files.openCostInBytes" -> "1")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val path = s"$dir/admin1CodesASCII.txt"
+      TsvFileFormat.read(spark, path, GeoNames.adminCodesSchema).rdd.getNumPartitions should be > 3
+      GeoNames.readAdminCodes(spark, path).as[(String, String)].collect().toMap shouldBe
+        Map("US.CA" -> "5332922", "DE.BE" -> "2950157")
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("classification filters + types: US rows and whitelisted 1006; 1004/1005 dropped") {
@@ -229,6 +244,32 @@ class GeoNamesSpec extends SparkSpec {
     placeScans.size shouldBe 1
     Aqe.collect(plan) { case u: UnionExec => u } shouldBe empty
     Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.size shouldBe 2
+
+    // one codegen pipeline and shuffle-free admin builds, under a config
+    // whose country list is long enough for an InSet probe
+    val countries = "US" +: (0 until 11).map(i => f"C$i%02d")
+    val wide = GeoNames.envelopes(places, admin1, admin2,
+      config.copy(filters = countries.map(c => Map("countryCode" -> c))))
+    wide.collect().map(_.getString(0)).sorted shouldBe env.collect().map(_.getString(0)).sorted
+    val widePlan = wide.queryExecution.executedPlan
+    Aqe.collect(widePlan) { case e: ShuffleExchangeExec => e } shouldBe empty
+    Aqe.collect(widePlan) {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[HigherOrderFunction])) => p
+    } shouldBe empty
+    // the operators inside one codegen'd stage (its InputAdapters and
+    // broadcast build sides end it)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter | _: BroadcastExchangeLike => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    val generating = Aqe.collect(widePlan) { case w: WholeStageCodegenExec => stage(w.child) }
+      .filter(_.exists(_.isInstanceOf[GenerateExec]))
+    generating.size shouldBe 1
+    val factSide = generating.head
+    factSide.count(_.isInstanceOf[BroadcastHashJoinExec]) shouldBe 2
+    val placeFilters = factSide.collect { case f: FilterExec
+      if f.child.exists(_.isInstanceOf[FileSourceScanExec]) => f }
+    placeFilters.exists(_.condition.exists(_.isInstanceOf[InSet])) shouldBe true
   }
 
   test("transform writes NDJSON files end-to-end; readEnvelopes round-trips") {
