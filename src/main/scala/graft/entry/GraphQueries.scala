@@ -215,7 +215,7 @@ private[graft] object GraphQueries {
     // (0.15000000000000002); at sf1's n=20000 the two dangling-node
     // bases straddle the 6dp half-way point 7.5e-6 and 931 rows flip a
     // final digit. With the casts the sf1 raw doubles are bit-identical
-    // across all 20000 nodes (PageRankRawProbe, r12 sample).
+    // across all 20000 nodes (CORRECTNESS_sf1_sample_r12.json).
     "q_pagerank" ->
       """WITH emb AS MATERIALIZED (
         |  SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings),

@@ -137,20 +137,6 @@ object GeoNames {
       .where(col("type").isNotNull)
   }
 
-  /** ECMAScript Number→String (radix 10) rendering of a double, as
-    * JSON.stringify emits it: "null" for non-finite (parseFloat("") is
-    * NaN and stringifies to JSON null), no ".0" on integral values,
-    * "0" for negative zero, positional notation for 1e-6 ≤ |v| < 1e21,
-    * exponent form elsewhere. The reference serializes parseFloat
-    * results through JSON.stringify (geonames.js:141–147), and Java
-    * 17's Double.toString differs exactly there ("-121.0" vs "-121",
-    * E-notation below 1e-3) — caught by the true-reference run
-    * (REFPARITY_r13.json), invisible to the JS proxy, whose corpus had
-    * no integral coordinates. Kernel and shortest-digit selection live
-    * in [[JsNum]]; this forwarder keeps the spec's call site.
-    */
-  private[geonames] def jsNumberString(d: Double): String = JsNum.render(d)
-
   private def jsNum(c: Column): Column =
     coalesce(
       org.apache.spark.sql.graft.ColumnBridge.column(

@@ -10,7 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
 /** ECMAScript Number→String (radix 10) rendering of a double, exactly as
   * node's `JSON.stringify` emits it — the NDJSON-sink fidelity kernel
   * (the reference serializes parseFloat results straight through
-  * JSON.stringify, geonames.js:141–147).
+  * JSON.stringify, geonames.js:141–147): "null" for non-finite
+  * (parseFloat("") is NaN and stringifies to JSON null), no ".0" on
+  * integral values, "0" for negative zero, positional notation for
+  * 1e-6 ≤ |v| < 1e21, exponent form elsewhere. Java 17's
+  * `Double.toString` differs exactly there ("-121.0" vs "-121",
+  * E-notation below 1e-3) — caught by the true-reference run
+  * (REFPARITY_r13.json), invisible to the JS proxy, whose corpus had no
+  * integral coordinates.
   *
   * The digit sequence is computed here as the SHORTEST round-tripping
   * decimal (nearest-to-value among candidates, ties to the even digit —

@@ -125,8 +125,8 @@ object Multimodal {
     * stack dropped the old 60 s provider cache), and on a Spark executor
     * that scan walks META-INF/services across the full several-hundred-
     * jar classpath — measured 20 ms/row inside an executor vs 50 µs/row
-    * for the identical decode in a thin-classpath JVM (AudioProbe,
-    * OPTIMIZATION_r15.md). Caching the provider list is the §4.5
+    * for the identical decode in a thin-classpath JVM
+    * (OPTIMIZATION_r15.md). Caching the provider list is the §4.5
     * "initialise heavyweight state once, not per row" fix; the decode
     * below still runs the same JRE reader (WaveFileReader et al.), in
     * the same priority order AudioSystem uses.
@@ -139,8 +139,8 @@ object Multimodal {
     while (it.hasNext) buf += it.next()
     // Gervill's SoftMidiAudioFileReader LAST: probing it costs a fresh
     // synchronized MIDI provider scan PER CALL (MidiSystem.getSequence →
-    // JDK13Services.getProviders — the stack the AudioProbe sampler
-    // caught under every executor thread, ~1 ms/row with lock
+    // JDK13Services.getProviders — the stack a sampler caught under
+    // every executor thread (OPTIMIZATION_r15.md), ~1 ms/row with lock
     // contention), and the JDK's container readers reject foreign bytes
     // from the magic number alone for ~1 µs. Only payloads NO standard
     // reader accepts ever reach it, and reader order only matters when

@@ -414,7 +414,12 @@ object Dedup {
     * [[clusters]].
     *
     * Returns (labels, roundsRun): labels covers every endpoint of the
-    * input (self-loop-only nodes label themselves).
+    * input (self-loop-only nodes label themselves). `roundsRun` counts
+    * rounds executed, checked per two-round stride, so when convergence
+    * lands on a stride's first round it is one above the round that
+    * converged. It is diagnostic only (the labels are the same either
+    * way); a per-round check would cost one driver action per round,
+    * which is what the strides remove.
     */
   private[graft] def clustersStarWithRounds(p: DataFrame, maxIters: Int,
                                             reliable: Boolean): (DataFrame, Int) = {

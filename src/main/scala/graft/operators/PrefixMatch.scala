@@ -34,10 +34,4 @@ object PrefixMatch {
     val probes = (maxLen to 1 by -1).map(l => element_at(m, substring(code, 1, l)))
     coalesce(probes: _*)
   }
-
-  /** Classification-as-filter (reference drops unmatched rows). */
-  def classifyOrDrop(code: Column, types: Map[String, String]): (Column, Column) = {
-    val c = classify(code, types)
-    (c, c.isNotNull)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -15,13 +14,8 @@ import graft.operators.Dedup
 object DedupBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession()
 
     // deterministic pseudorandom corpus: token(id, i) = t<xxhash64(id, i) mod 50000>
     // (hash-mixed so distinct docs share shingles only by chance)

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.SparkEntry
@@ -73,12 +72,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "docs/PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession(4)
     val sb = new StringBuilder
     sb.append("# Physical plans (headline queries, sf0.001)\n\n")
     sb.append("Generated by `graft.tools.ExplainDump`. What to look for:\n")

@@ -120,16 +120,11 @@ object GeoBench {
     val work = if (args.length > 1) args(1) else
       Files.createTempDirectory("geobench").toFile.getAbsolutePath
     val proxyRows = if (args.length > 2) args(2).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession()
 
     val stage = s"$work/stage"
-    writeStaging(spark, rows, stage, cpus.toInt)
+    writeStaging(spark, rows, stage, cpus)
 
     // --- timed transform --------------------------------------------
     val t0 = System.nanoTime()
@@ -158,7 +153,7 @@ object GeoBench {
     // --- untimed sampled proxy equivalence ---------------------------
     val proxyJson = if (proxyRows > 0) {
       val sampleStage = s"$work/sample_stage"
-      writeStaging(spark, proxyRows, sampleStage, cpus.toInt)
+      writeStaging(spark, proxyRows, sampleStage, cpus)
       val sparkOut = s"$work/sample_out"
       runTransform(spark, sampleStage, sparkOut)
       val proxyOut = s"$work/proxy_out.ndjson"

@@ -1,18 +1,12 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object HashCalc {
   def main(a: Array[String]): Unit = {
-    // default layout local[8]/8; override to match the consumer of the
+    // layout is ToolSession's local[n]/n; match it to the consumer of the
     // hash (EntrySpec pins assert under the TestSpark local[4]/4 session
     // — sketch-merge trees, e.g. approx_percentile's, are deterministic
     // PER LAYOUT but differ across layouts once the data is big enough
     // for per-partition partials to diverge)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus).toInt)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
     def cell(v: Any): String = v match {
       case null => "␀"
       case b: Array[Byte] => b.map("%02x".format(_)).mkString

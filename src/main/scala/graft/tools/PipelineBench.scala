@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Funnel, Graphs, Packing, Retrieval}
@@ -18,13 +17,8 @@ object PipelineBench {
     val nVec = if (args.length > 0) args(0).toLong else 1000000L
     val nEvents = if (args.length > 1) args(1).toLong else 50000000L
     val nDocs = if (args.length > 2) args(2).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession()
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }

@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.geonames.GeoNames
 
 /** Engine half of the real-reference parity check
@@ -21,13 +19,7 @@ object RefParity {
     val fixtureDir = args(0)
     val outFile = args(1)
     val mode = if (args.length > 2) args(2) else "default"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession(4)
     val config = GeoNames.Config(
       filters =
         if (mode == "nofilters") Nil else Seq(Map("countryCode" -> "US")),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.geonames.GeoNames
 
 /** Engine half of the FULL-DUMP real-reference parity run
@@ -32,18 +30,11 @@ object RefParityDump {
     val work = args(1)
     val mode = args(2)
     require(mode == "complete" || mode == "original", s"mode $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
 
     val stage = s"$work/stage"
     val t0 = System.nanoTime()
-    GeoBench.writeStaging(spark, rows, stage, cpus.toInt,
+    GeoBench.writeStaging(spark, rows, stage, ToolSession.cpus,
       admin2Complete = mode == "complete")
     val stageSec = (System.nanoTime() - t0) / 1e9
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -43,14 +43,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val (base, out, reps) = (args(0), args(1), args(2).toInt)
     require(reps >= 1, s"reps $reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     def keySpan(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1L

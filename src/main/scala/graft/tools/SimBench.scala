@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ivf, Similarity}
@@ -17,13 +16,8 @@ object SimBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 1000000L
     val nq = 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession()
 
     def vec(idCol: org.apache.spark.sql.Column, bump: Boolean) =
       transform(sequence(lit(0), lit(63)), i => {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Dedup, Funnel, Graphs, Ivf, Packing, Retrieval, Skew, Stats, Timeseries}
@@ -30,11 +29,11 @@ import graft.operators.{Curation, Dedup, Funnel, Graphs, Ivf, Packing, Retrieval
   */
 object StressBench {
   /** 64-d deterministic synthetic embedding: component j of vector `id`
-    * is xxhash64(id, j) mod 2001, rescaled to [-1, 1). Sections 24/25 and
-    * HotBucketProbe MUST share this one definition — the section-25
-    * collider attribution ("same kernel, same ids") is only valid while
-    * the probe and the stream hash identical vectors, and a private copy
-    * drifting would invalidate it with no compile-time signal.
+    * is xxhash64(id, j) mod 2001, rescaled to [-1, 1). Sections 24/25
+    * MUST share this one definition — the section-25 collider count in
+    * docs/THROUGHPUT.md was measured over exactly these vectors ("same
+    * kernel, same ids"), and a private copy drifting would invalidate it
+    * with no compile-time signal.
     */
   def vecOf64(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     transform(sequence(lit(0), lit(63)), i =>
@@ -59,13 +58,8 @@ object StressBench {
       if (args.length > 3) args(3).split(",").map(_.trim.toInt).toSet
       else (1 to 22).toSet
     def section(n: Int)(body: => Unit): Unit = if (sections(n)) body
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession()
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
@@ -868,10 +862,11 @@ object StressBench {
     // row maxBucket·hotEvery (the #4097th planted arrival, first member
     // at row 0) is an UPPER bound: the hot bucket also
     // accretes random same-signature colliders, so the guard fires
-    // earlier — measured by HotBucketProbe (same kernel, same ids):
-    // band 3's bucket gains 377 random members per 5.3M rows (~5× the
-    // uniform 2^-16 rate; the discrete component grid biases some sign
-    // patterns), putting the crossing at ≈5.22M — the r15 run fired at
+    // earlier — counted over vecOf64 (same kernel, same ids; recorded
+    // in docs/THROUGHPUT.md, section 25): band 3's bucket gains 377
+    // random members per 5.3M rows (~5× the uniform 2^-16 rate; the
+    // discrete component grid biases some sign patterns), putting the
+    // crossing at ≈5.22M — the r15 run fired at
     // rows_at_failure 5.2M, in that bucket's key exactly.
     section(25) {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -150,7 +150,7 @@ class GeoNamesSpec extends SparkSpec {
       1.0 / 3.0 -> "0.3333333333333333",
       6.02214076e23 -> "6.02214076e+23")
     for ((d, want) <- cases)
-      withClue(s"$d: ") { GeoNames.jsNumberString(d) shouldBe want }
+      withClue(s"$d: ") { JsNum.render(d) shouldBe want }
 
     // the same cases through the CODEGEN path (JsNumberStringExpr inside
     // a whole-stage-codegen'd projection — the NDJSON sink's shape), so

@@ -46,11 +46,4 @@ class PrefixMatchSpec extends SparkSpec {
       withClue(s"code='$c'") { got(c) shouldBe referenceLookup(c, typeMap) }
     }
   }
-
-  test("classifyOrDrop filter drops unmatched rows") {
-    val (cls, keep) = PrefixMatch.classifyOrDrop(col("code"), typeMap)
-    val got = Seq("ADM2H", "XXX").toDF("code").where(keep)
-      .select(cls.as("t")).as[String].collect()
-    got shouldBe Array("admin2")
-  }
 }
