@@ -113,7 +113,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // The between-query dead-checkpoint sweep (releaseDeadCheckpoints)
+    // The between-query lineage-cut sweep (releaseDeadCheckpoints)
     // makes every RDD class log "locally checkpointed ... cannot be
     // recomputed after unpersisting" — true and intended (the RDDs are
     // dead); silence the rdd package so hundreds of them don't flood
@@ -198,9 +198,9 @@ object Bench {
           if (!failed.contains(name)) failed += name
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
         }
-        // Dead-block hygiene between queries: every persisted RDD at this
-        // point is a per-query internal localCheckpoint (shared fixtures
-        // are parquet files) — dropping them now keeps block storage flat
+        // Dead-block hygiene between queries: every lineage cut at this
+        // point is a per-query intermediate (shared fixtures are parquet
+        // files) — dropping them now keeps block storage flat
         // across the 230-query run instead of accumulating until late
         // queries pay eviction/GC pressure (the r6 driver-total artifact).
         SparkEntry.releaseDeadCheckpoints(spark)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Packing, Par, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
+import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Lineage, Packing, Par, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
 import graft.functions.{DedupExpr, TextAnalytics}
 import graft.EntryContext._
 
@@ -192,9 +192,9 @@ private[graft] object CurationQueries {
       val all = docShingles(s, dir)
       Curation.decontaminateBloomPre(
           all.where(col("id") % 50 =!= 0).select(col("id"), col("sh")),
-          all.where(col("id") % 50 === 0)
-            .select(explode(col("sh")).as("h")).distinct()
-            .localCheckpoint(true)) // bloom build + exact-verify join
+          Lineage.cut(all.where(col("id") % 50 === 0) // bloom build + exact-verify join
+            .select(explode(col("sh")).as("h")).distinct(),
+            "q_decontaminate_bloom.bench"))
         .select(col("id").as("doc_id"), col("n_sh"), col("n_shared"),
           round(col("overlap_frac"), 4).as("overlap_frac"), col("contaminated"))
         .orderBy(col("doc_id"))
@@ -239,10 +239,9 @@ private[graft] object CurationQueries {
     // counts agree because 64-bit collisions are vanishing)
     "q_cross_source" -> ((s, dir) =>
       Curation.crossSourceOverlapPre(
-          docShingles(s, dir)
+          Lineage.cut(docShingles(s, dir) // both self-join branches read it
             .select(col("source").as("_src"), explode(col("sh")).as("h"))
-            .distinct()
-            .localCheckpoint(true)) // both self-join branches consume it
+            .distinct(), "q_cross_source.shingles"))
         .orderBy(col("source_a"), col("source_b"))),
 
     // Deterministic 3-way train/val/test split: the first 16 md5 bits

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Packing, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
+import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Lineage, Packing, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
 import graft.functions.{DedupExpr, TextAnalytics}
 
 /** Shared state of the declared query surface: the longest-prefix type
@@ -375,7 +375,7 @@ private[graft] object EntryContext {
           "q_embedding_neardup_lsh / q_semantic_dedup scale paths")
       val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
       val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
-      // process-lifetime PARQUET fixture (not a localCheckpoint): four
+      // process-lifetime PARQUET fixture (not a lineage cut): four
       // declared queries (neardup / clusters / clusters_star / keepers)
       // consume this pair set and CC re-reads it every iteration — the
       // O(n²) join must run ONCE per fixture dir, not once per consumer
@@ -454,20 +454,18 @@ private[graft] object EntryContext {
     s.read.parquet(path)
   }
 
-  /** Drop every persisted RDD still registered with the context —
-    * Bench calls this between queries. After the parquet-fixture
-    * conversion above, NO cross-query state lives in block storage:
-    * anything in `getPersistentRDDs` is a dead per-query internal
-    * `localCheckpoint` (Dedup/Curation/CC intermediates) whose blocks
-    * would otherwise accumulate across 230 queries × 2 reps until late
-    * queries pay eviction/GC pressure that the same queries don't pay
-    * in isolation (the r6 driver-total artifact). Spark's own
-    * ContextCleaner frees these only after a full GC, which an 8 GiB
-    * heap may never run in a 4-minute bench.
+  /** Drop every engine lineage cut still registered with the context
+    * ([[Lineage.releaseAll]]) — Bench calls this between queries. After
+    * the parquet-fixture conversion above, no cross-query state lives in
+    * a cut, so every `graft-cut:` RDD left is a dead per-query
+    * intermediate whose blocks would otherwise accumulate across 230
+    * queries × 2 reps until late queries pay eviction/GC pressure that
+    * the same queries don't pay in isolation (the r6 driver-total
+    * artifact). Spark's own ContextCleaner frees these only after a full
+    * GC, which an 8 GiB heap may never run in a 4-minute bench. What a
+    * caller persisted itself (`cache()`/`persist()`) is left alone.
     */
-  def releaseDeadCheckpoints(s: SparkSession): Unit =
-    s.sparkContext.getPersistentRDDs.valuesIterator
-      .foreach(_.unpersist(blocking = false))
+  def releaseDeadCheckpoints(s: SparkSession): Unit = Lineage.releaseAll(s)
 
   // ------------------------------------------------------------ queries
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Packing, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
+import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Lineage, Packing, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
 import graft.functions.{DedupExpr, TextAnalytics}
 import graft.EntryContext._
 
@@ -38,14 +38,14 @@ private[graft] object MultimodalQueries {
       val assets = s.read.schema(graft.multimodal.Multimodal.assetSchema)
         .parquet(pngAssetsFixture(s, dir))
         .as[graft.multimodal.Multimodal.Asset]
-      graft.multimodal.Multimodal.imageFeatures(assets, dim = 4)
+      // cut before the global sort: the range partitioner's sampling
+      // pass otherwise re-executes the whole decode pipeline a second
+      // time (r15 — every codec runs 2x per query without it)
+      Lineage.cut(graft.multimodal.Multimodal.imageFeatures(assets, dim = 4)
         .select(col("asset_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
-          round(element_at(col("embedding"), 1).cast("double"), 6).as("luma"))
-        // lazy persist before the global sort: the range partitioner's
-        // sampling pass otherwise re-executes the whole decode pipeline
-        // a second time (r15 — every codec runs 2x per query without it)
-        .localCheckpoint(false)
+          round(element_at(col("embedding"), 1).cast("double"), 6).as("luma")),
+          "q_image_decode.rows")
         .orderBy(col("asset_id"))
     }),
 
@@ -60,8 +60,8 @@ private[graft] object MultimodalQueries {
       val assets = s.read.schema(graft.multimodal.Multimodal.assetSchema)
         .parquet(gradPngAssetsFixture(s, dir))
         .as[graft.multimodal.Multimodal.Asset]
-      graft.multimodal.Multimodal.dHash64(assets)
-        .localCheckpoint(false) // decode+hash once, not 2x (sort sampling; r15)
+      // decode+hash once, not 2x (sort sampling; r15)
+      Lineage.cut(graft.multimodal.Multimodal.dHash64(assets), "q_image_dhash.rows")
         .orderBy(col("asset_id"))
     }),
 
@@ -90,13 +90,13 @@ private[graft] object MultimodalQueries {
       val assets = s.read.schema(graft.multimodal.Multimodal.assetSchema)
         .parquet(wavAssetsFixture(s, dir))
         .as[graft.multimodal.Multimodal.Asset]
-      graft.multimodal.Multimodal.audioFeatures(assets, dim = 4)
+      // cut before the global sort (see q_image_decode; r15)
+      Lineage.cut(graft.multimodal.Multimodal.audioFeatures(assets, dim = 4)
         .select(col("asset_id"), col("sample_rate").cast("long").as("sample_rate"),
           col("channels").cast("long").as("channels"), col("n_frames"),
           col("duration_ms"),
-          round(element_at(col("rms"), 1).cast("double"), 6).as("rms1"))
-        // lazy persist before the global sort (see q_image_decode; r15)
-        .localCheckpoint(false)
+          round(element_at(col("rms"), 1).cast("double"), 6).as("rms1")),
+          "q_audio_decode.rows")
         .orderBy(col("asset_id"))
     }),
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Packing, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
+import graft.operators.{AsOfJoin, Baskets, Bpe, Cdc, Classifier, CorpusStats, CountMin, Curation, Dedup, Funnel, Geo, Graphs, HeavyHitters, Intervals, Ivf, Lineage, Packing, Pq, PrefixMatch, Profiling, Retrieval, Sampling, Similarity, Skew, Stats, TemplateFilters, Timeseries}
 import graft.functions.{DedupExpr, TextAnalytics}
 import graft.EntryContext._
 
@@ -191,7 +191,9 @@ private[graft] object TextQueries {
         lit("@example.com ip 10.0."), (col("doc_id") % 200).cast("string"),
         lit(".7 call 415-555-"),
         lpad((col("doc_id") % 10000).cast("string"), 4, "0"))
-      Tables.documents(s, dir)
+      // cut before the global sort: the range partitioner's sampling
+      // pass otherwise runs the whole regex battery twice (r15)
+      Lineage.cut(Tables.documents(s, dir)
         .select(col("doc_id"), aug.as("aug"))
         .select(col("doc_id"), Curation.piiCounts(col("aug")).as("pii"),
           md5(Curation.scrubPii(col("aug")).cast("binary")).as("redacted_md5"))
@@ -199,21 +201,18 @@ private[graft] object TextQueries {
           col("pii.n_emails").as("n_emails"),
           col("pii.n_ips").as("n_ips"),
           col("pii.n_phones").as("n_phones"),
-          col("redacted_md5"))
-        // lazy persist before the global sort: the range partitioner's
-        // sampling pass otherwise runs the whole regex battery twice (r15)
-        .localCheckpoint(false)
+          col("redacted_md5")), "q_pii_scrub.rows")
         .orderBy(col("doc_id"))
     }),
 
     // chained-xxhash64 fingerprint + lookaround tokenizer: not expressible
     // in DuckDB SQL → rows-only check
     "q_fingerprint" -> ((s, dir) =>
-      Tables.documents(s, dir)
+      Lineage.cut(Tables.documents(s, dir) // kernels once, not 2x (sort sampling; r15)
         .select(col("doc_id"),
           TextAnalytics.fingerprint(col("text")).as("fp"),
-          size(TextAnalytics.bpeishTokens(col("text"))).cast("long").as("n_bpe_tokens"))
-        .localCheckpoint(false) // kernels once, not 2x (sort sampling; r15)
+          size(TextAnalytics.bpeishTokens(col("text"))).cast("long").as("n_bpe_tokens")),
+        "q_fingerprint.rows")
         .orderBy(col("doc_id"))),
 
     // Corpus-frequency boilerplate removal (CCNet/RefinedWeb line-dedup
@@ -298,15 +297,15 @@ private[graft] object TextQueries {
     // SQL-expressible -> rows-only; kernel ≡ reference asserted in
     // BpeSpec, training determinism asserted, row count pinned
     "q_bpe_encode" -> ((s, dir) =>
-      Bpe.encodeCorpus(Tables.documents(s, dir), "doc_id", "text",
+      // cut of the NARROW row before the global sort: the range
+      // partitioner's sampling pass otherwise runs the trained
+      // merge-encode kernel twice (the r15 pii_scrub pattern; r16)
+      Lineage.cut(Bpe.encodeCorpus(Tables.documents(s, dir), "doc_id", "text",
           numMerges = 50, vocabCap = 5000)
         .select(col("id").as("doc_id"),
           size(col("subwords")).cast("long").as("n_subwords"),
-          size(array_distinct(col("subwords"))).cast("long").as("n_unique"))
-        // lazy persist of the NARROW row before the global sort: the
-        // range partitioner's sampling pass otherwise runs the trained
-        // merge-encode kernel twice (the r15 pii_scrub pattern; r16)
-        .localCheckpoint(false)
+          size(array_distinct(col("subwords"))).cast("long").as("n_unique")),
+        "q_bpe_encode.rows")
         .orderBy(col("doc_id"))),
 
     // PMI collocation mining: bigram pairs scored ln(c_ab·N/(c_a·c_b))

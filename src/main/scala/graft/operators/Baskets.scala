@@ -24,7 +24,7 @@ object Baskets {
     * before the support joins; supports are an item-keyed dimension and
     * the basket total is one broadcast row. Everything is integer until
     * the final lift division, so the lift is engine-exact. The distinct
-    * item table is materialized once (localCheckpoint) — four consumers
+    * item table is cut once ([[Lineage.cut]]) — four consumers
     * (basket total, supports, both self-join sides) would otherwise
     * each redo the dedup shuffle.
     *
@@ -50,8 +50,9 @@ object Baskets {
     */
   def cooccurrence(df: DataFrame, basketCol: Column, itemCol: Column,
                    minCount: Long, maxBasketCheck: Long = 10000): DataFrame = {
-    val items = df.select(basketCol.as("_b"), itemCol.as("_i")).distinct()
-      .localCheckpoint(false) // lazy: the guard/N aggregate below materializes it (r15)
+    // the guard/N aggregate below computes the cut's blocks
+    val items = Lineage.cut(df.select(basketCol.as("_b"), itemCol.as("_i")).distinct(),
+      "Baskets.cooccurrence.items")
     // ONE aggregate over the basket-size table serves BOTH the fan-out
     // guard (max |basket|) and the basket total N (count of non-null
     // basket groups == countDistinct(_b)) — previously the guard ran its

@@ -206,11 +206,10 @@ object CorpusStats {
   def cTfidf(docs: DataFrame, classCol: Column, textCol: Column,
              topK: Int, minTf: Long = 2): DataFrame = {
     require(topK >= 1, s"topK $topK")
-    val tf = docs.select(classCol.as("class"),
+    val tf = Lineage.cut(docs.select(classCol.as("class"),
         explode(TextAnalytics.tokens(lower(textCol))).as("term"))
       .groupBy(col("class"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")), "CorpusStats.cTfidf.tf")
     val f = tf.groupBy(col("term")).agg(sum(col("tf")).as("f"))
     val a = tf.agg((sum(col("tf")).cast("double") /
       countDistinct(col("class"))).as("a"))

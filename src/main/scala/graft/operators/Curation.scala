@@ -36,9 +36,9 @@ object Curation {
                     bench: DataFrame, benchTextCol: String,
                     k: Int = 3): DataFrame =
     decontaminatePre(
-      docs.select(col(idCol).as("id"),
-          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh"))
-        .localCheckpoint(true),
+      Lineage.cut(docs.select(col(idCol).as("id"),
+          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh")),
+        "Curation.decontaminate.docs"),
       bench.select(
         explode(DedupExpr.shingleHashes(
           TextAnalytics.tokens(col(benchTextCol)), k)).as("h")).distinct())
@@ -82,13 +82,13 @@ object Curation {
                          bench: DataFrame, benchTextCol: String,
                          k: Int = 3, fpp: Double = 0.01): DataFrame =
     decontaminateBloomPre(
-      docs.select(col(idCol).as("id"),
-          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh"))
-        .localCheckpoint(true),
-      bench.select(
+      Lineage.cut(docs.select(col(idCol).as("id"),
+          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh")),
+        "Curation.decontaminateBloom.docs"),
+      Lineage.cut(bench.select( // read by the bloom build AND the exact-verify join
           explode(DedupExpr.shingleHashes(
-            TextAnalytics.tokens(col(benchTextCol)), k)).as("h")).distinct()
-        .localCheckpoint(true), // reused: bloom build AND exact-verify join
+            TextAnalytics.tokens(col(benchTextCol)), k)).as("h")).distinct(),
+        "Curation.decontaminateBloom.bench"),
       fpp)
 
   /** [[decontaminateBloom]] over a pre-shingled corpus (same contract as
@@ -233,19 +233,17 @@ object Curation {
     // reduce-before-join: collapse repeats within a document so the
     // (a, b)-keyed join below never carries the occurrence stream —
     // repeated bigrams contribute cnt·log(p), not cnt joined rows.
-    // LAZY lineage cuts (r16): docBig feeds the scoring join + the
+    // Lineage cuts (r16): docBig feeds the scoring join + the
     // bigram dimension, and big feeds pre/suf/tot + the join — each
     // dimension rides a broadcast whose racing build materializes its
     // OWN copy of the upstream stages (AQE's stage cache does not
     // dedupe stages created inside in-flight broadcasts; final-plan
     // evidence showed the tokenPairs kernel running once per branch).
     // The first build computes the blocks, everyone else reads them.
-    val docBig = pairs.groupBy(col("id"), col("a"), col("b"))
-      .agg(count(lit(1)).as("_cnt"))
-      .localCheckpoint(false)
-    val big = docBig.groupBy(col("a"), col("b"))
-      .agg(sum(col("_cnt")).as("_cab"))
-      .localCheckpoint(false)
+    val docBig = Lineage.cut(pairs.groupBy(col("id"), col("a"), col("b"))
+      .agg(count(lit(1)).as("_cnt")), "Curation.bigramLogProb.docBig")
+    val big = Lineage.cut(docBig.groupBy(col("a"), col("b"))
+      .agg(sum(col("_cnt")).as("_cab")), "Curation.bigramLogProb.big")
     val pre = big.groupBy(col("a")).agg(sum(col("_cab")).as("_ca"))
     val suf = big.groupBy(col("b")).agg(sum(col("_cab")).as("_cb"))
     val tot = big.agg(sum(col("_cab")).as("_tot"))
@@ -293,10 +291,9 @@ object Curation {
   def crossSourceOverlap(docs: DataFrame, sourceCol: String, textCol: String,
                          k: Int = 3): DataFrame =
     crossSourceOverlapPre(
-      docs.select(col(sourceCol).as("_src"),
+      Lineage.cut(docs.select(col(sourceCol).as("_src"),
           explode(DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k)).as("h"))
-        .distinct()
-        .localCheckpoint(true))
+        .distinct(), "Curation.crossSourceOverlap.shingles"))
 
   /** [[crossSourceOverlap]] over pre-exploded DISTINCT (_src, h) rows
     * (caller owns materialization — both self-join branches consume it).
@@ -620,14 +617,14 @@ object Curation {
     */
   def dsirScores(docs: DataFrame, idCol: String, textCol: String,
                  isTarget: Column, buckets: Int): DataFrame = {
-    // LAZY lineage cut (r16): the dim-broadcast build is the first
+    // Lineage cut (r16): the dim-broadcast build is the first
     // consumer and materializes the blocks; the scoring join then reads
     // them. Without it the broadcast build's racing materialization
     // carried its OWN copy of the gram/md5 stages — AQE's stage cache
     // does not dedupe a stage created inside an in-flight broadcast
     // against the main DAG's identical stage (r16 final-plan evidence).
-    val bucketed = dsirBucketed(docs, idCol, textCol, isTarget, buckets)
-      .localCheckpoint(false)
+    val bucketed = Lineage.cut(dsirBucketed(docs, idCol, textCol, isTarget, buckets),
+      "Curation.dsirScores.bucketed")
     bucketed.join(broadcast(dsirDimPre(bucketed, buckets)), Seq("b"))
       .groupBy(col("id"))
       .agg(sum(col("c")).as("n_grams"),

@@ -107,9 +107,9 @@ object Dedup {
     // self-join carries only (bkey, id) — 16 B/row instead of
     // 16+8·numHashes; signatures rejoin the candidate-pair set, which is
     // orders of magnitude smaller than the banded row set.
-    val sigs = df.select(col(idCol).as("id"),
-        DedupExpr.minhashSig(TextAnalytics.tokens(col(textCol)), shingleK, numHashes).as("sig"))
-      .localCheckpoint(true)
+    val sigs = Lineage.cut(df.select(col(idCol).as("id"),
+        DedupExpr.minhashSig(TextAnalytics.tokens(col(textCol)), shingleK, numHashes).as("sig")),
+      "Dedup.minhashPairs.sigs")
     val bandRows = sigs.select(col("id"),
       explode(DedupExpr.bandKeys(col("sig"), bands, rowsPerBand)).as("bkey"))
     val cand = bandRows.select(col("bkey"), col("id").as("id_a"))
@@ -260,12 +260,12 @@ object Dedup {
     require(maxHamming >= 1 && maxHamming <= 15,
       s"maxHamming $maxHamming outside [1, 15]: 0 is exact grouping " +
         "(use exactByKey); >15 makes 64-bit bands too short to prune")
-    // materialize once — both join branches would recompute the hashes,
-    // and the chunk geometry needs the corpus size (the geometry count
-    // below is the action that computes the LAZY checkpoint's blocks —
-    // a corpus property, same as the LSH paths)
-    val h = hashes.select(col(idCol).as("id"), col(hashCol).as("sh"))
-      .localCheckpoint(false) // lazy: the geometry count below materializes it (r15)
+    // cut once — both join branches would recompute the hashes, and the
+    // chunk geometry needs the corpus size (the geometry count below is
+    // the action that computes the cut's blocks — a corpus property,
+    // same as the LSH paths)
+    val h = Lineage.cut(hashes.select(col(idCol).as("id"), col(hashCol).as("sh")),
+      "Dedup.hammingPairs.h")
     val m = hammingChunkCount(h.count(), maxHamming, nRef)
     val chunks = h.select(col("id"),
       explode(hammingKeyArray(col("sh"), m, maxHamming)).as("ck"))
@@ -337,17 +337,17 @@ object Dedup {
     * small-star rounds ([[clustersStarWithRounds]]) — O(log n) rounds on
     * any graph shape, including the chain-shaped components where plain
     * min-label propagation needs O(diameter) rounds. Every round's edge
-    * set is `localCheckpoint`ed, which TRUNCATES LINEAGE — with plain
+    * set is a [[Lineage.cut]], which TRUNCATES LINEAGE — with plain
     * cache() the analyzed plan doubles every iteration and driver-side
     * optimization time explodes (measured: 219 s → ~8 s at sf0.1).
     * `maxIters` bounds the loop defensively.
     *
-    * `reliable = true` swaps `localCheckpoint` for reliable
-    * `checkpoint()` (survives executor loss — localCheckpoint's cached
-    * partitions die with their executor, which on a multi-node cluster
-    * kills a long propagation). Requires a checkpoint dir; if unset, a
-    * process-local temp dir is used (fine for local mode; on a cluster
-    * set `sparkContext.setCheckpointDir` to shared storage first).
+    * `reliable = true` makes every cut here a reliable `checkpoint()`
+    * (survives executor loss — a local checkpoint's cached partitions
+    * die with their executor, which on a multi-node cluster kills a
+    * long propagation); [[Lineage.cut]] falls back to a process-local
+    * checkpoint dir if none is set (on a cluster point the context's
+    * checkpoint dir at shared storage first).
     *
     * Id columns of any orderable type are supported. The driver
     * union-find fast path applies only to integral ids (and returns them
@@ -358,16 +358,11 @@ object Dedup {
                maxIters: Int = 20, driverEdgeLimit: Long = 2000000L,
                reliable: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    // lineage cut so the (possibly expensive) pair computation runs ONCE
-    // — LAZY (r16): the next action (the routing count below, or the
-    // star loop's initial signature via the canonical edge set) is what
-    // computes the blocks; an eager checkpoint here was one extra job.
-    // Reliable mode keeps the eager form (RDD.checkpoint after an
-    // unpersisted action would recompute the plan for the file).
-    def mat(df: DataFrame): DataFrame =
-      if (reliable) { ensureCheckpointDir(df.sparkSession); df.checkpoint(true) }
-      else df.localCheckpoint(false)
-    val p = mat(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    // lineage cut so the (possibly expensive) pair computation runs ONCE:
+    // the next action (the routing count below, or the star loop's
+    // initial signature via the canonical edge set) computes the blocks
+    val p = Lineage.cut(pairs.select(col(idA).as("src"), col(idB).as("dst")),
+      "Dedup.clusters.pairs", reliable)
     val integralIds = p.schema.fields.forall(_.dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
@@ -409,9 +404,10 @@ object Dedup {
     * (count, hash-sum) signature repeating between consecutive rounds;
     * at the fixpoint every edge is (componentMin, v). Rounds execute in
     * two-round strides with ONE driver action per stride (a union of
-    * the per-round signature aggregates). Lineage is truncated every
-    * round via the same `reliable`-selectable checkpoint discipline as
-    * [[clusters]].
+    * the per-round signature aggregates). Every round's edges are a
+    * [[Lineage.cut]] (reliable when `reliable`), and once a stride's
+    * action has computed its cuts, the previous stride's are released,
+    * so the blocks held stay constant however many rounds run.
     *
     * Returns (labels, roundsRun): labels covers every endpoint of the
     * input (self-loop-only nodes label themselves). `roundsRun` counts
@@ -423,16 +419,11 @@ object Dedup {
     */
   private[graft] def clustersStarWithRounds(p: DataFrame, maxIters: Int,
                                             reliable: Boolean): (DataFrame, Int) = {
-    // lineage-truncating persist whose MATERIALIZATION is deferred to
-    // the caller's next action (the per-stride signature aggregate), so
-    // a round costs ZERO standalone actions (r15/r16, guide §1.2/§2.4 —
-    // at test scale each action is a fixed job-latency tax).
-    // Reliable mode keeps the eager form: RDD.checkpoint() after a
-    // non-persisted action RECOMPUTES the plan for the checkpoint file,
-    // which is worse than one extra job.
-    def matDeferred(df: DataFrame): DataFrame =
-      if (reliable) { ensureCheckpointDir(df.sparkSession); df.checkpoint(true) }
-      else df.localCheckpoint(false)
+    // every round's cut is computed by the caller's next action (the
+    // per-stride signature aggregate), so a round costs ZERO standalone
+    // actions (at test scale each action is a fixed job-latency tax)
+    def cut(df: DataFrame): DataFrame =
+      Lineage.cut(df, "Dedup.clustersStarWithRounds.edges", reliable)
     // NOT materialized: consumed exactly once by the final label join,
     // and its input p is already a checkpoint — an eager distinct here
     // was one more job + exchange ahead of the loop for no reuse.
@@ -440,7 +431,7 @@ object Dedup {
       .unionAll(p.select(col("dst").as("id"))).distinct()
     // canonical starting set: distinct (lo, hi), lo < hi — LAZY: the
     // initial signature below is the action that computes it (and p).
-    var edges = matDeferred(p.where(col("src") =!= col("dst"))
+    var edges = cut(p.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("lo"),
         greatest(col("src"), col("dst")).as("hi"))
       .distinct())
@@ -531,12 +522,13 @@ object Dedup {
       // edges are a lazy checkpoint; the stride's signature union is
       // the action that computes all of them
       val step = math.min(2, maxIters - rounds)
-      val stride = Iterator.iterate(matDeferred(smallStar(largeStar(edges))))(
-        prev => matDeferred(smallStar(largeStar(prev)))).take(step).toSeq
+      val stride = Iterator.iterate(cut(smallStar(largeStar(edges))))(
+        prev => cut(smallStar(largeStar(prev)))).take(step).toSeq
       val sigs = signatures(stride)
       converged = (sig +: sigs).sliding(2).exists(w => w(0) == w(1))
-      edges.unpersist()
-      stride.init.foreach(_.unpersist()) // mid-stride blocks are dead
+      // the signature action computed every cut of the stride, so only
+      // stride.last is still read: the older blocks are dead
+      (edges +: stride.init).foreach(Lineage.release)
       edges = stride.last
       sig = sigs.last
       rounds += step
@@ -547,15 +539,6 @@ object Dedup {
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
     (labels, rounds)
   }
-
-  /** Reliable checkpoints need a directory; default to a process-local
-    * temp dir so local-mode callers work out of the box (cluster callers
-    * should point this at shared storage themselves).
-    */
-  private def ensureCheckpointDir(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
 
   /** Driver-side union-find with path compression over a bounded edge
     * list of integral ids; labels = min id per component (same result as
@@ -737,10 +720,11 @@ object Dedup {
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, planesPerBand: Int = 3,
                             bands: Int = 16): DataFrame = {
-    // materialize once — band fan-out and both candidate rejoin branches
-    // would otherwise recompute the source (and its signatures)
-    val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint(false) // lazy: the dim probe + size count below materialize it (r15)
+    // cut once — band fan-out and both candidate rejoin branches would
+    // otherwise recompute the source (and its signatures); the dim probe
+    // and size count below compute the blocks
+    val vecs = Lineage.cut(df.select(col(idCol).as("id"), col(vecCol).as("v")),
+      "Dedup.embeddingNearDupPairs.vecs")
     val bandRows = vecs.select(col("id"),
       explode(lshBandKeyArray(col("v"), planesPerBand, bands)).as("bk"))
     // Verify-join strategy from the DIMENSION side's size, not Spark's
@@ -843,9 +827,9 @@ object Dedup {
                            numCentroids: Int, threshold: Double,
                            lloydIters: Int = 2, roundTo: Int = 6): DataFrame = {
     val (assignments, _) = Ivf.build(df, idCol, vecCol, numCentroids, lloydIters)
-    val asg = assignments
-      .select(col("cluster_id"), col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint(true) // both self-join branches; Lloyd ran once
+    val asg = Lineage.cut(assignments // both self-join branches; Lloyd ran once
+      .select(col("cluster_id"), col(idCol).as("id"), col(vecCol).as("v")),
+      "Dedup.semanticNearDupPairs.asg")
     val a = asg.select(col("cluster_id"), col("id").as("id_a"), col("v").as("va"))
     val b = asg.select(col("cluster_id"), col("id").as("id_b"), col("v").as("vb"))
     a.join(b, Seq("cluster_id")).where(col("id_a") < col("id_b"))
@@ -881,12 +865,12 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.8): DataFrame =
-    // materialize once — both self-join branches would recompute the
+    // cut once — both self-join branches would recompute the
     // tokenize+shingle+hash kernel
     ngramJaccardPairsPre(
-      df.select(col(idCol).as("id"),
-          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh"))
-        .localCheckpoint(true),
+      Lineage.cut(df.select(col(idCol).as("id"),
+          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh")),
+        "Dedup.ngramJaccardPairs.shingled"),
       threshold)
 
   /** [[ngramJaccardPairs]] over a PRE-SHINGLED corpus: `shingled` carries
@@ -975,9 +959,9 @@ object Dedup {
   def prefixFilterPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.8): DataFrame =
     prefixFilterPairsPre(
-      df.select(col(idCol).as("id"),
-          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh"))
-        .localCheckpoint(true),
+      Lineage.cut(df.select(col(idCol).as("id"),
+          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh")),
+        "Dedup.prefixFilterPairs.shingled"),
       threshold)
 
   /** [[prefixFilterPairs]] over a pre-shingled (id, sh) corpus (same
@@ -1029,9 +1013,9 @@ object Dedup {
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             k: Int = 3, threshold: Double = 0.8): DataFrame =
     ngramContainmentPairsPre(
-      df.select(col(idCol).as("id"),
-          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh"))
-        .localCheckpoint(true),
+      Lineage.cut(df.select(col(idCol).as("id"),
+          DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh")),
+        "Dedup.ngramContainmentPairs.shingled"),
       threshold)
 
   /** [[ngramContainmentPairs]] over a pre-shingled (id, sh) corpus (same
@@ -1070,9 +1054,9 @@ object Dedup {
     val keyed = docs.select(col(idCol).as("id"),
       regexp_replace(lower(col(textCol)), "[^a-z0-9]", "").as("_sk"))
     val cand = sortedNeighborCandidates(keyed, "id", col("_sk"), window)
-    val sh = docs.select(col(idCol).as("id"),
-        DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh"))
-      .localCheckpoint(true)
+    val sh = Lineage.cut(docs.select(col(idCol).as("id"),
+        DedupExpr.shingleHashes(TextAnalytics.tokens(col(textCol)), k).as("sh")),
+      "Dedup.sortedNeighborPairs.sh")
     cand
       .join(sh.select(col("id").as("id_a"), col("sh").as("_sa")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("_sb")), Seq("id_b"))
@@ -1101,9 +1085,9 @@ object Dedup {
                                sortKey: Column, window: Int): DataFrame = {
     require(window >= 1, s"window $window")
     val keyed = df.select(col(idCol).as("id"), sortKey.as("_sk"))
-    val ranked = Packing.globalOrderIndex(keyed,
+    val ranked = Lineage.cut(Packing.globalOrderIndex(keyed,
         substring(col("_sk"), 1, 1), Seq(col("_sk"), col("id")))
-      .select(col("id"), col("rank")).localCheckpoint(true)
+      .select(col("id"), col("rank")), "Dedup.sortedNeighborCandidates.ranked")
     val probes = ranked.select(col("id").as("id_a"),
       explode(sequence(col("rank") + 1, col("rank") + window)).as("rank"))
     probes
@@ -1132,8 +1116,8 @@ object Dedup {
     */
   def fuzzyPairs(df: DataFrame, keyCol: String, window: Int = 10,
                  maxDist: Int = 3): DataFrame = {
-    val names = df.select(col(keyCol).as("name")).distinct()
-      .localCheckpoint(true)
+    val names = Lineage.cut(df.select(col(keyCol).as("name")).distinct(),
+      "Dedup.fuzzyPairs.names")
     val fwd = sortedNeighborCandidates(names, "name", col("name"), window)
     val rev = sortedNeighborCandidates(names, "name", reverse(col("name")), window)
     fwd.unionAll(rev)

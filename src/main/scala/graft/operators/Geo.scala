@@ -74,16 +74,15 @@ object Geo {
     val nx = requireGridCovers(radiusKm, cellDeg, maxAbsLat)
     // NOTE: calling neighborPairs triggers Spark jobs EAGERLY — the
     // candidate-mass guard below runs an occupancy aggregate before the
-    // returned plan is built. `base` is localCheckpoint'ed once so the
-    // `points` lineage is evaluated exactly once, not three times (mass
-    // estimate, stamped side, home side) — material when upstream is an
-    // expensive computed input rather than a parquet scan.
-    val base = points.select(idCol.as("_id"), latCol.as("_lat"),
+    // returned plan is built. `base` is cut once so the `points` lineage
+    // is evaluated exactly once, not three times (mass estimate, stamped
+    // side, home side) — material when upstream is an expensive computed
+    // input rather than a parquet scan.
+    val base = Lineage.cut(points.select(idCol.as("_id"), latCol.as("_lat"),
       lonCol.as("_lon"),
       floor((lonCol + 180.0) / cellDeg).cast("long").as("_cx"),
-      floor((latCol + 90.0) / cellDeg).cast("long").as("_cy"))
-      // lazy: the candidate-mass guard below materializes it (r15)
-      .localCheckpoint(false)
+      floor((latCol + 90.0) / cellDeg).cast("long").as("_cy")),
+      "Geo.neighborPairs.base")
     requireBoundedMass(base, nx, maxCandidateMass)
     val stamped = base.select(col("_id").as("id_a"), col("_lat").as("_lata"),
         col("_lon").as("_lona"),

@@ -27,19 +27,14 @@ object Graphs {
                            checkpointInterval: Int = 2): DataFrame = {
     require(iters >= 0, s"iters $iters")
     require(checkpointInterval >= 1, s"checkpointInterval $checkpointInterval")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true)
-    // LAZY lineage truncation (r15): localCheckpoint(false) cuts the
-    // logical plan to a LogicalRDD exactly like the eager form (both
-    // wrap the physical RDD immediately) but defers materialization to
-    // the first consuming job — each eager form here was a separate
-    // driver action whose fixed job latency dominated the operator at
-    // bench scale. Blocks still compute exactly once (BlockManager
-    // serializes same-partition computes across consumers).
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().localCheckpoint(false)
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      "Graphs.personalizedPageRank.edges")
+    val nodes = Lineage.cut(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct(),
+      "Graphs.personalizedPageRank.nodes")
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
-    val withDeg = e.join(deg, Seq("src")).localCheckpoint(false)
+    val withDeg = Lineage.cut(e.join(deg, Seq("src")),
+      "Graphs.personalizedPageRank.withDeg")
     val base = when(col("id") === sourceId, lit(1.0) - lit(damping))
       .otherwise(lit(0.0))
     var pr = nodes.select(col("id"),
@@ -60,9 +55,21 @@ object Graphs {
       pr = contribs.select(col("id"),
         (base + col("_in") * lit(damping)).as("pr"))
       if ((i + 1) % checkpointInterval == 0 && i + 1 < iters)
-        pr = pr.localCheckpoint(false)
+        pr = Lineage.cut(pr, "Graphs.personalizedPageRank.pr")
     }
     pr
+  }
+
+  /** Undirected simple graph induced by `edges`: both orientations of
+    * every edge, self-loops dropped, duplicates removed, cut once (every
+    * caller reads it from several branches).
+    */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    Lineage.cut(e0
+      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .where(col("src") =!= col("dst"))
+      .distinct(), "Graphs.undirected")
   }
 
   /** Loud-failure hub guard for the wedge-join operators: their fan-out
@@ -84,22 +91,6 @@ object Graphs {
           "graph (e.g. a k-NN build) or raise the knob")
     }
 
-  /** PageRank by power iteration (simplified model: dangling mass is not
-    * redistributed — nodes without out-edges keep contributing nothing,
-    * the same convention the oracle SQL uses).
-    *
-    * Scale shape: each iteration is ONE shuffle — contributions =
-    * edges ⋈ ranks on the source key (both sides hash-partitioned by
-    * vertex id; AQE coalesces), then a sum aggregate keyed by
-    * destination. Rank lineage is truncated every `checkpointInterval`
-    * iterations (`localCheckpoint`, or reliable `checkpoint()` when
-    * `reliable`) — the [[Dedup.clusters]] discipline; plain cache would
-    * double the analyzed plan every iteration, while materializing
-    * EVERY iteration pays one eager job per round (at low scale that
-    * fixed cost dominates, so the default truncates every other
-    * round — plan depth stays ≤ interval, still bounded). Node count
-    * is collected once (a single long — the only driver action).
-    */
   /** Per-vertex triangle counts over the UNDIRECTED graph induced by
     * `edges` (direction and duplicates ignored; self-loops dropped) —
     * the standard local-clustering signal for near-dup neighborhoods
@@ -117,21 +108,21 @@ object Graphs {
     * hub). Exchanges carry (id, id) pairs only.
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val ce = edges.select(least(col(srcCol), col(dstCol)).as("lo"),
+    val ce = Lineage.cut(edges.select(least(col(srcCol), col(dstCol)).as("lo"),
         greatest(col(srcCol), col(dstCol)).as("hi"))
       .where(col("lo") =!= col("hi") && col("lo").isNotNull && col("hi").isNotNull)
-      .distinct().localCheckpoint(true)
+      .distinct(), "Graphs.triangleCounts.ce")
     val deg = ce.select(col("lo").as("id")).unionAll(ce.select(col("hi").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("_d"))
     val withDeg = ce
       .join(deg.select(col("id").as("lo"), col("_d").as("_dl")), Seq("lo"))
       .join(deg.select(col("id").as("hi"), col("_d").as("_dh")), Seq("hi"))
-    val oriented = withDeg.select(
+    val oriented = Lineage.cut(withDeg.select(
         when(struct(col("_dl"), col("lo")) < struct(col("_dh"), col("hi")),
           struct(col("lo").as("u"), col("hi").as("v")))
           .otherwise(struct(col("hi").as("u"), col("lo").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true)
+      .select(col("e.u").as("u"), col("e.v").as("v")),
+      "Graphs.triangleCounts.oriented")
     val wedges = oriented.select(col("u"), col("v").as("a"))
       .join(oriented.select(col("u"), col("v").as("b")), Seq("u"))
       .where(col("a") =!= col("b"))
@@ -160,12 +151,9 @@ object Graphs {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int, checkpointInterval: Int = 2): DataFrame = {
     require(iters >= 0, s"iters $iters")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = e0
-      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
-    val nodes = sym.select(col("src").as("id")).distinct().localCheckpoint(true)
+    val sym = undirected(edges, srcCol, dstCol)
+    val nodes = Lineage.cut(sym.select(col("src").as("id")).distinct(),
+      "Graphs.labelPropagation.nodes")
     var labels = nodes.select(col("id"), col("id").as("label"))
     for (i <- 0 until iters) {
       val votes = sym
@@ -182,7 +170,7 @@ object Graphs {
       labels = nodes.join(top, Seq("id"), "left")
         .select(col("id"), coalesce(col("_new"), col("id")).as("label"))
       if ((i + 1) % checkpointInterval == 0 && i + 1 < iters)
-        labels = labels.localCheckpoint(false) // lazy lineage cut (r15)
+        labels = Lineage.cut(labels, "Graphs.labelPropagation.labels")
     }
     labels
   }
@@ -195,11 +183,7 @@ object Graphs {
     * engine builds), then a distinct + count keyed by source.
     */
   def twoHopCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = e0
-      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
+    val sym = undirected(edges, srcCol, dstCol)
     val two = sym.select(col("src"), col("dst").as("mid"))
       .join(sym.select(col("src").as("mid"), col("dst").as("d2")), Seq("mid"))
       .select(col("src"), col("d2").as("dst"))
@@ -231,11 +215,7 @@ object Graphs {
                      minCommon: Long = 2,
                      maxDegreeCheck: Long = 100000L): DataFrame = {
     require(minCommon >= 1, s"minCommon $minCommon")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = e0
-      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
+    val sym = undirected(edges, srcCol, dstCol)
     val deg = sym.groupBy(col("src").as("z")).agg(count(lit(1)).as("_d"))
     guardMaxDegree(deg, "_d", maxDegreeCheck, "linkPrediction")
     val nbr = sym.select(col("dst").as("z"), col("src").as("n"))
@@ -273,11 +253,7 @@ object Graphs {
     */
   def edgeEmbeddedness(edges: DataFrame, srcCol: String, dstCol: String,
                        maxDegreeCheck: Long = 100000L): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = e0
-      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
+    val sym = undirected(edges, srcCol, dstCol)
     val und = sym.where(col("src") < col("dst"))
       .select(col("src").as("lo"), col("dst").as("hi"))
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("_d"))
@@ -297,35 +273,38 @@ object Graphs {
           6).as("jaccard"))
   }
 
+  /** PageRank by power iteration (simplified model: dangling mass is not
+    * redistributed — nodes without out-edges keep contributing nothing,
+    * the same convention the oracle SQL uses).
+    *
+    * Scale shape: each iteration is ONE shuffle — contributions =
+    * edges ⋈ ranks on the source key (both sides hash-partitioned by
+    * vertex id; AQE coalesces), then a sum aggregate keyed by
+    * destination. Rank lineage is truncated every `checkpointInterval`
+    * iterations by a [[Lineage.cut]] (a reliable `checkpoint()` when
+    * `reliable`, for every cut here) — the [[Dedup.clusters]]
+    * discipline; plain cache would double the analyzed plan every
+    * iteration, while a cut EVERY iteration pays its fixed cost every
+    * round (at low scale that cost dominates, so the default cuts every
+    * other round — plan depth stays ≤ interval, still bounded). Node
+    * count is collected once (a single long — the only driver action).
+    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damping: Double = 0.85,
-               reliable: Boolean = false, checkpointInterval: Int = 2,
-               orderedSum: Boolean = true): DataFrame = {
+               reliable: Boolean = false, checkpointInterval: Int = 2): DataFrame = {
     require(iters >= 0, s"iters $iters")
     require(checkpointInterval >= 1, s"checkpointInterval $checkpointInterval")
-    def mat(df: DataFrame): DataFrame =
-      if (reliable) {
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(
-            java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-        df.checkpoint(true)
-      } else df.localCheckpoint(true)
-    // deferred variant (r15): same LogicalRDD lineage cut, but the
-    // following action/consumer materializes it — drops one fixed-cost
-    // driver job per site (reliable mode stays eager: RDD.checkpoint
-    // after an unpersisted action recomputes the plan)
-    def matDeferred(df: DataFrame): DataFrame =
-      if (reliable) mat(df) else df.localCheckpoint(false)
-    val e = mat(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    // nodes: the count() below materializes it; withDeg: the first
+    def cut(df: DataFrame, name: String): DataFrame =
+      Lineage.cut(df, s"Graphs.pageRank.$name", reliable)
+    val e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), "edges")
+    // nodes: the count() below computes it; withDeg: the first
     // iteration's job does
-    val nodes = matDeferred(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+    val nodes = cut(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct(), "nodes")
     val n = nodes.count()
     val base = (1.0 - damping) / n
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
-    val withDeg = matDeferred(e.join(deg, Seq("src")))
+    val withDeg = cut(e.join(deg, Seq("src")), "withDeg")
     var pr = nodes.select(col("id"), lit(1.0 / n).as("pr"))
     for (i <- 0 until iters) {
       // zero-contribution seed rows fold the "nodes with no in-edges"
@@ -334,7 +313,7 @@ object Graphs {
         .join(pr, col("src") === col("id"))
         .select(col("dst").as("id"), (col("pr") / col("_d")).as("c"))
         .unionAll(nodes.select(col("id"), lit(0.0).as("c")))
-      // orderedSum: fold contributions in ascending value order, making
+      // ordered sum: fold contributions in ascending value order, making
       // every iteration bit-reproducible across partitionings, retries
       // and engines (plain float sum() is summation-order-dependent in
       // the last bit, which compounds over iterations and can flip a
@@ -348,20 +327,17 @@ object Graphs {
       // materializing an O(in-degree) array inside one aggregation
       // buffer. Hub-safety is measured in PipelineBench's star-graph
       // run; ties in c are interchangeable (equal doubles sum equally).
-      val contribs =
-        if (orderedSum) {
-          val w = Window.partitionBy(col("id")).orderBy(col("c"))
-          val wAll = w.rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)
-          raw.select(col("id"), sum(col("c")).over(wAll).as("_in"),
-              row_number().over(w).as("_rn"))
-            .where(col("_rn") === 1)
-            .select(col("id"), col("_in"))
-        } else raw.groupBy(col("id")).agg(sum(col("c")).as("_in"))
+      val w = Window.partitionBy(col("id")).orderBy(col("c"))
+      val wAll = w.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val contribs = raw.select(col("id"), sum(col("c")).over(wAll).as("_in"),
+          row_number().over(w).as("_rn"))
+        .where(col("_rn") === 1)
+        .select(col("id"), col("_in"))
       pr = contribs.select(col("id"),
         (lit(base) + col("_in") * damping).as("pr"))
       if ((i + 1) % checkpointInterval == 0 && i + 1 < iters)
-        pr = matDeferred(pr)
+        pr = cut(pr, "pr")
     }
     pr
   }
@@ -388,10 +364,10 @@ object Graphs {
       s"iters $iters out of [1,4]: unnormalized HITS integers grow like " +
         "maxDegree^(2·iters); normalize-and-round variants lose " +
         "engine-exactness")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .where(col("src") =!= col("dst")).distinct(), "Graphs.hits.edges")
+    val nodes = Lineage.cut(e.select(col("src").as("id"))
+      .unionAll(e.select(col("dst").as("id"))).distinct(), "Graphs.hits.nodes")
     // Overflow guard: scores grow like Δ^(2·iters) (Δ = max degree), so
     // a graph with Δ above ⌊2^(63/(2·iters))⌋ (≈234 at iters=4) would
     // silently NULL the long casts below (and, far enough, overflow even
@@ -415,18 +391,16 @@ object Graphs {
     for (i <- 0 until iters) {
       // a(v) = Σ_{u→v} h(u): zero seeds fold the no-in-edge vertices
       // into the aggregate's shuffle (the pageRank discipline)
-      auth = e.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
+      auth = Lineage.cut(e.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
         .select(col("dst").as("id"), col("h").as("_c"))
         .unionAll(nodes.select(col("id"),
           lit(0L).cast("decimal(38,0)").as("_c")))
-        .groupBy(col("id")).agg(sum(col("_c")).as("a"))
-        .localCheckpoint(false) // lazy lineage cut (r15)
-      hub = e.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
+        .groupBy(col("id")).agg(sum(col("_c")).as("a")), "Graphs.hits.auth")
+      hub = Lineage.cut(e.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
         .select(col("src").as("id"), col("a").as("_c"))
         .unionAll(nodes.select(col("id"),
           lit(0L).cast("decimal(38,0)").as("_c")))
-        .groupBy(col("id")).agg(sum(col("_c")).as("h"))
-        .localCheckpoint(false) // lazy lineage cut (r15)
+        .groupBy(col("id")).agg(sum(col("_c")).as("h")), "Graphs.hits.hub")
     }
     val maxes = auth.agg(max(col("a")).as("_ma"))
       .crossJoin(hub.agg(max(col("h")).as("_mh")))
@@ -452,39 +426,35 @@ object Graphs {
     * aggregate per round, both shuffling (id, int) pairs; the visited
     * set never re-expands (frontier = new ids only), so total work is
     * O(edges touched), not O(frontier × rounds). Lineage is truncated
-    * with localCheckpoint each round (the [[pageRank]] discipline).
+    * with a [[Lineage.cut]] each round (the [[pageRank]] discipline).
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    sourceId: Long, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 64, s"maxHops $maxHops out of [0,64]")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = e0
-      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(false) // lazy lineage cut (r15)
-    var dist = Seq((sourceId, 0)).toDF("id", "dist").localCheckpoint(false)
+    val sym = undirected(edges, srcCol, dstCol)
+    var dist = Lineage.cut(Seq((sourceId, 0)).toDF("id", "dist"),
+      "Graphs.bfsDistances.source")
     var frontier = dist
     var h = 1
     var frontierNonEmpty = true
     while (h <= maxHops && frontierNonEmpty) {
-      val next = frontier.join(sym, frontier("id") === sym("src"))
+      // the frontier-emptiness count below is the action that computes
+      // the cut — one job per hop
+      val next = Lineage.cut(frontier.join(sym, frontier("id") === sym("src"))
         .select(col("dst").as("id"))
         .distinct()
         // drop vertices already reached at a smaller distance
         .join(dist.select(col("id"), lit(true).as("_seen")), Seq("id"), "left")
         .where(col("_seen").isNull)
-        .select(col("id"), lit(h).as("dist"))
-        // lazy: the frontier-emptiness count below is the materializing
-        // action — one job per hop instead of two (r15)
-        .localCheckpoint(false)
+        .select(col("id"), lit(h).as("dist")), "Graphs.bfsDistances.frontier")
       frontierNonEmpty = next.limit(1).count() > 0
       if (frontierNonEmpty) {
-        // no checkpoint on the union: every branch is itself an eagerly
-        // checkpointed frontier, so downstream joins re-read blocks, not
-        // recompute — and the per-hop checkpoint job was a measurable
-        // share of BFS wall time on small frontiers (r9 isolated rerun)
+        // no cut on the union: every branch is itself a cut frontier,
+        // so downstream joins re-read blocks, not recompute — and a
+        // per-hop cut of the union was a measurable share of BFS wall
+        // time on small frontiers (r9 isolated rerun)
         dist = dist.unionAll(next)
         frontier = next
       }

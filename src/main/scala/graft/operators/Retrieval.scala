@@ -31,9 +31,8 @@ object Retrieval {
            terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     val termLits = typedLit(terms.map(_.toLowerCase))
-    val toks = docs.select(col(idCol).as("id"),
-        TextAnalytics.tokens(lower(col(textCol))).as("_toks"))
-      .localCheckpoint(true) // consumed by dl, stats, and the tf branch
+    val toks = Lineage.cut(docs.select(col(idCol).as("id"), // read by dl, stats and tf
+        TextAnalytics.tokens(lower(col(textCol))).as("_toks")), "Retrieval.bm25.toks")
     val dl = toks.select(col("id"), size(col("_toks")).cast("long").as("dl"))
     val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
       avg(col("dl")).as("avgdl"))
@@ -186,7 +185,7 @@ object Retrieval {
     * membership tests the ROUNDED cosine on both engines.
     *
     * Plan shape: tokenize→(doc,term) count, term-keyed df aggregate
-    * broadcast back; the weight table localCheckpoints once (five
+    * broadcast back; the weight table is cut once (five
     * consumers — the doc dimension, the prefix build and the verify —
     * would each re-tokenize the corpus); ONE id-keyed dimension
     * aggregate yielding norm + verify map per doc (r16); per-doc
@@ -213,18 +212,16 @@ object Retrieval {
       .crossJoin(broadcast(n))
       .where(col("df") * dfDen <= col("n_l") * dfNum &&
         col("df") <= maxDf)
-    // materialize the weight table once: the doc dimension, the prefix
-    // build and the verify would each re-run tokenize+count+df. LAZY
-    // (r16): the candidate-mass guard below is the first action after
-    // this point and its lineage (pref → norms → docdim → w) computes
-    // the blocks — an eager checkpoint here was one extra job.
-    val w = tf.join(broadcast(dfT), Seq("term"))
+    // cut the weight table once: the doc dimension, the prefix build
+    // and the verify would each re-run tokenize+count+df. The
+    // candidate-mass guard below is the first action after this point
+    // and its lineage (pref → norms → docdim → w) computes the blocks.
+    val w = Lineage.cut(tf.join(broadcast(dfT), Seq("term"))
       .select(col("id"), col("term"), col("df"),
         round(col("tf") *
             (log((lit(1.0) + col("n_l").cast("double")) /
               (lit(1.0) + col("df"))) + 1.0) *
-            10000, 0).cast("long").as("w"))
-      .localCheckpoint(false)
+            10000, 0).cast("long").as("w")), "Retrieval.tfidfCosinePairs.w")
     // ONE per-doc dimension aggregate (r16, guide §2.4): the norm over
     // ALL terms and the exact-dot verify map over joinable (df ≥ 2)
     // terms come out of a single id-keyed pass (collect_list drops the
@@ -249,12 +246,12 @@ object Retrieval {
     val suffix = Window.partitionBy(col("id"))
       .orderBy(col("df").asc, col("term").asc)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val pref = joinable.join(norms, Seq("id"))
+    // the candidate-mass guard below computes the cut's blocks
+    val pref = Lineage.cut(joinable.join(norms, Seq("id"))
       .withColumn("_nw", col("w").cast("double") / col("_norm"))
       .withColumn("_bnorm", sqrt(sum(col("_nw") * col("_nw")).over(suffix)))
       .where(col("_bnorm") >= threshold - 1e-9)
-      .select(col("id"), col("term"), col("_bnorm"))
-      .localCheckpoint(false) // lazy: the candidate-mass guard below materializes it (r15)
+      .select(col("id"), col("term"), col("_bnorm")), "Retrieval.tfidfCosinePairs.pref")
     // candidate-mass guard: Σ pdf·(pdf−1)/2 over the PREFIX posting
     // lists is the exact row count the prefix self-join will
     // materialize; refuse a quadratic melt loudly instead of running it
@@ -315,12 +312,12 @@ object Retrieval {
       .partitionBy(col("src"))
       .orderBy(col("sim").desc, col("dst"))
     // cosine is symmetric: evaluate each UNORDERED pair once (src<dst),
-    // materialize, and mirror — halves the kernel work; without the
-    // checkpoint the union's two branches would each re-run the join
-    val half = a.join(b, col("src") < col("dst"))
+    // cut, and mirror — halves the kernel work; without the cut the
+    // union's two branches would each re-run the join
+    val half = Lineage.cut(a.join(b, col("src") < col("dst"))
       .select(col("src"), col("dst"),
-        round(Similarity.cosine(col("_va"), col("_vb")), roundTo).as("sim"))
-      .localCheckpoint(true)
+        round(Similarity.cosine(col("_va"), col("_vb")), roundTo).as("sim")),
+      "Retrieval.knnGraph.half")
     half.unionAll(
         half.select(col("dst").as("src"), col("src").as("dst"), col("sim")))
       .withColumn("rk", row_number().over(w))

@@ -312,11 +312,11 @@ object Timeseries {
   def acf(df: DataFrame, keyCol: Column, microsCol: Column,
           unitsCol: Column, maxLag: Int, roundTo: Int = 4): DataFrame = {
     require(maxLag >= 1 && maxLag <= 366, s"maxLag $maxLag out of [1,366]")
-    val daily = df.select(keyCol.as("g"),
+    val daily = Lineage.cut(df.select(keyCol.as("g"),
         floorDiv(microsCol, lit(86400000000L)).as("_day"),
         unitsCol.cast("long").as("_c"))
-      .groupBy(col("g"), col("_day")).agg(sum(col("_c")).as("_c"))
-      .localCheckpoint(true)
+      .groupBy(col("g"), col("_day")).agg(sum(col("_c")).as("_c")),
+      "Timeseries.acf.daily")
     val shifted = daily
       .withColumn("lag", explode(sequence(lit(1), lit(maxLag))))
       .select(col("g"), col("lag"), (col("_day") + col("lag")).as("_day"),

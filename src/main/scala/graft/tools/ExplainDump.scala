@@ -10,6 +10,8 @@ import graft.SparkEntry
   * query at sf0.001 — the `.explain("formatted")` audit trail. Re-run
   * after plan-affecting changes:
   *   sbt "runMain graft.tools.ExplainDump"
+  * The output is reproducible: two runs write the same bytes, because
+  * [[normalize]] masks the plan tokens that change from run to run.
   */
 object ExplainDump {
   private val headline = Seq(
@@ -69,6 +71,21 @@ object ExplainDump {
     // round 10: the SQ8 byte-grid and 1-bit Hamming-shortlist ANN tiers
     "q_sq8_topk", "q_bq_topk")
 
+  private val tmpDir = java.util.regex.Pattern.quote(
+    System.getProperty("java.io.tmpdir").stripSuffix("/"))
+
+  /** Mask what differs between two runs of the same code, or moves with
+    * an unrelated edit: object hash codes (`[J@16433d56`,
+    * `Ivf$CentroidAgg@4f347aae`), the random suffix of per-run temp dirs
+    * (`/tmp/graft-embpairs1051…/pairs`), exchange `plan_id`s and source
+    * line numbers in RDD call sites (`at Lineage.scala:39`).
+    */
+  def normalize(plan: String): String =
+    plan.replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@<hash>")
+      .replaceAll(s"$tmpDir/([A-Za-z][A-Za-z-]*)\\d+", "<tmp>/$1")
+      .replaceAll("plan_id=\\d+", "plan_id=<n>")
+      .replaceAll("(?<=\\.scala):\\d+", "")
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "docs/PLANS.md"
@@ -79,10 +96,13 @@ object ExplainDump {
     sb.append("`PushedFilters`/`ReadSchema` at every scan, `BroadcastHashJoin`\n")
     sb.append("for bounded dimensions, `SortMergeJoin` only big-big,\n")
     sb.append("`TakeOrderedAndProject` for top-k, native kernels\n")
-    sb.append("(`minhash_sig`, `cosine_sim`) inline in projections.\n")
+    sb.append("(`minhash_sig`, `cosine_sim`) inline in projections,\n")
+    sb.append("`Scan ExistingRDD graft-cut:<site>` where a lineage cut is read.\n")
+    sb.append("Hash codes, temp-dir suffixes, `plan_id`s and source line numbers\n")
+    sb.append("are masked, so a regeneration of unchanged code is byte-identical.\n")
     headline.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, dir)
-        .queryExecution.explainString(FormattedMode)
+      val plan = normalize(SparkEntry.queries(name)(spark, dir)
+        .queryExecution.explainString(FormattedMode))
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     Files.createDirectories(Paths.get(out).getParent)

@@ -14,7 +14,7 @@ import graft.operators.{Curation, Dedup, Funnel, Graphs, Ivf, Packing, Retrieval
   *     2M-node chain component — diameter 2M, where min-label
   *     propagation needs O(diameter) rounds and large-star/small-star
   *     must converge in O(log n).
-  *  3. `Graphs.pageRank(orderedSum = true)` on a deliberately
+  *  3. `Graphs.pageRank` (its ordered-sum window fold) on a deliberately
   *     power-law graph (one vertex with ~10M in-edges) — the shape the
   *     old per-vertex `array_sort(collect_list)` fold could not buffer
   *     (an 80 MB+ array in ONE aggregation buffer); the windowed fold
@@ -147,7 +147,7 @@ object StressBench {
         .unionAll(spark.range(1).select(lit(0L).as("src"), lit(1L).as("dst")))
         .localCheckpoint(true)
       val (prSum, tPr) = timed {
-        Graphs.pageRank(hubEdges, "src", "dst", iters = 5, orderedSum = true)
+        Graphs.pageRank(hubEdges, "src", "dst", iters = 5)
           .agg(sum(col("pr"))).head().getDouble(0)
       }
       println(s"""{"metric":"pagerank_hub","edges":${2 * hubDeg + 1},"hub_in_degree":$hubDeg,"iters":5,"ordered_sum":true,"pr_sum":$prSum,"sec":$tPr,"cpus":$cpus}""")

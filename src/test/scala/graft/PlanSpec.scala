@@ -52,8 +52,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_minhash_pairs: native band-key kernel in plan, single-long join key") {
-    // signatures are materialized at an eager localCheckpoint (so the
-    // plan reads a checkpoint RDD); banding + agreement kernels remain
+    // signatures are materialized at a lineage cut (so the plan reads
+    // a checkpoint RDD); banding + agreement kernels remain
     // in the query plan with the single-long band key
     val p = planOf("q_minhash_pairs")
     p should include("lsh_band_keys")
@@ -427,7 +427,7 @@ class PlanSpec extends SparkSpec {
     // pairwise suffix-norm product in the join condition, and the exact
     // dot runs pair-keyed over per-doc (term → weight) maps — never a
     // second corpus product. No nested loop anywhere (the corpus-count
-    // broadcast lives inside the eager checkpoint build).
+    // broadcast lives inside the lineage cut's build).
     val p = planOf("q_tfidf_cosine")
     p should include("_ba")                 // suffix-norm columns gate the join
     p should include("_bb")

@@ -333,6 +333,33 @@ class DedupSpec extends SparkSpec {
     got shouldBe (0 until n).map(_.toLong -> 0L).toMap
   }
 
+  test("star clustering: persisted blocks stay constant however many rounds run") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // every stride releases the cuts its action made dead, so a clusters
+    // call leaves two cuts persisted (the input pairs and the fixpoint
+    // edges, both read by the returned labels) whatever the round count
+    def run(n: Int): (Int, Int) = {
+      val chain = (0 until n - 1).map(i => (i.toLong, i.toLong + 1)).toDF("id_a", "id_b")
+      val (_, rounds) = Dedup.clustersStarWithRounds(
+        chain.select(col("id_a").as("src"), col("id_b").as("dst")),
+        maxIters = 20, reliable = false)
+      val before = sc.emptyRDD[Int].id
+      val labels = Dedup.clusters(chain, driverEdgeLimit = 0L)
+      val got = labels.as[(Long, Long)].collect().toMap
+      val held = sc.getPersistentRDDs.keys.count(_ > before)
+      got shouldBe (0 until n).map(_.toLong -> 0L).toMap
+      labels.count() shouldBe n // labels (and so its cuts) stay live up to the count
+      (rounds, held)
+    }
+    val (shortRounds, shortHeld) = run(8)
+    val (longRounds, longHeld) = run(512)
+    shortRounds should be >= 4
+    longRounds should be > shortRounds
+    shortHeld shouldBe 2
+    longHeld shouldBe 2
+  }
+
   test("star clustering equals driver union-find on a random multi-component graph") {
     import spark.implicits._
     // deterministic pseudo-random edges over 300 nodes: multiple
