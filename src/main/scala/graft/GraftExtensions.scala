@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.{BandKeysExpr, CosineSimExpr, DotProductExpr, JaroWinklerExpr, MinHashSigExpr, NormalizeTextExpr, RepetitionStatsExpr, ShingleHashesExpr, SimHashExpr, SignLshBandsExpr, SignLshBandsPooledExpr, SignLshExpr, TokenStatsExpr}
+import graft.functions.{CurationExpr, DedupExpr, KernelCall, TextExpr, VectorExpr}
+import graft.geonames.GeoNames
 
 /** Registers the engine's native expressions as SQL functions, so
   * `spark.sql("SELECT simhash64(...)")` works and the kernels are usable
@@ -24,122 +25,51 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def intArg(e: Expression, name: String): Int = e match {
+  private def c(e: Expression): Column = ColumnBridge.column(e)
+
+  private def int(e: Expression, name: String): Int = e match {
     case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$name must be an integer literal, got $other")
   }
 
-  /** (identifier, info, builder) triples, shared by both paths. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      (args: Seq[Expression]) => args match {
-        case Seq(tokens, k, n) =>
-          MinHashSigExpr(tokens, intArg(k, "shingleK"), intArg(n, "numHashes"))
-        case _ => throw new IllegalArgumentException(
-          "usage: minhash_sig(tokens array<string>, shingleK int, numHashes int)")
-      }),
-    (new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHashExpr].getName, "simhash64"),
-      (args: Seq[Expression]) => args match {
-        case Seq(tokens) => SimHashExpr(tokens)
-        case _ => throw new IllegalArgumentException(
-          "usage: simhash64(tokens array<string>)")
-      }),
-    (new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashesExpr].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(tokens, k) => ShingleHashesExpr(tokens, intArg(k, "shingleK"))
-        case _ => throw new IllegalArgumentException(
-          "usage: shingle_hashes(tokens array<string>, shingleK int)")
-      }),
-    (new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => CosineSimExpr(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: cosine_sim(a array<double>, b array<double>)")
-      }),
-    (new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => DotProductExpr(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: dot_product(a array<double>, b array<double>)")
-      }),
-    (new FunctionIdentifier("lsh_band_keys"),
-      new ExpressionInfo(classOf[BandKeysExpr].getName, "lsh_band_keys"),
-      (args: Seq[Expression]) => args match {
-        case Seq(sig, bands, rpb) =>
-          BandKeysExpr(sig, intArg(bands, "bands"), intArg(rpb, "rowsPerBand"))
-        case _ => throw new IllegalArgumentException(
-          "usage: lsh_band_keys(sig array<long>, bands int, rowsPerBand int)")
-      }))
+  /** (SQL name, argument list for the usage error, builder). */
+  private val table: Seq[(String, String, PartialFunction[Seq[Expression], Column])] = Seq(
+    ("minhash_sig", "tokens array<string>, shingleK int, numHashes int",
+      { case Seq(t, k, n) => DedupExpr.minhashSig(c(t), int(k, "shingleK"), int(n, "numHashes")) }),
+    ("simhash64", "tokens array<string>", { case Seq(t) => DedupExpr.simhash(c(t)) }),
+    ("shingle_hashes", "tokens array<string>, shingleK int",
+      { case Seq(t, k) => DedupExpr.shingleHashes(c(t), int(k, "shingleK")) }),
+    ("cosine_sim", "a array<double>, b array<double>",
+      { case Seq(a, b) => VectorExpr.cosineSim(c(a), c(b)) }),
+    ("dot_product", "a array<double>, b array<double>",
+      { case Seq(a, b) => VectorExpr.dotProduct(c(a), c(b)) }),
+    ("lsh_band_keys", "sig array<long>, bands int, rowsPerBand int",
+      { case Seq(s, b, r) => DedupExpr.bandKeys(c(s), int(b, "bands"), int(r, "rowsPerBand")) }),
+    ("sign_lsh", "v array<float|double>, numPlanes int",
+      { case Seq(v, p) => VectorExpr.signLsh(c(v), int(p, "numPlanes")) }),
+    ("sign_lsh_bands", "v array<float|double>, planesPerBand int, bands int",
+      { case Seq(v, p, b) =>
+        VectorExpr.signLshBands(c(v), int(p, "planesPerBand"), int(b, "bands")) }),
+    ("sign_lsh_bands_pooled", "v array<float|double>, planesPerBand int, bands int, pool int",
+      { case Seq(v, p, b, n) => VectorExpr.signLshBandsPooled(c(v),
+        int(p, "planesPerBand"), int(b, "bands"), int(n, "pool")) }),
+    ("token_stats", "text string", { case Seq(t) => TextExpr.tokenStats(c(t)) }),
+    ("repetition_stats", "text string", { case Seq(t) => CurationExpr.repetitionStats(c(t)) }),
+    ("normalize_text", "text string", { case Seq(t) => CurationExpr.normalizeText(c(t)) }),
+    ("jaro_winkler", "a string, b string",
+      { case Seq(a, b) => TextExpr.jaroWinkler(c(a), c(b)) }),
+    ("js_number_string", "d double", { case Seq(d) => GeoNames.jsNumberString(c(d)) }))
 
-  private val moreFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("sign_lsh"),
-      new ExpressionInfo(classOf[SignLshExpr].getName, "sign_lsh"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v, p) => SignLshExpr(v, intArg(p, "numPlanes"))
-        case _ => throw new IllegalArgumentException(
-          "usage: sign_lsh(v array<float|double>, numPlanes int)")
-      }),
-    (new FunctionIdentifier("sign_lsh_bands"),
-      new ExpressionInfo(classOf[SignLshBandsExpr].getName, "sign_lsh_bands"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v, ppb, b) =>
-          SignLshBandsExpr(v, intArg(ppb, "planesPerBand"), intArg(b, "bands"))
-        case _ => throw new IllegalArgumentException(
-          "usage: sign_lsh_bands(v array<float|double>, planesPerBand int, bands int)")
-      }),
-    (new FunctionIdentifier("sign_lsh_bands_pooled"),
-      new ExpressionInfo(classOf[SignLshBandsPooledExpr].getName, "sign_lsh_bands_pooled"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v, ppb, b, pool) =>
-          SignLshBandsPooledExpr(v, intArg(ppb, "planesPerBand"),
-            intArg(b, "bands"), intArg(pool, "pool"))
-        case _ => throw new IllegalArgumentException(
-          "usage: sign_lsh_bands_pooled(v array<float|double>, planesPerBand int, bands int, pool int)")
-      }),
-    (new FunctionIdentifier("token_stats"),
-      new ExpressionInfo(classOf[TokenStatsExpr].getName, "token_stats"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => TokenStatsExpr(text, Nil)
-        case _ => throw new IllegalArgumentException("usage: token_stats(text string)")
-      }),
-    (new FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStatsExpr].getName, "repetition_stats"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => RepetitionStatsExpr(text)
-        case _ => throw new IllegalArgumentException("usage: repetition_stats(text string)")
-      }),
-    (new FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeTextExpr].getName, "normalize_text"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => NormalizeTextExpr(text)
-        case _ => throw new IllegalArgumentException("usage: normalize_text(text string)")
-      }),
-    (new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, "jaro_winkler"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => JaroWinklerExpr(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: jaro_winkler(a string, b string)")
-      }),
-    (new FunctionIdentifier("js_number_string"),
-      new ExpressionInfo(classOf[graft.geonames.JsNumberStringExpr].getName,
-        "js_number_string"),
-      (args: Seq[Expression]) => args match {
-        case Seq(d) => graft.geonames.JsNumberStringExpr(d)
-        case _ => throw new IllegalArgumentException(
-          "usage: js_number_string(d double)")
-      }))
+  /** (identifier, info, builder) triples, shared by both paths. */
+  def allFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    table.map { case (name, usage, build) =>
+      (new FunctionIdentifier(name), new ExpressionInfo(classOf[KernelCall].getName, name),
+        (args: Seq[Expression]) => ColumnBridge.expression(build.applyOrElse(args,
+          (_: Seq[Expression]) => throw new IllegalArgumentException(s"usage: $name($usage)"))))
+    }
 
   /** Register all functions on an already-running session. */
-  def allFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    functions ++ moreFunctions
-
   def register(spark: SparkSession): Unit =
     allFunctions.foreach { case (ident, info, builder) =>
       ColumnBridge.registerFunction(spark, ident, info, builder)

@@ -150,13 +150,6 @@ private[graft] object EntryContext {
       path
     })
 
-  /** Process-lifetime bucketed-table fixture for q_bucket_join: orders
-    * and customer saved bucketed by the join key with matching bucket
-    * counts, so the join (and the downstream key-clustered aggregate)
-    * plans with ZERO exchanges — the co-located layout a 100 TB corpus
-    * would maintain for its hottest join key. Returns (orders, customer)
-    * catalog table names.
-    */
   /** Largest documents table the PNG/WAV asset fixtures will synthesize:
     * per-doc asset generation is driver-side by design (a bench fixture,
     * not an operator), so the collect is require()-capped — an oversized
@@ -330,6 +323,13 @@ private[graft] object EntryContext {
 
   private[graft] val bucketFixtures =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** Process-lifetime bucketed-table fixture for q_bucket_join: orders
+    * and customer saved bucketed by the join key with matching bucket
+    * counts, so the join (and the downstream key-clustered aggregate)
+    * plans with ZERO exchanges — the co-located layout a 100 TB corpus
+    * would maintain for its hottest join key. Returns (orders, customer)
+    * catalog table names.
+    */
   private[graft] def bucketedTablesFixture(s: SparkSession, dir: String): (String, String) =
     bucketFixtures.computeIfAbsent(dir, _ => {
       val suffix = (dir.hashCode.toLong & 0xffffffffL).toString
@@ -350,13 +350,6 @@ private[graft] object EntryContext {
       (ot, ct)
     })
 
-  /** All-pairs embedding near-dup edges (shared by q_embedding_neardup /
-    * q_dedup_clusters / q_dedup_keepers). The pushed-down filter uses the
-    * UNROUNDED cosine with the exact HALF_UP boundary (round(x,6) ≥ 0.4
-    * ⟺ x ≥ 0.3999995): predicate pushdown below the projection would
-    * otherwise duplicate the kernel cosine for every pair; this way the
-    * rounded value is only computed for surviving rows.
-    */
   /** Hard cap for the exact all-pairs oracle anchor below: the cartesian
     * exists to anchor the LSH/semantic scale twins at test scale, and a
     * 100× input must fail loudly (naming this knob) rather than melt a
@@ -365,6 +358,13 @@ private[graft] object EntryContext {
   private[graft] val MaxExactPairRows = 100000L
 
   private[graft] val embPairFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** All-pairs embedding near-dup edges (shared by q_embedding_neardup /
+    * q_dedup_clusters / q_dedup_keepers). The pushed-down filter uses the
+    * UNROUNDED cosine with the exact HALF_UP boundary (round(x,6) ≥ 0.4
+    * ⟺ x ≥ 0.3999995): predicate pushdown below the projection would
+    * otherwise duplicate the kernel cosine for every pair; this way the
+    * rounded value is only computed for surviving rows.
+    */
   private[graft] def embeddingPairs(s: SparkSession, dir: String): DataFrame = {
     val path = embPairFixtures.computeIfAbsent(dir, _ => {
       val emb = Tables.embeddings(s, dir)
@@ -393,10 +393,6 @@ private[graft] object EntryContext {
     s.read.parquet(path)
   }
 
-  /** Process-lifetime embeddings-table parquet fixture shared by the PQ
-    * family (codebook training samples it, encode and probe each scan
-    * it) — one materialization per fixture dir instead of one per query.
-    */
   /** Per-process cached embeddings row count: [[graft.operators.Dedup
     * .scaledBandGeometry]] needs n once per corpus, but counting inside
     * the declared query body re-scanned the table on EVERY invocation ×
@@ -409,6 +405,10 @@ private[graft] object EntryContext {
     embCounts.computeIfAbsent(dir, _ => Tables.embeddings(s, dir).count())
 
   private[graft] val embCkFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Process-lifetime embeddings-table parquet fixture shared by the PQ
+    * family (codebook training samples it, encode and probe each scan
+    * it) — one materialization per fixture dir instead of one per query.
+    */
   private[graft] def embeddingsCk(s: SparkSession, dir: String): DataFrame = {
     val path = embCkFixtures.computeIfAbsent(dir, _ => {
       val p = fixtureDir("graft-embck").getAbsolutePath + "/embeddings"

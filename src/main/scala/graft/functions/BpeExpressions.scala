@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -109,32 +106,11 @@ object BpeKernels {
   }
 }
 
-case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String)])
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      m.put(a + " " + b, Integer.valueOf(i))
-    }
-    m
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    BpeKernels.encode(input.asInstanceOf[ArrayData], ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ranksRef = ctx.addReferenceObj("bpeRanks", ranks, "java.util.HashMap")
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeKernels.encode($c, $ranksRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BpeExpr {
-  def bpeEncode(words: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(BpeEncodeExpr(ColumnBridge.expression(words), merges))
+  def bpeEncode(words: Column, merges: Seq[(String, String)]): Column = {
+    val ranks = new java.util.HashMap[String, Integer]()
+    merges.zipWithIndex.foreach { case ((a, b), i) => ranks.put(a + " " + b, Integer.valueOf(i)) }
+    KernelCall.column("bpe_encode", BpeKernels, "encode", ArrayType(StringType, containsNull = false),
+      Seq(words -> "array<string>"), ranks)
+  }
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Binary-quantization (1-bit) kernels — the cheapest rung of the
@@ -69,44 +66,14 @@ object BqKernels {
   }
 }
 
-/** codes = bq_encode(vec): array<long> of ⌈d/64⌉ sign-bit words. */
-case class BqEncodeExpr(child: Expression) extends PqVecInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "bq_encode"
-  override protected def nullSafeEval(input: Any): Any =
-    BqKernels.encode(input.asInstanceOf[ArrayData], isF)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BqKernels.encode($c, $isF)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** dists = bq_hamming(codes): array<int>, one Hamming distance per query. */
-case class BqHammingExpr(child: Expression, qcodes: Array[Array[Long]])
-  extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "bq_hamming"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bq_hamming requires array<bigint> codes, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    BqKernels.hammingScores(input.asInstanceOf[ArrayData], qcodes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("bqQueryCodes", qcodes, "long[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BqKernels.hammingScores($c, $qRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BqExpr {
+  /** codes = bq_encode(vec): array<long> of ⌈d/64⌉ sign-bit words. */
   def encode(v: Column): Column =
-    ColumnBridge.column(BqEncodeExpr(ColumnBridge.expression(v)))
+    KernelCall.column("bq_encode", BqKernels, "encode", ArrayType(LongType, containsNull = false),
+      Seq(v -> KernelCall.FloatVec))
+
+  /** dists = bq_hamming(codes): array<int>, one Hamming distance per query. */
   def hamming(codes: Column, qcodes: Array[Array[Long]]): Column =
-    ColumnBridge.column(BqHammingExpr(ColumnBridge.expression(codes), qcodes))
+    KernelCall.column("bq_hamming", BqKernels, "hammingScores",
+      ArrayType(IntegerType, containsNull = false), Seq(codes -> "array<bigint>"), qcodes)
 }

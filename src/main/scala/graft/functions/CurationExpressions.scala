@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** One-pass data-curation kernels (Gopher-style repetition signals and
   * marker-profile language ID). Like [[TextKernels]], each is a single
@@ -104,9 +102,7 @@ object CurationKernels {
     }
     langs(best)
   }
-}
 
-object NormalizeKernel {
   /** Canonical curation text-normalization: Unicode NFD decomposition
     * with combining marks dropped (é→e, Ñ→n), per-char lowercase,
     * whitespace runs collapsed to one space, ends trimmed — one pass
@@ -138,108 +134,39 @@ object NormalizeKernel {
       sb.setLength(sb.length - 1)
     UTF8String.fromString(sb.toString)
   }
-}
 
-case class NormalizeTextExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "normalize_text"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeKernel.normalizeText(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NormalizeKernel.normalizeText($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class RepetitionStatsExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top_count", LongType, nullable = false),
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("n_distinct_bigrams", LongType, nullable = false)))
-  override def prettyName: String = "repetition_stats"
-
-  override protected def nullSafeEval(input: Any): Any =
-    CurationKernels.repetitionStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CurationKernels.repetitionStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class BestLangExpr(child: Expression, profiles: Seq[(String, Seq[String])])
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "best_lang"
-
-  @transient private lazy val langs: Array[UTF8String] =
-    profiles.map(p => UTF8String.fromString(p._1)).toArray
-  @transient private lazy val markers: Array[Array[String]] =
-    profiles.map(_._2.toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    CurationKernels.bestLang(input.asInstanceOf[UTF8String], langs, markers)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val langsRef = ctx.addReferenceObj("langs", langs,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val marksRef = ctx.addReferenceObj("markers", markers, "java.lang.String[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.CurationKernels.bestLang($c, $langsRef, $marksRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Membership probe against a pre-built Bloom filter carried as a plan
-  * reference object. The filter rides broadcast-style inside the
-  * serialized expression (compact — ~10 bits/key at 1% fpp vs 64 raw),
-  * so a billion-key benchmark set probes map-side without any join.
-  * False positives only; callers exact-verify survivors.
-  */
-case class BloomMightContainExpr(child: Expression,
-                                 bloom: org.apache.spark.util.sketch.BloomFilter)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(LongType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain"
-
-  override protected def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom,
-      "org.apache.spark.util.sketch.BloomFilter")
-    defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** Membership probe against a pre-built Bloom filter (false positives
+    * only; callers exact-verify survivors).
+    */
+  def bloomMightContain(h: Long, bloom: BloomFilter): Boolean = bloom.mightContainLong(h)
 }
 
 object CurationExpr {
   def repetitionStats(text: Column): Column =
-    ColumnBridge.column(RepetitionStatsExpr(ColumnBridge.expression(text)))
+    KernelCall.column("repetition_stats", CurationKernels, "repetitionStats",
+      StructType(Seq("n_tokens", "n_distinct", "top_count", "n_bigrams", "n_distinct_bigrams")
+        .map(StructField(_, LongType, nullable = false))),
+      Seq(text -> "string"))
 
   def normalizeText(text: Column): Column =
-    ColumnBridge.column(NormalizeTextExpr(ColumnBridge.expression(text)))
+    KernelCall.column("normalize_text", CurationKernels, "normalizeText", StringType,
+      Seq(text -> "string"))
 
-  def bloomMightContain(hash: Column,
-                        bloom: org.apache.spark.util.sketch.BloomFilter): Column =
-    ColumnBridge.column(BloomMightContainExpr(ColumnBridge.expression(hash), bloom))
+  /** The filter rides broadcast-style inside the serialized plan (compact
+    * — ~10 bits/key at 1% fpp vs 64 raw), so a billion-key benchmark set
+    * probes map-side without any join.
+    */
+  def bloomMightContain(hash: Column, bloom: BloomFilter): Column =
+    KernelCall.column("bloom_might_contain", CurationKernels, "bloomMightContain",
+      BooleanType, Seq(hash -> "bigint"), bloom)
 
   /** Profiles are sorted by language here so ties resolve to the
     * lexicographically first language (the composed fold's contract).
     */
-  def bestLang(text: Column, profiles: Map[String, Seq[String]]): Column =
-    ColumnBridge.column(BestLangExpr(ColumnBridge.expression(text),
-      profiles.toSeq.sortBy(_._1)))
+  def bestLang(text: Column, profiles: Map[String, Seq[String]]): Column = {
+    val sorted = profiles.toSeq.sortBy(_._1)
+    KernelCall.column("best_lang", CurationKernels, "bestLang", StringType,
+      Seq(text -> "string"), sorted.map(p => UTF8String.fromString(p._1)).toArray,
+      sorted.map(_._2.toArray).toArray)
+  }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst kernels for the dedup hot path.
@@ -160,85 +158,24 @@ object DedupKernels {
   }
 }
 
-private[graft] abstract class ArrayKernelExpr extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(StringType))
-  override protected def withNewChildInternal(newChild: Expression): Expression
-}
-
-case class MinHashSigExpr(child: Expression, shingleK: Int, numHashes: Int)
-  extends ArrayKernelExpr {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    DedupKernels.minhashSig(input.asInstanceOf[ArrayData], shingleK, numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DedupKernels.minhashSig($c, $shingleK, $numHashes)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SimHashExpr(child: Expression) extends ArrayKernelExpr {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    DedupKernels.simhash(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DedupKernels.simhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class ShingleHashesExpr(child: Expression, shingleK: Int) extends ArrayKernelExpr {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-  override protected def nullSafeEval(input: Any): Any =
-    DedupKernels.shingleHashes(input.asInstanceOf[ArrayData], shingleK)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DedupKernels.shingleHashes($c, $shingleK)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    DedupKernels.bandKeys(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DedupKernels.bandKeys($c, $bands, $rowsPerBand)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SigAgreementExpr(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sig_agreement"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DedupKernels.sigAgreement(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DedupKernels.sigAgreement($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** Column-API wrappers for the kernel expressions. */
+/** Column-API wrappers for the kernels. */
 object DedupExpr {
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-  private def col(e: Expression): Column = ColumnBridge.column(e)
+  private val Tokens = "array<string>"
+  private val Sig = "array<bigint>"
+  private val Longs = ArrayType(LongType, containsNull = false)
 
   def minhashSig(tokens: Column, shingleK: Int, numHashes: Int): Column =
-    col(MinHashSigExpr(expr(tokens), shingleK, numHashes))
-  def simhash(tokens: Column): Column = col(SimHashExpr(expr(tokens)))
+    KernelCall.column("minhash_sig", DedupKernels, "minhashSig", Longs,
+      Seq(tokens -> Tokens), shingleK, numHashes)
+  def simhash(tokens: Column): Column =
+    KernelCall.column("simhash64", DedupKernels, "simhash", LongType, Seq(tokens -> Tokens))
   def shingleHashes(tokens: Column, shingleK: Int): Column =
-    col(ShingleHashesExpr(expr(tokens), shingleK))
+    KernelCall.column("shingle_hashes", DedupKernels, "shingleHashes", Longs,
+      Seq(tokens -> Tokens), shingleK)
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    col(BandKeysExpr(expr(sig), bands, rowsPerBand))
+    KernelCall.column("lsh_band_keys", DedupKernels, "bandKeys", Longs,
+      Seq(sig -> Sig), bands, rowsPerBand)
   def sigAgreement(a: Column, b: Column): Column =
-    col(SigAgreementExpr(expr(a), expr(b)))
+    KernelCall.column("sig_agreement", DedupKernels, "sigAgreement", DoubleType,
+      Seq(a -> Sig, b -> Sig))
 }

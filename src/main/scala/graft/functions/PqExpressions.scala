@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Product-quantization kernels: encode a vector to m bytes (one
@@ -84,7 +81,7 @@ object PqKernels {
     * (binary-searched per row); centroids are pre-normalized like the
     * `nearest_centroid` kernel's.
     */
-  def encodeResidual(v: ArrayData, isF: Boolean, cid: Long, ids: Array[Long],
+  def encodeResidual(v: ArrayData, cid: Long, isF: Boolean, ids: Array[Long],
                      cnorm: Array[Array[Double]], subDim: Int, k: Int,
                      cents: Array[Array[Double]]): Array[Byte] = {
     val m = cents.length
@@ -171,125 +168,14 @@ object PqKernels {
   }
 }
 
-private[graft] trait PqVecInput extends UnaryExpression {
-  protected def isF: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float|double>, got ${t.simpleString}")
-    }
-}
-
-/** codes = pq_encode(vec): BinaryType of m bytes. */
-case class PqEncodeExpr(child: Expression, subDim: Int, k: Int,
-                        cents: Array[Array[Double]])
-  extends PqVecInput {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pq_encode"
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.encode(input.asInstanceOf[ArrayData], isF, subDim, k, cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("pqCents", cents, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PqKernels.encode($c, $isF, $subDim, $k, $centsRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** codes = pq_encode_residual(vec, cluster_id): BinaryType of m bytes —
-  * the vector's PQ codes relative to its IVF cluster centroid.
-  */
-case class PqEncodeResidualExpr(left: Expression, right: Expression,
-                                ids: Array[Long], cnorm: Array[Array[Double]],
-                                subDim: Int, k: Int, cents: Array[Array[Double]])
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pq_encode_residual"
-  private def isF: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _) | ArrayType(DoubleType, _), LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pq_encode_residual requires (array<float|double>, bigint), got (${l.simpleString}, ${r.simpleString})")
-    }
-  override protected def nullSafeEval(vec: Any, cid: Any): Any =
-    PqKernels.encodeResidual(vec.asInstanceOf[ArrayData], isF,
-      cid.asInstanceOf[Long], ids, cnorm, subDim, k, cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idsRef = ctx.addReferenceObj("ivfIds", ids, "long[]")
-    val cnormRef = ctx.addReferenceObj("ivfCnorm", cnorm, "double[][]")
-    val centsRef = ctx.addReferenceObj("pqCents", cents, "double[][]")
-    defineCodeGen(ctx, ev, (v, c) =>
-      s"graft.functions.PqKernels.encodeResidual($v, $isF, $c, $idsRef, $cnormRef, $subDim, $k, $centsRef)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** scores = pq_adc_scores(codes): array<double>, one ADC score per query LUT. */
-case class PqAdcScoresExpr(child: Expression, k: Int, luts: Array[Array[Double]])
-  extends UnaryExpression {
-  PqExpr.requireUniformLuts("pq_adc_scores", luts)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "pq_adc_scores"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pq_adc_scores requires binary codes, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.adcScores(input.asInstanceOf[Array[Byte]], k, luts)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lutsRef = ctx.addReferenceObj("pqLuts", luts, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PqKernels.adcScores($c, $k, $lutsRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** score = pq_adc_score_at(codes, qidx): the row-selected query's ADC score. */
-case class PqAdcScoreAtExpr(left: Expression, right: Expression, k: Int,
-                            luts: Array[Array[Double]])
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-  PqExpr.requireUniformLuts("pq_adc_score_at", luts)
-  override def inputTypes = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc_score_at"
-  override protected def nullSafeEval(codes: Any, qidx: Any): Any =
-    PqKernels.adcScoreAt(codes.asInstanceOf[Array[Byte]],
-      qidx.asInstanceOf[Int], k, luts)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lutsRef = ctx.addReferenceObj("pqLuts", luts, "double[][]")
-    defineCodeGen(ctx, ev, (c, q) =>
-      s"graft.functions.PqKernels.adcScoreAt($c, $q, $k, $lutsRef)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object PqExpr {
-  /** Constructor-time (once per expression, not per row) LUT-shape
+  /** Build-time (once per column, not per row) LUT-shape
     * validation: the per-row kernel checks only the code width against
     * luts(0)/the selected LUT, so a ragged LUT among the rest would read
     * out of bounds or mis-score silently. Uniformity asserted here keeps
     * the O(Q) sweep off the hot scoring path.
     */
-  private[functions] def requireUniformLuts(name: String,
-                                            luts: Array[Array[Double]]): Unit = {
+  private def requireUniformLuts(name: String, luts: Array[Array[Double]]): Unit = {
     var q = 1
     while (q < luts.length) {
       require(luts(q).length == luts(0).length,
@@ -299,16 +185,33 @@ object PqExpr {
     }
   }
 
+  private val Scores = ArrayType(DoubleType, containsNull = false)
+
+  /** codes = pq_encode(vec): BinaryType of m bytes. */
   def encode(v: Column, subDim: Int, k: Int, cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(PqEncodeExpr(ColumnBridge.expression(v), subDim, k, cents))
+    KernelCall.column("pq_encode", PqKernels, "encode", BinaryType,
+      Seq(v -> KernelCall.FloatVec), subDim, k, cents)
+
+  /** codes = pq_encode_residual(vec, cluster_id): BinaryType of m bytes —
+    * the vector's PQ codes relative to its IVF cluster centroid.
+    */
   def encodeResidual(v: Column, clusterId: Column, ids: Array[Long],
                      cnorm: Array[Array[Double]], subDim: Int, k: Int,
                      cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(PqEncodeResidualExpr(ColumnBridge.expression(v),
-      ColumnBridge.expression(clusterId), ids, cnorm, subDim, k, cents))
-  def adcScores(codes: Column, k: Int, luts: Array[Array[Double]]): Column =
-    ColumnBridge.column(PqAdcScoresExpr(ColumnBridge.expression(codes), k, luts))
-  def adcScoreAt(codes: Column, qidx: Column, k: Int, luts: Array[Array[Double]]): Column =
-    ColumnBridge.column(PqAdcScoreAtExpr(ColumnBridge.expression(codes),
-      ColumnBridge.expression(qidx), k, luts))
+    KernelCall.column("pq_encode_residual", PqKernels, "encodeResidual", BinaryType,
+      Seq(v -> KernelCall.FloatVec, clusterId -> "bigint"), ids, cnorm, subDim, k, cents)
+
+  /** scores = pq_adc_scores(codes): array<double>, one ADC score per query LUT. */
+  def adcScores(codes: Column, k: Int, luts: Array[Array[Double]]): Column = {
+    requireUniformLuts("pq_adc_scores", luts)
+    KernelCall.column("pq_adc_scores", PqKernels, "adcScores", Scores,
+      Seq(codes -> "binary"), k, luts)
+  }
+
+  /** score = pq_adc_score_at(codes, qidx): the row-selected query's ADC score. */
+  def adcScoreAt(codes: Column, qidx: Column, k: Int, luts: Array[Array[Double]]): Column = {
+    requireUniformLuts("pq_adc_score_at", luts)
+    KernelCall.column("pq_adc_score_at", PqKernels, "adcScoreAt", DoubleType,
+      Seq(codes -> "binary", qidx -> "int"), k, luts)
+  }
 }

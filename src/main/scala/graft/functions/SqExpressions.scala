@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Scalar-quantization (SQ8) kernels — the third code-compression
@@ -79,68 +76,22 @@ object SqKernels {
   }
 }
 
-/** l2_normalize(vec): array<double> — the normalized vector. */
-case class L2NormalizeExpr(child: Expression) extends PqVecInput {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "l2_normalize"
-  override protected def nullSafeEval(input: Any): Any =
-    SqKernels.l2normalize(input.asInstanceOf[ArrayData], isF)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SqKernels.l2normalize($c, $isF)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** codes = sq8_encode(vec): BinaryType of d bytes. */
-case class SqEncodeExpr(child: Expression, mins: Array[Double],
-                        deltas: Array[Double])
-  extends PqVecInput {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "sq8_encode"
-  override protected def nullSafeEval(input: Any): Any =
-    SqKernels.encode(input.asInstanceOf[ArrayData], isF, mins, deltas)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val minsRef = ctx.addReferenceObj("sqMins", mins, "double[]")
-    val deltasRef = ctx.addReferenceObj("sqDeltas", deltas, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SqKernels.encode($c, $isF, $minsRef, $deltasRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** scores = sq8_scores(codes): array<double>, one asymmetric score per query. */
-case class SqScoresExpr(child: Expression, weights: Array[Array[Double]],
-                        consts: Array[Double])
-  extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "sq8_scores"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sq8_scores requires binary codes, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    SqKernels.scores(input.asInstanceOf[Array[Byte]], weights, consts)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("sqWeights", weights, "double[][]")
-    val cRef = ctx.addReferenceObj("sqConsts", consts, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SqKernels.scores($c, $wRef, $cRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SqExpr {
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+
+  /** l2_normalize(vec): array<double> — the normalized vector. */
   def l2normalize(v: Column): Column =
-    ColumnBridge.column(L2NormalizeExpr(ColumnBridge.expression(v)))
+    KernelCall.column("l2_normalize", SqKernels, "l2normalize", Doubles,
+      Seq(v -> KernelCall.FloatVec))
+
+  /** codes = sq8_encode(vec): BinaryType of d bytes. */
   def encode(v: Column, mins: Array[Double], deltas: Array[Double]): Column =
-    ColumnBridge.column(SqEncodeExpr(ColumnBridge.expression(v), mins, deltas))
+    KernelCall.column("sq8_encode", SqKernels, "encode", BinaryType,
+      Seq(v -> KernelCall.FloatVec), mins, deltas)
+
+  /** scores = sq8_scores(codes): array<double>, one asymmetric score per query. */
   def scores(codes: Column, weights: Array[Array[Double]],
              consts: Array[Double]): Column =
-    ColumnBridge.column(SqScoresExpr(ColumnBridge.expression(codes), weights, consts))
+    KernelCall.column("sq8_scores", SqKernels, "scores", Doubles,
+      Seq(codes -> "binary"), weights, consts)
 }

@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,28 +48,6 @@ object TextKernels {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](n, stop, sumLen))
   }
-}
-
-case class TokenStatsExpr(child: Expression, stopwords: Seq[String])
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_stop", LongType, nullable = false),
-    StructField("sum_token_len", LongType, nullable = false)))
-  override def prettyName: String = "token_stats"
-
-  @transient private lazy val sw: Array[String] = stopwords.map(_.toLowerCase).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.tokenStats(input.asInstanceOf[UTF8String], sw)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val swRef = ctx.addReferenceObj("stopwords", sw, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.tokenStats($c, $swRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Jaro-Winkler string-similarity kernel (classic parameters: scaling
@@ -129,29 +104,14 @@ object SimTextKernels {
   }
 }
 
-case class JaroWinklerExpr(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaro_winkler"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SimTextKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.SimTextKernels.jaroWinkler($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object TextExpr {
   def tokenStats(text: Column, stopwords: Seq[String] = Nil): Column =
-    ColumnBridge.column(TokenStatsExpr(ColumnBridge.expression(text), stopwords))
+    KernelCall.column("token_stats", TextKernels, "tokenStats",
+      StructType(Seq("n_tokens", "n_stop", "sum_token_len")
+        .map(StructField(_, LongType, nullable = false))),
+      Seq(text -> "string"), stopwords.map(_.toLowerCase).toArray)
 
   def jaroWinkler(a: Column, b: Column): Column =
-    ColumnBridge.column(JaroWinklerExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    KernelCall.column("jaro_winkler", SimTextKernels, "jaroWinkler", DoubleType,
+      Seq(a -> "string", b -> "string"))
 }

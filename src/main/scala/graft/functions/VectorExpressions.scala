@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native vector kernels: cosine / dot / L2 over `array<double>` (float
-  * arrays are upcast exactly by implicit input casts). The higher-order
+  * arrays are read natively; the widening is exact). The higher-order
   * `aggregate`+`zip_with` compositions in Similarity are interpreted
   * (CodegenFallback) and re-walk the lambda tree per element; these run
   * one fused JIT loop per row and participate in codegen. Accumulation
@@ -251,199 +248,35 @@ object VectorKernels {
   }
 }
 
-private[graft] abstract class VectorBinaryExpr extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double> inputs, " +
-        s"got ${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  protected def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-}
-
-case class CosineSimExpr(left: Expression, right: Expression) extends VectorBinaryExpr {
-  override def prettyName: String = "cosine_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernels.cosine($a, $b, ${isFloat(left)}, ${isFloat(right)})")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class DotProductExpr(left: Expression, right: Expression) extends VectorBinaryExpr {
-  override def prettyName: String = "dot_product"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernels.dot($a, $b, ${isFloat(left)}, ${isFloat(right)})")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class SignLshExpr(child: Expression, numPlanes: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sign_lsh"
-  private def isF: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sign_lsh requires array<float|double>, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernels.signLsh(input.asInstanceOf[ArrayData], isF, numPlanes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.signLsh($c, $isF, $numPlanes)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SignLshBandsExpr(child: Expression, planesPerBand: Int, bands: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sign_lsh_bands"
-  private def isF: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sign_lsh_bands requires array<float|double>, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernels.signLshBands(input.asInstanceOf[ArrayData], isF, planesPerBand, bands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.signLshBands($c, $isF, $planesPerBand, $bands)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SignLshBandsPooledExpr(child: Expression, planesPerBand: Int,
-                                  bands: Int, pool: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(pool >= 2 && (pool & (pool - 1)) == 0,
-    s"sign_lsh_bands_pooled: pool $pool must be a power of two")
-  require(planesPerBand >= 1 && planesPerBand <= 64 && planesPerBand <= pool,
-    s"sign_lsh_bands_pooled: planesPerBand $planesPerBand out of range")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sign_lsh_bands_pooled"
-  private def isF: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sign_lsh_bands_pooled requires array<float|double>, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernels.signLshBandsPooled(input.asInstanceOf[ArrayData], isF,
-      planesPerBand, bands, pool)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.signLshBandsPooled($c, $isF, $planesPerBand, $bands, $pool)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class UpperTriProductsExpr(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "upper_tri_products"
-  private def isF: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"upper_tri_products requires array<float|double>, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernels.upperTriProducts(input.asInstanceOf[ArrayData], isF)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.upperTriProducts($c, $isF)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Map-only Lloyd assignment: the (bounded) centroid table rides into
-  * the generated code as reference objects — no crossJoin, no shuffle.
-  * `cents` must be pre-normalized (see VectorKernels.nearestCentroid).
-  */
-case class NearestCentroidExpr(child: Expression, ids: Array[Long],
-                               cents: Array[Array[Double]])
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "nearest_centroid"
-  private def isF: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"nearest_centroid requires array<float|double>, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernels.nearestCentroid(input.asInstanceOf[ArrayData], isF, ids, cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idsRef = ctx.addReferenceObj("centroidIds", ids, "long[]")
-    val centsRef = ctx.addReferenceObj("centroids", cents, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.nearestCentroid($c, $isF, $idsRef, $centsRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object VectorExpr {
-  def cosineSim(a: Column, b: Column): Column =
-    ColumnBridge.column(CosineSimExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  def dotProduct(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  private val Longs = ArrayType(LongType, containsNull = false)
+
+  private def vec(name: String, method: String, dataType: DataType,
+                  args: Seq[Column], constants: Any*): Column =
+    KernelCall.column(name, VectorKernels, method, dataType,
+      args.map(_ -> KernelCall.FloatVec), constants: _*)
+
+  def cosineSim(a: Column, b: Column): Column = vec("cosine_sim", "cosine", DoubleType, Seq(a, b))
+  def dotProduct(a: Column, b: Column): Column = vec("dot_product", "dot", DoubleType, Seq(a, b))
   def signLsh(v: Column, numPlanes: Int): Column =
-    ColumnBridge.column(SignLshExpr(ColumnBridge.expression(v), numPlanes))
+    vec("sign_lsh", "signLsh", LongType, Seq(v), numPlanes)
   def signLshBands(v: Column, planesPerBand: Int, bands: Int): Column =
-    ColumnBridge.column(SignLshBandsExpr(ColumnBridge.expression(v), planesPerBand, bands))
+    vec("sign_lsh_bands", "signLshBands", Longs, Seq(v), planesPerBand, bands)
+
+  /** Map-only Lloyd assignment: the (bounded) centroid table rides into
+    * the generated code as reference objects — no crossJoin, no shuffle.
+    * `cents` must be pre-normalized (see VectorKernels.nearestCentroid).
+    */
   def nearestCentroid(v: Column, ids: Array[Long], cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(NearestCentroidExpr(ColumnBridge.expression(v), ids, cents))
+    vec("nearest_centroid", "nearestCentroid", LongType, Seq(v), ids, cents)
   def upperTriProducts(v: Column): Column =
-    ColumnBridge.column(UpperTriProductsExpr(ColumnBridge.expression(v)))
+    vec("upper_tri_products", "upperTriProducts", ArrayType(DoubleType, containsNull = false), Seq(v))
   def signLshBandsPooled(v: Column, planesPerBand: Int, bands: Int,
-                         pool: Int): Column =
-    ColumnBridge.column(SignLshBandsPooledExpr(ColumnBridge.expression(v),
-      planesPerBand, bands, pool))
+                         pool: Int): Column = {
+    require(pool >= 2 && (pool & (pool - 1)) == 0,
+      s"sign_lsh_bands_pooled: pool $pool must be a power of two")
+    require(planesPerBand >= 1 && planesPerBand <= 64 && planesPerBand <= pool,
+      s"sign_lsh_bands_pooled: planesPerBand $planesPerBand out of range")
+    vec("sign_lsh_bands_pooled", "signLshBandsPooled", Longs, Seq(v), planesPerBand, bands, pool)
+  }
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
 /** Z-order (Morton) curve kernel: interleave the bits of two 32-bit
   * quantized ranks into one 64-bit sort key. Sorting files by this key
@@ -30,25 +27,8 @@ object ZorderKernels {
   def interleave(x: Long, y: Long): Long = spread(x) | (spread(y) << 1)
 }
 
-case class ZorderExpr(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "zorder_key"
-
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    ZorderKernels.interleave(x.asInstanceOf[Long], y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) =>
-      s"graft.functions.ZorderKernels.interleave($x, $y)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object ZorderExpr {
   def zorderKey(x: Column, y: Column): Column =
-    ColumnBridge.column(ZorderExpr(ColumnBridge.expression(x),
-      ColumnBridge.expression(y)))
+    KernelCall.column("zorder_key", ZorderKernels, "interleave", LongType,
+      Seq(x -> "bigint", y -> "bigint"))
 }

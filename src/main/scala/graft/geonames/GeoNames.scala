@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.KernelCall
 import graft.operators.{PrefixMatch, TemplateFilters}
 import graft.sources.TsvFileFormat
 
@@ -128,21 +129,27 @@ object GeoNames {
     * only from typed rows — getRelations runs inside the `if (type)`
     * branch, geonames.js:165).
     */
-  def classified(places: DataFrame, config: Config): DataFrame = {
+  def classified(places: DataFrame, config: Config): DataFrame =
+    typed(places, config).where(col("type").isNotNull)
+
+  /** Template-filtered input rows + `type`, null where no prefix matches. */
+  private def typed(places: DataFrame, config: Config): DataFrame = {
     val ids = config.extraUris.map(_.replace(baseUri, ""))
     places
       .where(TemplateFilters.anyTemplateOrIds(
         config.filters.map(_.toMap[String, Any]), col("geonameid"), ids))
       .withColumn("type", PrefixMatch.classify(col("featureCode"), config.types))
-      .where(col("type").isNotNull)
   }
 
-  private def jsNum(c: Column): Column =
-    coalesce(
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        JsNumberStringExpr(
-          org.apache.spark.sql.graft.ColumnBridge.expression(c))),
-      lit("null"))
+  /** `js_number_string(double) -> string`: the [[JsNum.render]] kernel,
+    * so the NDJSON sink's per-coordinate rendering stays inside
+    * whole-stage codegen instead of paying a Scala-UDF encode/decode
+    * boundary.
+    */
+  def jsNumberString(d: Column): Column =
+    KernelCall.column("js_number_string", JsNum, "renderUtf8", StringType, Seq(d -> "double"))
+
+  private def jsNum(c: Column): Column = coalesce(jsNumberString(c), lit("null"))
 
   /** The pit's leading fields `uri`, `name`, `type` (geonames.js:137–140). */
   private def pitHead: Seq[Column] = Seq(
@@ -248,11 +255,14 @@ object GeoNames {
                 config: Config): DataFrame =
     // the JSON is projected before the generator, and the generator is a
     // plain explode, so projection, explode and the null-line filter stay
-    // in the scan's whole-stage-codegen'd stage
-    withParent(classified(places, config), admin1, admin2)
+    // in the scan's whole-stage-codegen'd stage. Untyped rows are dropped
+    // by that null-line filter, not by a `type IS NOT NULL` filter: the
+    // optimizer would push such a filter into the scan's Filter with the
+    // classify chain inlined, evaluating the chain twice per row.
+    withParent(typed(places, config), admin1, admin2)
       .select(
-        pitJson.as("_pit"),
-        when(col("_parent").isNotNull, relationJson(config)).as("_rel"))
+        when(col("type").isNotNull, pitJson).as("_pit"),
+        when(col("type").isNotNull && col("_parent").isNotNull, relationJson(config)).as("_rel"))
       .select(explode(array(col("_pit"), col("_rel"))).as("value"))
       .where(col("value").isNotNull)
 

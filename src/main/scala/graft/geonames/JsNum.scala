@@ -2,9 +2,6 @@ package graft.geonames
 
 import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ECMAScript Number→String (radix 10) rendering of a double, exactly as
@@ -84,30 +81,8 @@ object JsNum {
     if (neg) "-" + body else body
   }
 
-  /** Codegen entry point: render as UTF8String (null never reaches here —
-    * the expression is null-intolerant).
+  /** Kernel entry point of `js_number_string`: render as UTF8String
+    * (null never reaches here — the kernel call is null-intolerant).
     */
   def renderUtf8(d: Double): UTF8String = UTF8String.fromString(render(d))
-}
-
-/** `js_number_string(double) -> string`: the [[JsNum.render]] kernel as a
-  * native codegen expression, so the NDJSON sink's per-coordinate
-  * rendering stays inside whole-stage codegen instead of paying the
-  * Scala-UDF encode/decode boundary (the repo's SURVEY §2.10 kernel
-  * policy; this was the one per-row UDF left in a production path).
-  */
-case class JsNumberStringExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(DoubleType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "js_number_string"
-
-  override protected def nullSafeEval(input: Any): Any =
-    JsNum.renderUtf8(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.geonames.JsNum.renderUtf8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

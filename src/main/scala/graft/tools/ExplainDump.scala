@@ -76,12 +76,13 @@ object ExplainDump {
 
   /** Mask what differs between two runs of the same code, or moves with
     * an unrelated edit: object hash codes (`[J@16433d56`,
-    * `Ivf$CentroidAgg@4f347aae`), the random suffix of per-run temp dirs
-    * (`/tmp/graft-embpairs1051…/pairs`), exchange `plan_id`s and source
-    * line numbers in RDD call sites (`at Lineage.scala:39`).
+    * `[[Ljava.lang.String;@5e9f23b4`, `Ivf$CentroidAgg@4f347aae`), the
+    * random suffix of per-run temp dirs (`/tmp/graft-embpairs1051…/pairs`),
+    * exchange `plan_id`s and source line numbers in RDD call sites
+    * (`at Lineage.scala:39`).
     */
   def normalize(plan: String): String =
-    plan.replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@<hash>")
+    plan.replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "@<hash>")
       .replaceAll(s"$tmpDir/([A-Za-z][A-Za-z-]*)\\d+", "<tmp>/$1")
       .replaceAll("plan_id=\\d+", "plan_id=<n>")
       .replaceAll("(?<=\\.scala):\\d+", "")

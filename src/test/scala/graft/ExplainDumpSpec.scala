@@ -12,6 +12,7 @@ class ExplainDumpSpec extends AnyFunSuite with Matchers {
     val plan =
       "nearest_centroid(embedding#440, [J@3532b5d9, [[D@77bca6d6)\n" +
         "centroidagg(embedding#503, graft.operators.Ivf$CentroidAgg@4f347aae, true)\n" +
+        "best_lang(text#737, de, en, [[Ljava.lang.String;@5e9f23b4)\n" +
         s"Location: InMemoryFileIndex [file:$tmp/graft-embpairs10519754891197782504/pairs]\n" +
         "Arguments: ENSURE_REQUIREMENTS, [plan_id=51]\n" +
         "Arguments: [id#285L], graft-cut:Dedup.minhashPairs.sigs MapPartitionsRDD[32] " +
@@ -20,6 +21,7 @@ class ExplainDumpSpec extends AnyFunSuite with Matchers {
     ExplainDump.normalize(plan) shouldBe
       "nearest_centroid(embedding#440, [J@<hash>, [[D@<hash>)\n" +
         "centroidagg(embedding#503, graft.operators.Ivf$CentroidAgg@<hash>, true)\n" +
+        "best_lang(text#737, de, en, [[Ljava.lang.String;@<hash>)\n" +
         "Location: InMemoryFileIndex [file:<tmp>/graft-embpairs/pairs]\n" +
         "Arguments: ENSURE_REQUIREMENTS, [plan_id=<n>]\n" +
         "Arguments: [id#285L], graft-cut:Dedup.minhashPairs.sigs MapPartitionsRDD[32] " +

@@ -7,7 +7,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
 import graft.sources.TsvFileFormat
-import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, InSet}
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, ElementAt, HigherOrderFunction, InSet}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, InputAdapter, SparkPlan,
   UnionExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -152,14 +152,12 @@ class GeoNamesSpec extends SparkSpec {
     for ((d, want) <- cases)
       withClue(s"$d: ") { JsNum.render(d) shouldBe want }
 
-    // the same cases through the CODEGEN path (JsNumberStringExpr inside
+    // the same cases through the CODEGEN path (js_number_string inside
     // a whole-stage-codegen'd projection — the NDJSON sink's shape), so
-    // doGenCode is exercised, not just the interpreted nullSafeEval
+    // doGenCode is exercised, not just the interpreted eval
     val finite = cases.filter(c => !c._1.isNaN) // NaN/Inf arrive as null post-try_cast
     val viaExpr = finite.map(_._1).toDF("d")
-      .select(org.apache.spark.sql.graft.ColumnBridge.column(
-        JsNumberStringExpr(org.apache.spark.sql.graft.ColumnBridge
-          .expression(col("d")))).as("s"))
+      .select(GeoNames.jsNumberString(col("d")).as("s"))
       .as[String].collect()
     viaExpr.toSeq shouldBe finite.map {
       case (d, w) => if (d.isInfinite) "null" else w
@@ -244,6 +242,14 @@ class GeoNamesSpec extends SparkSpec {
     placeScans.size shouldBe 1
     Aqe.collect(plan) { case u: UnionExec => u } shouldBe empty
     Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.size shouldBe 2
+    // the longest-prefix classify chain runs once per row: in the Project
+    // that names `type`, not again in a pushed-down Filter
+    def classifyChains(p: SparkPlan): Int = Aqe.collect(p) { case n =>
+      n.expressions.map(_.collect {
+        case c: Coalesce if c.children.forall(_.isInstanceOf[ElementAt]) => c
+      }.size).sum
+    }.sum
+    classifyChains(plan) shouldBe 1
 
     // one codegen pipeline and shuffle-free admin builds, under a config
     // whose country list is long enough for an InSet probe
@@ -253,6 +259,7 @@ class GeoNamesSpec extends SparkSpec {
     wide.collect().map(_.getString(0)).sorted shouldBe env.collect().map(_.getString(0)).sorted
     val widePlan = wide.queryExecution.executedPlan
     Aqe.collect(widePlan) { case e: ShuffleExchangeExec => e } shouldBe empty
+    classifyChains(widePlan) shouldBe 1
     Aqe.collect(widePlan) {
       case p if p.expressions.exists(_.exists(_.isInstanceOf[HigherOrderFunction])) => p
     } shouldBe empty

@@ -38,13 +38,16 @@ class GeoSpec extends SparkSpec {
     val pts = Seq.tabulate(300) { i =>
       (i.toLong, rnd.nextDouble() * 120 - 60, rnd.nextDouble() * 360 - 180)
     }
-    val brute = (for {
-      (ia, lata, lona) <- pts; (ib, latb, lonb) <- pts
-      if ia < ib
-      d = BigDecimal(dist(lata, lona, latb, lonb))
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      if d <= 500.0
-    } yield (ia, ib)).toSet
+    // oracle: every pair's haversine in one query, rounded like neighborPairs
+    val p = pts.toDF("id", "lat", "lon")
+    val brute = p.as("a").crossJoin(p.as("b")).where(col("a.id") < col("b.id"))
+      .select(col("a.id"), col("b.id"),
+        Geo.haversineKm(col("a.lat"), col("a.lon"), col("b.lat"), col("b.lon")))
+      .as[(Long, Long, Double)].collect()
+      .collect { case (ia, ib, km)
+        if BigDecimal(km).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble <= 500.0 =>
+        (ia, ib)
+      }.toSet
     brute should not be empty // the fixture must actually exercise pairs
     gridPairs(pts, r = 500.0, cell = 10.0) shouldBe brute
   }
