@@ -47,30 +47,7 @@ object PqKernels {
     val x = normalized(v, isF)
     if (x.length != m * subDim) throw new IllegalArgumentException(
       s"pq_encode requires vectors of length ${m * subDim}, got ${x.length}")
-    val codes = new Array[Byte](m)
-    var s = 0
-    while (s < m) {
-      val cs = cents(s)
-      val base = s * subDim
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        var d = 0.0
-        var j = 0
-        val cb = c * subDim
-        while (j < subDim) {
-          val diff = x(base + j) - cs(cb + j)
-          d += diff * diff
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      codes(s) = best.toByte
-      s += 1
-    }
-    codes
+    nearestCodes(x, subDim, k, cents)
   }
 
   /** Residual encode: normalize the vector, subtract its IVF cluster's
@@ -94,6 +71,15 @@ object PqKernels {
     val c = cnorm(ci)
     var i = 0
     while (i < x.length) { x(i) -= c(i); i += 1 }
+    nearestCodes(x, subDim, k, cents)
+  }
+
+  /** Per subspace s, the index of the L2-nearest of the k centroids in
+    * `cents(s)` (flattened as k rows of subDim doubles) to x's slice.
+    */
+  private def nearestCodes(x: Array[Double], subDim: Int, k: Int,
+                           cents: Array[Array[Double]]): Array[Byte] = {
+    val m = cents.length
     val codes = new Array[Byte](m)
     var s = 0
     while (s < m) {
@@ -101,18 +87,18 @@ object PqKernels {
       val base = s * subDim
       var best = 0
       var bestD = Double.MaxValue
-      var cc = 0
-      while (cc < k) {
+      var c = 0
+      while (c < k) {
         var d = 0.0
         var j = 0
-        val cb = cc * subDim
+        val cb = c * subDim
         while (j < subDim) {
           val diff = x(base + j) - cs(cb + j)
           d += diff * diff
           j += 1
         }
-        if (d < bestD) { bestD = d; best = cc }
-        cc += 1
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
       }
       codes(s) = best.toByte
       s += 1

@@ -477,7 +477,7 @@ object Dedup {
     // convergence check below exploits that. Dropping the distinct
     // removes one full (lo,hi)-keyed exchange + aggregate per round —
     // a third of each round's shuffles at any scale (plan evidence in
-    // plans/r16). Ties in the row_number pick are harmless: tied rows
+    // OPTIMIZATION_r16.md). Ties in the row_number pick are harmless: tied rows
     // are identical (lo, hi) duplicates emitting the same (m, hi).
     def smallStar(e: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("hi")).orderBy(col("lo"))

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
 
@@ -378,13 +379,12 @@ object Streams {
                            shingleK: Int = 3,
                            maxBucket: Int = 4096): Dataset[NearDupPair] = {
     import docs.sparkSession.implicits._
-    ensureStateStoreCoordinator(docs)
     import graft.functions.{DedupExpr, TextAnalytics}
     require(numHashes % bands == 0,
       s"minhashNeardupStream: numHashes=$numHashes must be divisible by " +
         s"bands=$bands (lsh_band_keys rejects ragged widths)")
     val rowsPerBand = numHashes / bands
-    docs
+    val banded = docs
       .select(col(tsCol).as("ts"), col(idCol).as("doc_id"),
         DedupExpr.minhashSig(TextAnalytics.tokens(col(textCol)),
           shingleK, numHashes).as("sig"))
@@ -392,14 +392,8 @@ object Streams {
         posexplode(DedupExpr.bandKeys(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "bkey")))
       .as[BandRow]
-      .groupByKey(_.bkey)
-      // TimeMode.None: the processor registers no timers and no TTL, and
-      // None keeps processAllAvailable usable — ProcessingTime mode
-      // re-triggers housekeeping batches forever (see the heavy-hitters
-      // spec note), which here would busy-loop empty micro-batches
-      .transformWithState(
-        new MinhashBucketProcessor(rowsPerBand, threshold, maxBucket),
-        TimeMode.None(), OutputMode.Append())
+    withState(banded,
+      new MinhashBucketProcessor(rowsPerBand, threshold, maxBucket))(_.bkey)
   }
 
   // ---------------------------------- streaming embedding near-dup (sign-LSH)
@@ -541,8 +535,7 @@ object Streams {
                              planesPerBand: Int = 3, bands: Int = 16,
                              maxBucket: Int = 4096): Dataset[VecNearDupPair] = {
     import vecs.sparkSession.implicits._
-    ensureStateStoreCoordinator(vecs)
-    vecs
+    val banded = vecs
       .select(col(tsCol).as("ts"), col(idCol).as("vec_id"),
         col(vecCol).as("vec"),
         graft.operators.Dedup.lshBandKeyArray(col(vecCol), planesPerBand,
@@ -550,12 +543,7 @@ object Streams {
       .select(col("ts"), col("vec_id"), col("vec"), col("keys"),
         posexplode(col("keys")).as(Seq("band", "bkey")))
       .as[VecBandRow]
-      .groupByKey(_.bkey)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches forever; see the minhash twin's note)
-      .transformWithState(new VecBucketProcessor(threshold, maxBucket),
-        TimeMode.None(), OutputMode.Append())
+    withState(banded, new VecBucketProcessor(threshold, maxBucket))(_.bkey)
   }
 
   /** Stream-stream inner join with an event-time interval bound: left
@@ -579,36 +567,42 @@ object Streams {
          |$rightTs <= $leftTs""".stripMargin))
   }
 
-  /** Ensure the driver's StateStoreCoordinator RPC endpoint exists
-    * before a `transformWithState` plan executes over a BATCH input.
+  /** The one place a builder here reaches `transformWithState`: group
+    * `input` by `key` and run `processor` in Append mode.
     *
-    * Spark only creates the endpoint when the first STREAMING query
-    * starts (StreamingQueryManager's driver-side coordinator), but
-    * Spark 4 also executes StatefulProcessors over batch Datasets —
-    * with ephemeral per-key state — and that path still reports its
-    * RocksDB store instances to the coordinator. In a fresh session
-    * that has never run a streaming query, the first batch
-    * `transformWithState` job dies in
+    * Batch inputs need the driver's StateStoreCoordinator RPC endpoint,
+    * and Spark only creates it when the first STREAMING query starts
+    * (StreamingQueryManager's driver-side coordinator). Spark 4 also
+    * executes StatefulProcessors over batch Datasets — with ephemeral
+    * per-key state — and that path still reports its RocksDB store
+    * instances to the coordinator. In a fresh session that has never run
+    * a streaming query, the first batch run would die in
     * RocksDBStateStoreProvider.loadStateStore with
     * CANNOT_LOAD_STATE_STORE (RpcEndpointNotFoundException:
-    * StateStoreCoordinator) — an order-dependent failure: the same
-    * call succeeds if any streaming query ran earlier in the JVM.
+    * StateStoreCoordinator) — an order-dependent failure: the same call
+    * succeeds if any streaming query ran earlier in the JVM. The
+    * coordinator's `forDriver` is idempotent — it attempts endpoint
+    * registration and falls back to a lookup of the existing endpoint —
+    * so the call is safe under repeated invocation and session restarts
+    * (a rebuilt SparkContext brings a fresh SparkEnv, which is why it
+    * runs per builder call rather than once in a lazy val). Driver-side
+    * only, microseconds; no effect on the plan.
     *
-    * Every TWS builder here calls this before returning its plan.
-    * `StateStoreCoordinatorRef.forDriver` is idempotent — it attempts
-    * endpoint registration and falls back to a lookup of the existing
-    * endpoint when already registered — so the call is safe under
-    * streaming inputs, repeated invocation, and session restarts (a
-    * rebuilt SparkContext brings a fresh SparkEnv, which is why this
-    * is re-asserted per builder call rather than cached in a lazy
-    * val). Driver-side only, microseconds; no effect on the plan.
+    * `timeMode` defaults to TimeMode.None, right for every processor
+    * without timers or TTL: None keeps `processAllAvailable` usable,
+    * while ProcessingTime re-triggers housekeeping batches forever and
+    * would busy-loop empty micro-batches.
     */
-  private def ensureStateStoreCoordinator(input: Dataset[_]): Unit =
-    if (!input.isStreaming) {
+  private def withState[K: Encoder, I, O: Encoder](input: Dataset[I],
+      processor: StatefulProcessor[K, I, O],
+      timeMode: TimeMode = TimeMode.None())(key: I => K): Dataset[O] = {
+    if (!input.isStreaming)
       org.apache.spark.sql.execution.streaming.state.StateStoreCoordinatorRef
         .forDriver(org.apache.spark.SparkEnv.get,
           org.apache.spark.sql.internal.SQLConf.get)
-    }
+    input.groupByKey(key).transformWithState(processor, timeMode,
+      OutputMode.Append())
+  }
 
   // ----------------------------------------------- arbitrary state (FMGWS)
 
@@ -629,25 +623,35 @@ object Streams {
   /** TRUE epoch micros (getTime is millis; getNanos carries the full
     * sub-second) — the batch twins order by unix_micros, and two
     * same-millisecond events must tie-break the same way in both
-    * engines for the stream ≡ batch contracts to hold. ONE shared def:
-    * the transitions/landmark/attribution/interval-merge processors all
-    * cite the same "(micros, event_id) total order" equivalence, which
-    * is only as strong as all of them using the same conversion.
+    * engines for the stream ≡ batch contracts to hold. Every event-order
+    * processor uses it: the [[UserFold]] skeleton sorts and steps by it,
+    * and [[DedupProcessor]] tie-breaks by it.
     */
   private[graft] def micros(ts: java.sql.Timestamp): Long =
     ts.getTime / 1000L * 1000000L + ts.getNanos / 1000L
 
+  /** x at `dp` decimals, HALF_UP via the double's shortest decimal form —
+    * what Spark's Round computes on DoubleType.
+    */
+  private def halfUp(x: Double, dp: Int): BigDecimal =
+    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP)
+
+  /** A non-null, finite score — the daily monitors skip the rest, as
+    * their batch twins' `WHERE value IS NOT NULL` does (and a NaN/±Inf
+    * from a broken upstream model never lands in an end bin).
+    */
+  private def finite(e: Event): Boolean =
+    e.value != null && java.lang.Double.isFinite(e.value.doubleValue)
+
   /** round(value·100) exactly as the batch twins' SQL round() computes
-    * it: decimal HALF_UP via the double's shortest decimal form (Spark's
-    * Round on DoubleType) — away from zero on .5, where
-    * `math.round` (= floor(x+0.5)) disagrees for negative values.
+    * it ([[halfUp]]) — away from zero on .5, where `math.round`
+    * (= floor(x+0.5)) disagrees for negative values.
     * NULL folds to 0 (q_merge_intervals' coalesce; q_attribution's
     * sum() skips the null term, which adding 0 reproduces).
     */
   private[graft] def cents(v: java.lang.Double): Long =
-    if (v == null) 0L
-    else scala.math.BigDecimal(v.doubleValue * 100)
-      .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
+    if (v == null) 0L else halfUp(v.doubleValue * 100, 0).toLong
+
   case class SessionState(nEvents: Long, total: Double, startMs: Long, lastMs: Long)
   case class SessionOut(user_id: Long, n_events: Long, total: Double,
                         start_ms: Long, end_ms: Long)
@@ -739,12 +743,7 @@ object Streams {
                   math.exp(delta * delta * tauSq / (2.0 * v * (v + tauSq)))
                 runMin = math.min(runMin, math.min(1.0, 1.0 / lam))
                 out += SeqTestOut(day, cna, cnb,
-                  scala.math.BigDecimal(delta / 100.0)
-                    .setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP)
-                    .toDouble,
-                  scala.math.BigDecimal(runMin)
-                    .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP)
-                    .toDouble)
+                  halfUp(delta / 100.0, 4).toDouble, halfUp(runMin, 6).toDouble)
               }
             }
           }
@@ -781,24 +780,9 @@ object Streams {
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator(SessionOut(userId, s.nEvents, s.total, s.startMs, s.lastMs))
+            Iterator(sessionOut(userId, s))
           } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val out = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastMs <= gapMs =>
-                  cur = Some(s.copy(nEvents = s.nEvents + 1,
-                    total = s.total + nz(e.value), lastMs = t))
-                case Some(s) => // gap exceeded: close previous, open new
-                  out += SessionOut(userId, s.nEvents, s.total, s.startMs, s.lastMs)
-                  cur = Some(SessionState(1, nz(e.value), t, t))
-                case None =>
-                  cur = Some(SessionState(1, nz(e.value), t, t))
-              }
-            }
+            val (closed, cur) = foldSessions(userId, gapMs, state.getOption, rows)
             cur.foreach { s =>
               state.update(s)
               // Clamped against the watermark: on THIS Spark, FMGWS under
@@ -814,10 +798,36 @@ object Streams {
               state.setTimeoutTimestamp(
                 math.max(s.lastMs + gapMs, state.getCurrentWatermarkMs() + 1))
             }
-            out.result().iterator
+            closed.iterator
           }
       }
   }
+
+  /** The gap-session fold both sessionizers share: a user's events in
+    * time order extend the open session while each lands within `gapMs`
+    * of its last event; a longer gap closes it (returned) and opens the
+    * next. Returns the closed sessions and the still-open one.
+    */
+  private def foldSessions(userId: Long, gapMs: Long, open: Option[SessionState],
+                           rows: Iterator[Event]): (Seq[SessionOut], Option[SessionState]) = {
+    var cur = open
+    val closed = Seq.newBuilder[SessionOut]
+    rows.toSeq.sortBy(_.ts.getTime).foreach { e =>
+      val t = e.ts.getTime
+      cur = cur match {
+        case Some(s) if t - s.lastMs <= gapMs =>
+          Some(s.copy(nEvents = s.nEvents + 1, total = s.total + nz(e.value),
+            lastMs = t))
+        case _ =>
+          cur.foreach(s => closed += sessionOut(userId, s))
+          Some(SessionState(1, nz(e.value), t, t))
+      }
+    }
+    (closed.result(), cur)
+  }
+
+  private def sessionOut(userId: Long, s: SessionState): SessionOut =
+    SessionOut(userId, s.nEvents, s.total, s.startMs, s.lastMs)
 
   // ------------------------------- arbitrary state (transformWithState)
 
@@ -845,29 +855,15 @@ object Streams {
 
     override def handleInputRows(userId: Long, rows: Iterator[Event],
                                  timerValues: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var cur = if (session.exists()) Some(session.get()) else None
-      val prevTimer = cur.map(_.lastMs + gapMs)
-      val out = Seq.newBuilder[SessionOut]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.lastMs <= gapMs =>
-            cur = Some(s.copy(nEvents = s.nEvents + 1,
-              total = s.total + nz(e.value), lastMs = t))
-          case Some(s) => // gap exceeded within the batch: close, reopen
-            out += SessionOut(userId, s.nEvents, s.total, s.startMs, s.lastMs)
-            cur = Some(SessionState(1, nz(e.value), t, t))
-          case None =>
-            cur = Some(SessionState(1, nz(e.value), t, t))
-        }
-      }
+      val prev = if (session.exists()) Some(session.get()) else None
+      val (closed, cur) = foldSessions(userId, gapMs, prev, rows)
       cur.foreach { s =>
         session.update(s)
-        prevTimer.filter(_ != s.lastMs + gapMs).foreach(getHandle.deleteTimer)
+        prev.map(_.lastMs + gapMs).filter(_ != s.lastMs + gapMs)
+          .foreach(getHandle.deleteTimer)
         getHandle.registerTimer(s.lastMs + gapMs)
       }
-      out.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
@@ -877,7 +873,7 @@ object Streams {
         // guard against a stale timer that predates a session extension
         if (expired.getExpiryTimeInMs() >= s.lastMs + gapMs) {
           session.clear()
-          Iterator(SessionOut(userId, s.nEvents, s.total, s.startMs, s.lastMs))
+          Iterator(sessionOut(userId, s))
         } else Iterator.empty
       } else Iterator.empty
   }
@@ -888,12 +884,8 @@ object Streams {
   def sessionizeTws(events: Dataset[Event], gapMs: Long,
                     watermark: String = "30 minutes"): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    withState(events.withWatermark("ts", watermark), new SessionProcessor(gapMs),
+      TimeMode.EventTime())(_.user_id)
   }
 
   /** First-occurrence dedup with per-key state TTL: a key's "seen" marker
@@ -928,7 +920,7 @@ object Streams {
         // iterator-order-dependent when duplicate deliveries differ in
         // payload) — deterministic across retries and partitionings
         Iterator.single(rows.minBy(e =>
-          (e.ts.getTime, e.user_id, e.event_type, String.valueOf(e.value))))
+          (micros(e.ts), e.user_id, e.event_type, String.valueOf(e.value))))
       }
   }
 
@@ -945,139 +937,127 @@ object Streams {
     */
   def dedupTws(events: Dataset[Event], ttl: java.time.Duration): Dataset[Event] = {
     import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .groupByKey(_.event_id)
-      .transformWithState(new DedupProcessor(ttl),
-        TimeMode.ProcessingTime(), OutputMode.Append())
+    withState(events, new DedupProcessor(ttl), TimeMode.ProcessingTime())(_.event_id)
   }
 
-  // ----------------------------------------------------- streaming funnel
+  // ---------------------------------------------- per-user event-order folds
+
+  /** The per-user event-order fold the funnel, transitions, landmark,
+    * attribution and interval-merge processors share: one ValueState
+    * named `stateName` per user; each batch's rows sort once by the TRUE
+    * (micros, event_id) total order — the batch twins' order, see
+    * [[micros]] — and fold through `step`, which sees the user's state
+    * (None before any is stored), the event and its epoch micros `t`,
+    * and may `emit` an output. A defined state is written back after
+    * the batch. No timers, no TTL.
+    *
+    * Equivalence contract: per-user event-time order across batches —
+    * what a key-partitioned log gives; in-batch disorder is handled by
+    * the sort, cross-batch regressions are not revised (the standard
+    * streaming contract). Under it each fold equals its batch twin,
+    * asserted in StreamsSpec. Needs a column-family state store
+    * (RocksDB), like [[sessionizeTws]].
+    */
+  abstract class UserFold[S, O](stateName: String, stateEncoder: Encoder[S])
+      extends StatefulProcessor[Long, Event, O] {
+    protected def step(user: Long, s: Option[S], e: Event, t: Long,
+                       emit: O => Unit): Option[S]
+
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S](stateName, stateEncoder, TTLConfig.NONE)
+
+    override def handleInputRows(user: Long, rows: Iterator[Event],
+                                 timerValues: TimerValues): Iterator[O] = {
+      var s = if (st.exists()) Option(st.get()) else None
+      val out = Seq.newBuilder[O]
+      rows.map(e => (micros(e.ts), e)).toArray
+        .sortBy { case (t, e) => (t, e.event_id) }
+        .foreach { case (t, e) => s = step(user, s, e, t, out += _) }
+      s.foreach(st.update)
+      out.result().iterator
+    }
+  }
+
+  /** Wire a [[UserFold]]: key the events by user, no watermark. */
+  private def perUser[O <: Product : TypeTag](events: Dataset[Event],
+                                              fold: UserFold[_, O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    withState(events, fold)(_.user_id)
+  }
 
   /** A user advanced to funnel step `step` (1-based) at `ts_ms`. */
   case class StepAdvance(user_id: Long, step: Int, ts_ms: Long)
 
+  /** Each reached step's completion time, epoch micros. */
   private[streaming] case class FunnelState(times: Seq[Long])
 
   /** Streaming twin of [[graft.operators.Funnel]]: per-user state is the
     * first-touch completion time of each step reached so far (O(steps)
     * longs per user — never the events). A user advances when an event
     * of the next step's type arrives strictly after the previous step's
-    * time and within its max gap; each advance emits one [[StepAdvance]]
-    * row, so step counts are a plain aggregate over the emitted stream.
+    * time and within its max gap — both compared in microseconds, as the
+    * batch funnel compares its timestamps; each advance emits one
+    * [[StepAdvance]] row (`ts_ms` = the time floored to milliseconds),
+    * so step counts are a plain aggregate over the emitted stream.
     *
     * Semantics note: the batch funnel is a min over the full history;
-    * the one-pass state machine reproduces it exactly when events arrive
-    * in event-time order (in-batch disorder is handled by sorting each
-    * batch; cross-batch regressions are not revised — the standard
-    * streaming-funnel contract). StreamsSpec asserts stream ≡ batch on
-    * ordered batches. Same RocksDB state-store requirement as
-    * [[sessionizeTws]].
+    * the one-pass state machine reproduces it exactly under the
+    * [[UserFold]] order contract. StreamsSpec asserts stream ≡ batch on
+    * ordered batches and on sub-millisecond times.
     */
   class FunnelProcessor(steps: Seq[(String, Option[Long])])
-    extends StatefulProcessor[Long, Event, StepAdvance] {
-    @transient private var st: ValueState[FunnelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[StepAdvance] = {
-      var times = if (st.exists()) st.get().times.toVector else Vector.empty[Long]
-      val out = Seq.newBuilder[StepAdvance]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-        val next = times.length
-        if (next < steps.length && e.event_type == steps(next)._1) {
-          val t = e.ts.getTime
-          val ok =
-            if (next == 0) true
-            else t > times(next - 1) &&
-              steps(next)._2.forall(g => t <= times(next - 1) + g * 1000L)
-          if (ok) {
-            times = times :+ t
-            out += StepAdvance(userId, next + 1, t)
-          }
-        }
+      extends UserFold[FunnelState, StepAdvance]("funnel", Encoders.product[FunnelState]) {
+    protected def step(user: Long, s: Option[FunnelState], e: Event, t: Long,
+                       emit: StepAdvance => Unit): Option[FunnelState] = {
+      val times = s.fold(Seq.empty[Long])(_.times)
+      val next = times.length
+      val advances = next < steps.length && e.event_type == steps(next)._1 &&
+        (next == 0 || t > times(next - 1) &&
+          steps(next)._2.forall(g => t <= times(next - 1) + g * 1000000L))
+      if (!advances) s
+      else {
+        emit(StepAdvance(user, next + 1, Math.floorDiv(t, 1000L)))
+        Some(FunnelState(times :+ t))
       }
-      if (times.nonEmpty) st.update(FunnelState(times))
-      out.result().iterator
     }
   }
 
-  /** Continuous conversion funnel via `transformWithState` (see
-    * [[FunnelProcessor]]); `steps` are (event_type, maxGapSeconds).
+  /** Continuous conversion funnel (see [[FunnelProcessor]]); `steps` are
+    * (event_type, maxGapSeconds).
     */
   def funnelStream(events: Dataset[Event],
-                   steps: Seq[(String, Option[Long])]): Dataset[StepAdvance] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .groupByKey(_.user_id)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new FunnelProcessor(steps),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  // ------------------------------------------- streaming transitions
+                   steps: Seq[(String, Option[Long])]): Dataset[StepAdvance] =
+    perUser(events, new FunnelProcessor(steps))
 
   /** One observed (from → to) step of a user's event sequence. */
   case class Transition(user_id: Long, from_type: String, to_type: String)
-  private case class LastEvent(t_us: Long, event_id: Long, event_type: String)
+  private[streaming] case class LastEvent(t_us: Long, event_id: Long, event_type: String)
 
-  /** Continuous Markov-transition extraction via `transformWithState` —
-    * the streaming twin of [[graft.operators.Funnel.transitions]]: per
-    * user, a bounded ValueState holds ONLY the last event under the
-    * (micros, event_id) total order; each batch chains its (sorted)
-    * rows onto that state and emits one [[Transition]] per consecutive
-    * pair. Downstream, a trivial `groupBy(from, to).count()` maintains
-    * the live matrix.
-    *
-    * Equivalence contract (same as [[cdcStream]]/[[funnelStream]]):
-    * per-user event-time order across batches — what a key-partitioned
-    * log gives. Under it the stream fold equals the batch operator,
-    * asserted in StreamsSpec. State is one 3-field row per user —
-    * hard-bounded, no sequence buffering.
+  /** Continuous Markov-transition extraction — the streaming twin of
+    * [[graft.operators.Funnel.transitions]]: per user, a bounded
+    * ValueState holds ONLY the last event under the (micros, event_id)
+    * total order; each event chains onto it and emits one
+    * [[Transition]] per consecutive pair. Downstream, a trivial
+    * `groupBy(from, to).count()` maintains the live matrix. State is one
+    * 3-field row per user — hard-bounded, no sequence buffering.
     */
   class TransitionsProcessor
-    extends StatefulProcessor[Long, Event, Transition] {
-    @transient private var st: ValueState[LastEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[LastEvent]("last",
-        Encoders.product[LastEvent], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[Transition] = {
-      var last = if (st.exists()) Option(st.get()) else None
-      val out = Seq.newBuilder[Transition]
-      // micros: the shared object-level def — see its scaladoc
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        last.foreach(l => out += Transition(userId, l.event_type, e.event_type))
-        last = Some(LastEvent(micros(e.ts), e.event_id, e.event_type))
-      }
-      last.foreach(st.update)
-      out.result().iterator
+      extends UserFold[LastEvent, Transition]("last", Encoders.product[LastEvent]) {
+    protected def step(user: Long, s: Option[LastEvent], e: Event, t: Long,
+                       emit: Transition => Unit): Option[LastEvent] = {
+      s.foreach(l => emit(Transition(user, l.event_type, e.event_type)))
+      Some(LastEvent(t, e.event_id, e.event_type))
     }
   }
 
   /** Continuous per-user transition stream (see [[TransitionsProcessor]]). */
-  def transitionsStream(events: Dataset[Event]): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .groupByKey(_.user_id)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new TransitionsProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def transitionsStream(events: Dataset[Event]): Dataset[Transition] =
+    perUser(events, new TransitionsProcessor)
 
   case class LandmarkMatch(user_id: Long, complete_at: Long)
-  private case class LandmarkState(nSeen: Long, stepIdx: Int)
+  private[streaming] case class LandmarkState(nSeen: Long, stepIdx: Int)
 
   /** Continuous ordered-landmark journey matching — the streaming twin
     * of [[graft.operators.Funnel.landmarkSteps]]: per user, CONSTANT
@@ -1088,56 +1068,30 @@ object Streams {
     * need the unbounded sequence; the landmark automaton needs 12
     * bytes per user forever — the difference between a streamable and
     * an unstreamable journey query.
-    *
-    * Equivalence contract (the [[TransitionsProcessor]] one): per-user
-    * event-time order across batches; within a batch rows re-sort by
-    * TRUE (micros, event_id). Stream ≡ batch asserted in StreamsSpec.
     */
   class LandmarkProcessor(steps: Seq[String])
-    extends StatefulProcessor[Long, Event, LandmarkMatch] {
-    @transient private var st: ValueState[LandmarkState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[LandmarkState]("landmark",
-        Encoders.product[LandmarkState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[LandmarkMatch] = {
-      var s = if (st.exists()) st.get() else LandmarkState(0L, 0)
-      val out = Seq.newBuilder[LandmarkMatch]
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        s = s.copy(nSeen = s.nSeen + 1)
-        if (s.stepIdx < steps.length && e.event_type == steps(s.stepIdx)) {
-          s = s.copy(stepIdx = s.stepIdx + 1)
-          if (s.stepIdx == steps.length) // completed NOW — emit once
-            out += LandmarkMatch(userId, s.nSeen)
-        }
-      }
-      st.update(s)
-      out.result().iterator
+      extends UserFold[LandmarkState, LandmarkMatch]("landmark",
+        Encoders.product[LandmarkState]) {
+    protected def step(user: Long, s: Option[LandmarkState], e: Event, t: Long,
+                       emit: LandmarkMatch => Unit): Option[LandmarkState] = {
+      val c = s.getOrElse(LandmarkState(0L, 0))
+      val hit = c.stepIdx < steps.length && e.event_type == steps(c.stepIdx)
+      val n = LandmarkState(c.nSeen + 1, if (hit) c.stepIdx + 1 else c.stepIdx)
+      if (hit && n.stepIdx == steps.length) // completed NOW — emit once
+        emit(LandmarkMatch(user, n.nSeen))
+      Some(n)
     }
   }
 
   /** Continuous landmark-match stream (see [[LandmarkProcessor]]). */
-  def landmarkStream(events: Dataset[Event], steps: Seq[String]): Dataset[LandmarkMatch] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .groupByKey(_.user_id)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new LandmarkProcessor(steps),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  // ------------------------------------------- streaming attribution
+  def landmarkStream(events: Dataset[Event], steps: Seq[String]): Dataset[LandmarkMatch] =
+    perUser(events, new LandmarkProcessor(steps))
 
   /** One purchase credited to the buyer's most recent preceding
     * non-purchase event type. */
   case class Attributed(user_id: Long, purchase_id: Long, channel: String,
                         value_cents: Long)
-  private case class LastChannel(t_us: Long, event_id: Long, channel: String)
+  private[streaming] case class LastChannel(t_us: Long, event_id: Long, channel: String)
 
   /** Continuous last-touch attribution — the streaming twin of the
     * batch `q_attribution` window (IGNORE NULLS last_value over the
@@ -1145,56 +1099,26 @@ object Streams {
     * latest non-purchase event under the (micros, event_id) total
     * order; each purchase emits one [[Attributed]] row crediting that
     * channel. Downstream `groupBy(channel)` count/sum maintains the
-    * live attribution rollup.
-    *
-    * Equivalence contract (the [[TransitionsProcessor]] one): per-user
-    * event-time order across batches; within a batch rows re-sort by
-    * TRUE (micros, event_id). Stream ≡ batch asserted in StreamsSpec.
-    * State is one 3-field row per user — hard-bounded.
+    * live attribution rollup. State is one 3-field row per user.
     */
   class AttributionProcessor
-    extends StatefulProcessor[Long, Event, Attributed] {
-    @transient private var st: ValueState[LastChannel] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[LastChannel]("chan",
-        Encoders.product[LastChannel], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[Attributed] = {
-      var last = if (st.exists()) Option(st.get()) else None
-      val out = Seq.newBuilder[Attributed]
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        if (e.event_type == "purchase")
-          last.foreach(l => out += Attributed(userId, e.event_id, l.channel,
-            cents(e.value)))
-        else
-          last = Some(LastChannel(micros(e.ts), e.event_id, e.event_type))
-      }
-      last.foreach(st.update)
-      out.result().iterator
-    }
+      extends UserFold[LastChannel, Attributed]("chan", Encoders.product[LastChannel]) {
+    protected def step(user: Long, s: Option[LastChannel], e: Event, t: Long,
+                       emit: Attributed => Unit): Option[LastChannel] =
+      if (e.event_type == "purchase") {
+        s.foreach(l => emit(Attributed(user, e.event_id, l.channel, cents(e.value))))
+        s
+      } else Some(LastChannel(t, e.event_id, e.event_type))
   }
 
   /** Continuous attribution stream (see [[AttributionProcessor]]). */
-  def attributionStream(events: Dataset[Event]): Dataset[Attributed] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .groupByKey(_.user_id)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new AttributionProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  // --------------------------------------- streaming interval merge
+  def attributionStream(events: Dataset[Event]): Dataset[Attributed] =
+    perUser(events, new AttributionProcessor)
 
   /** A CLOSED maximal covered span of one user's interval stream. */
   case class MergedInterval(user_id: Long, merged_start: Long,
                             merged_end: Long, n_merged: Long)
-  private case class OpenIsland(start: Long, maxEnd: Long, n: Long)
+  private[streaming] case class OpenIsland(start: Long, maxEnd: Long, n: Long)
 
   /** Continuous gaps-and-islands interval merge — the streaming twin
     * of the batch `q_merge_intervals` window: per user, ONE 3-field
@@ -1202,57 +1126,29 @@ object Streams {
     * end, source count); an interval starting past the open island's
     * end CLOSES it (one emitted [[MergedInterval]]) and opens the
     * next. The final island per user stays open forever (a stream has
-    * no end) — the documented delta vs batch, which emits it.
-    *
-    * Equivalence contract (the [[TransitionsProcessor]] one): per-user
-    * start-time order across batches; within a batch rows re-sort by
-    * (micros, event_id). Stream ≡ batch-minus-last-island asserted in
-    * StreamsSpec. Interval end = micros + round(value·100)·10ms, the
-    * q_merge_intervals construction.
+    * no end) — the documented delta vs batch, which emits it; stream ≡
+    * batch-minus-last-island is asserted in StreamsSpec. Interval
+    * end = micros + round(value·100)·10ms, the q_merge_intervals
+    * construction.
     */
   class IntervalMergeProcessor
-    extends StatefulProcessor[Long, Event, MergedInterval] {
-    @transient private var st: ValueState[OpenIsland] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[OpenIsland]("island",
-        Encoders.product[OpenIsland], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[MergedInterval] = {
-      var open = if (st.exists()) Option(st.get()) else None
-      val out = Seq.newBuilder[MergedInterval]
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        val s = micros(e.ts)
-        val en = s + cents(e.value) * 10000L
-        open match {
-          case Some(isl) if s <= isl.maxEnd =>
-            open = Some(OpenIsland(isl.start, math.max(isl.maxEnd, en),
-              isl.n + 1))
-          case Some(isl) =>
-            out += MergedInterval(userId, isl.start, isl.maxEnd, isl.n)
-            open = Some(OpenIsland(s, en, 1L))
-          case None =>
-            open = Some(OpenIsland(s, en, 1L))
-        }
+      extends UserFold[OpenIsland, MergedInterval]("island", Encoders.product[OpenIsland]) {
+    protected def step(user: Long, s: Option[OpenIsland], e: Event, t: Long,
+                       emit: MergedInterval => Unit): Option[OpenIsland] = {
+      val en = t + cents(e.value) * 10000L
+      s match {
+        case Some(isl) if t <= isl.maxEnd =>
+          Some(OpenIsland(isl.start, math.max(isl.maxEnd, en), isl.n + 1))
+        case _ =>
+          s.foreach(isl => emit(MergedInterval(user, isl.start, isl.maxEnd, isl.n)))
+          Some(OpenIsland(t, en, 1L))
       }
-      open.foreach(st.update)
-      out.result().iterator
     }
   }
 
   /** Continuous interval-merge stream (see [[IntervalMergeProcessor]]). */
-  def intervalMergeStream(events: Dataset[Event]): Dataset[MergedInterval] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .groupByKey(_.user_id)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new IntervalMergeProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def intervalMergeStream(events: Dataset[Event]): Dataset[MergedInterval] =
+    perUser(events, new IntervalMergeProcessor)
 
   // -------------------------------------------- streaming heavy hitters
 
@@ -1326,16 +1222,9 @@ object Streams {
   def heavyHittersStream(tokens: Dataset[String], capacity: Int,
                          shards: Int = 16): Dataset[TokenCount] = {
     import tokens.sparkSession.implicits._
-    ensureStateStoreCoordinator(tokens)
     require(shards > 0, s"shards $shards")
-    tokens
-      .map(t => TokenEvent(math.floorMod(t.hashCode, shards), t))
-      .groupByKey(_.shard)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new HeavyHittersProcessor(capacity),
-        TimeMode.None(), OutputMode.Append())
+    withState(tokens.map(t => TokenEvent(math.floorMod(t.hashCode, shards), t)),
+      new HeavyHittersProcessor(capacity))(_.shard)
   }
 
   // --------------------------------------------------------- streaming CDC
@@ -1399,14 +1288,7 @@ object Streams {
     */
   def cdcStream(changes: Dataset[Change]): Dataset[Applied] = {
     import changes.sparkSession.implicits._
-    ensureStateStoreCoordinator(changes)
-    changes
-      .groupByKey(_.k)
-      // TimeMode.None: no timers, no TTL — and None keeps
-      // processAllAvailable usable (ProcessingTime re-triggers
-      // housekeeping batches; see the minhash twin's note)
-      .transformWithState(new CdcProcessor,
-        TimeMode.None(), OutputMode.Append())
+    withState(changes, new CdcProcessor)(_.k)
   }
 
   // --------------------------------------- streaming per-day quantile bands
@@ -1503,15 +1385,18 @@ object Streams {
       z ^ (z >>> 31)
     }
 
+    /** Fold one value into a register array (mutates `regs`). */
+    def add(regs: Array[Byte], v: Long): Unit = {
+      val h = hash(v)
+      val idx = (h >>> (64 - P)).toInt
+      val rank = (java.lang.Long.numberOfLeadingZeros((h << P) | (1L << (P - 1))) + 1)
+        .toByte
+      if (rank > regs(idx)) regs(idx) = rank
+    }
+
     /** Fold values into a register array (mutates `regs`). */
     def addAll(regs: Array[Byte], values: Iterator[Long]): Unit =
-      values.foreach { v =>
-        val h = hash(v)
-        val idx = (h >>> (64 - P)).toInt
-        val rank = (java.lang.Long.numberOfLeadingZeros((h << P) | (1L << (P - 1))) + 1)
-          .toByte
-        if (rank > regs(idx)) regs(idx) = rank
-      }
+      values.foreach(add(regs, _))
 
     /** Standard HLL estimate with linear counting below 2.5m. */
     def estimate(regs: Array[Byte]): Double = {
@@ -1530,61 +1415,91 @@ object Streams {
     }
   }
 
+  /** The day-closing fold the five per-(event_type, day) monitors
+    * share: one ValueState named `stateName` per key holds the day's
+    * bounded summary. Each batch folds the events the monitor `accepts`
+    * into it (`add` may mutate and return the summary) and, if it took
+    * any, stores it and re-arms the day-end event-time timer —
+    * idempotently: the expiry is a pure function of the key's day, so
+    * every batch registers the same instant. When the watermark passes
+    * the day end, the timer clears the state and emits `close` exactly
+    * once. Needs a column-family state store (RocksDB), like
+    * [[sessionizeTws]].
+    */
+  abstract class DailyFold[S, O](stateName: String, stateEncoder: Encoder[S])
+      extends StatefulProcessor[(String, Long), Event, O] {
+    protected def empty: S
+    protected def accepts(e: Event): Boolean
+    protected def add(s: S, e: Event): S
+    protected def close(eventType: String, day: Long, s: S): Iterator[O]
+
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S](stateName, stateEncoder, TTLConfig.NONE)
+
+    override def handleInputRows(key: (String, Long), rows: Iterator[Event],
+                                 timerValues: TimerValues): Iterator[O] = {
+      var s = if (st.exists()) st.get() else empty
+      var touched = false
+      rows.foreach(e => if (accepts(e)) { s = add(s, e); touched = true })
+      if (touched) {
+        st.update(s)
+        getHandle.registerTimer((key._2 + 1) * 86400000L)
+      }
+      Iterator.empty
+    }
+
+    override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
+                                    expired: ExpiredTimerInfo): Iterator[O] =
+      if (st.exists()) {
+        val s = st.get()
+        st.clear()
+        close(key._1, key._2, s)
+      } else Iterator.empty
+  }
+
+  /** Wire a [[DailyFold]] monitor: watermark the events, key them by
+    * (event_type, epoch day) and run the monitor in event time.
+    */
+  private def daily[O <: Product : TypeTag](events: Dataset[Event], watermark: String,
+                                            monitor: DailyFold[_, O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    withState(events.withWatermark("ts", watermark), monitor, TimeMode.EventTime())(
+      e => (e.event_type, Math.floorDiv(e.ts.getTime, 86400000L)))
+  }
+
   /** One watermark-closed per-day distinct-user estimate. */
   case class DistinctCount(event_type: String, day_num: Long, est_users: Long)
 
   /** Daily distinct users ON the stream — the deployment shape of the
     * batch approx-distinct surface (q_approx_distinct / per-day
     * count(DISTINCT user_id)): one [[Hll]] register set per
-    * (event_type, day) key in `transformWithState` ValueState — m bytes
-    * of state per open day, never the day's user set — and an
-    * event-time timer emits the day's estimate exactly once as the
-    * watermark closes it. StreamsSpec asserts the estimate within the
-    * sketch's error band of the exact per-day distinct and the
-    * exactly-once emission. Same RocksDB requirement as
-    * [[sessionizeTws]].
+    * (event_type, day) key — m bytes of state per open day, never the
+    * day's user set — emitted as an estimate exactly once as the
+    * watermark closes the day. StreamsSpec asserts the estimate within
+    * the sketch's error band of the exact per-day distinct and the
+    * exactly-once emission.
     */
   class DailyDistinctProcessor
-    extends StatefulProcessor[(String, Long), Event, DistinctCount] {
-    @transient private var st: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Array[Byte]]("hll",
-        Encoders.BINARY, TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[DistinctCount] = {
-      val regs: Array[Byte] =
-        if (st.exists()) st.get() else new Array[Byte](Hll.M)
-      Hll.addAll(regs, rows.map(_.user_id))
-      st.update(regs)
-      getHandle.registerTimer((key._2 + 1) * 86400000L) // idempotent re-arm
-      Iterator.empty
+      extends DailyFold[Array[Byte], DistinctCount]("hll", Encoders.BINARY) {
+    protected def empty: Array[Byte] = new Array[Byte](Hll.M)
+    protected def accepts(e: Event): Boolean = true
+    protected def add(regs: Array[Byte], e: Event): Array[Byte] = {
+      Hll.add(regs, e.user_id)
+      regs
     }
-
-    override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[DistinctCount] =
-      if (st.exists()) {
-        val regs = st.get()
-        st.clear()
-        Iterator.single(DistinctCount(key._1, key._2,
-          math.rint(Hll.estimate(regs)).toLong))
-      } else Iterator.empty
+    protected def close(eventType: String, day: Long,
+                        regs: Array[Byte]): Iterator[DistinctCount] =
+      Iterator.single(DistinctCount(eventType, day, math.rint(Hll.estimate(regs)).toLong))
   }
 
   /** Watermark-closed daily distinct-user estimates (see
     * [[DailyDistinctProcessor]]).
     */
   def dailyDistinctStream(events: Dataset[Event],
-                          watermark: String = "10 minutes"): Dataset[DistinctCount] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts.getTime, 86400000L)))
-      .transformWithState(new DailyDistinctProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+                          watermark: String = "10 minutes"): Dataset[DistinctCount] =
+    daily(events, watermark, new DailyDistinctProcessor)
 
   /** One watermark-closed per-day quantile band. */
   case class QuantileBand(event_type: String, day_num: Long, n: Long,
@@ -1594,64 +1509,30 @@ object Streams {
     * the batch q_daily_percentiles (which re-sorts each closed day) and
     * the streaming sibling of the batch sketch surface
     * (q_approx_quantile): one bounded [[Gk]] summary per
-    * (event_type, day) key in `transformWithState` ValueState, inserts
-    * folded per batch, and an event-time timer emits the day's
-    * (n, p50, p95) band exactly once when the watermark passes the day
-    * end — each percentile within εn RANK error of the exact answer
-    * (asserted against per-day exact sorts in StreamsSpec), with
-    * per-open-day state O((1/ε)·log(εn)) instead of the day's values.
-    * NULL values are skipped exactly as the batch query's
-    * `WHERE value IS NOT NULL`. Same RocksDB state-store requirement as
-    * [[sessionizeTws]].
+    * (event_type, day) key, and the day's (n, p50, p95) band emits
+    * exactly once when the watermark passes the day end — each
+    * percentile within εn RANK error of the exact answer (asserted
+    * against per-day exact sorts in StreamsSpec), with per-open-day
+    * state O((1/ε)·log(εn)) instead of the day's values. NULL values
+    * are skipped exactly as the batch query's `WHERE value IS NOT NULL`.
     */
   class DailyQuantileProcessor(eps: Double)
-    extends StatefulProcessor[(String, Long), Event, QuantileBand] {
+      extends DailyFold[Gk.S, QuantileBand]("gk", Encoders.product[Gk.S]) {
     require(eps > 0 && eps < 0.5, s"eps $eps outside (0, 0.5)")
-    @transient private var st: ValueState[Gk.S] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Gk.S]("gk", Encoders.product[Gk.S],
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[QuantileBand] = {
-      var s = if (st.exists()) st.get() else Gk.empty
-      var touched = false
-      rows.foreach { e =>
-        if (e.value != null) { s = Gk.insert(s, e.value.doubleValue, eps); touched = true }
-      }
-      if (touched) {
-        st.update(s)
-        // idempotent re-arm: the expiry is a pure function of the key's
-        // day, so every batch registers the same instant
-        getHandle.registerTimer((key._2 + 1) * 86400000L)
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[QuantileBand] =
-      if (st.exists()) {
-        val s = st.get()
-        st.clear()
-        Iterator.single(QuantileBand(key._1, key._2, s.n,
-          Gk.query(s, 0.5, eps), Gk.query(s, 0.95, eps)))
-      } else Iterator.empty
+    protected def empty: Gk.S = Gk.empty
+    protected def accepts(e: Event): Boolean = e.value != null
+    protected def add(s: Gk.S, e: Event): Gk.S = Gk.insert(s, e.value.doubleValue, eps)
+    protected def close(eventType: String, day: Long, s: Gk.S): Iterator[QuantileBand] =
+      Iterator.single(QuantileBand(eventType, day, s.n,
+        Gk.query(s, 0.5, eps), Gk.query(s, 0.95, eps)))
   }
 
   /** Watermark-closed daily percentile bands (see
     * [[DailyQuantileProcessor]]).
     */
   def dailyPercentilesStream(events: Dataset[Event], eps: Double = 0.01,
-                             watermark: String = "10 minutes"): Dataset[QuantileBand] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts.getTime, 86400000L)))
-      .transformWithState(new DailyQuantileProcessor(eps),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+                             watermark: String = "10 minutes"): Dataset[QuantileBand] =
+    daily(events, watermark, new DailyQuantileProcessor(eps))
 
   /** One watermark-closed per-day drift row. */
   case class PsiRow(event_type: String, day_num: Long, n: Long,
@@ -1665,81 +1546,48 @@ object Streams {
     * drift surface (q_psi / Stats.psi): the reference bin counts (a
     * trained model's validation-set histogram) ride in the closure as a
     * small per-task constant, and the stream keeps ONE bins-long count
-    * array per (event_type, day) key in `transformWithState` ValueState
-    * — 8·bins bytes per open day, never the day's scores. An event-time
-    * timer emits the day's (n, n_bins, psi) exactly once when the
-    * watermark passes the day end. The PSI arithmetic is the batch
-    * operator's, term for term: values bin by equal width over
+    * array per (event_type, day) key — 8·bins bytes per open day, never
+    * the day's scores — emitting the day's (n, n_bins, psi) exactly
+    * once when the watermark passes the day end. The PSI arithmetic is
+    * the batch operator's, term for term: values bin by equal width over
     * [lo, hi) with the end bins absorbing outliers, bins present in
     * NEITHER side are excluded from n_bins exactly as the batch
     * group-by drops them, both sides take the same +1/(total+bins)
     * Laplace smoothing, and the result rounds HALF_UP to 6 decimals as
     * Spark's `round` does — stream ≡ batch is asserted day-for-day in
-    * StreamsSpec. NULL scores are skipped like the batch query's
-    * `WHERE value IS NOT NULL`, and non-finite scores (NaN/±Inf from a
-    * broken upstream model) are skipped the same way rather than
-    * silently landing in an end bin (`floor(NaN).toInt` is 0 — a NaN
-    * flood would otherwise masquerade as low-score drift). Same RocksDB
-    * state-store requirement as [[sessionizeTws]].
+    * StreamsSpec. NULL and non-finite scores are skipped ([[finite]]).
     */
   class DailyPsiProcessor(refCounts: Array[Long], lo: Double, hi: Double)
-    extends StatefulProcessor[(String, Long), Event, PsiRow] {
+      extends DailyFold[PsiCounts, PsiRow]("psi", Encoders.product[PsiCounts]) {
     private val bins = refCounts.length
     require(bins > 0, "dailyPsiStream: the reference histogram is empty")
     require(hi > lo, s"dailyPsiStream: bad score range [$lo, $hi)")
-    @transient private var st: ValueState[PsiCounts] = _
 
-    private def binOf(v: Double): Int = {
-      val b = math.floor((v - lo) / (hi - lo) * bins).toInt
-      math.min(bins - 1, math.max(0, b))
+    protected def empty: PsiCounts = PsiCounts(new Array[Long](bins))
+    protected def accepts(e: Event): Boolean = finite(e)
+    protected def add(s: PsiCounts, e: Event): PsiCounts = {
+      val b = math.floor((e.value.doubleValue - lo) / (hi - lo) * bins).toInt
+      s.counts(math.min(bins - 1, math.max(0, b))) += 1L
+      s
     }
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PsiCounts]("psi",
-        Encoders.product[PsiCounts], TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[PsiRow] = {
-      val counts: Array[Long] =
-        if (st.exists()) st.get().counts else new Array[Long](bins)
-      var touched = false
-      rows.foreach { e =>
-        if (e.value != null && java.lang.Double.isFinite(e.value.doubleValue)) {
-          counts(binOf(e.value.doubleValue)) += 1L
-          touched = true
+    protected def close(eventType: String, day: Long, s: PsiCounts): Iterator[PsiRow] = {
+      val tb = refCounts.sum
+      val tc = s.counts.sum
+      var nBins = 0L
+      var psi = 0.0
+      var i = 0
+      while (i < bins) {
+        // a bin empty on BOTH sides never reaches the batch group-by
+        if (refCounts(i) > 0 || s.counts(i) > 0) {
+          nBins += 1
+          val p = (refCounts(i) + 1).toDouble / (tb + bins)
+          val q = (s.counts(i) + 1).toDouble / (tc + bins)
+          psi += (p - q) * math.log(p / q)
         }
+        i += 1
       }
-      if (touched) {
-        st.update(PsiCounts(counts))
-        getHandle.registerTimer((key._2 + 1) * 86400000L) // idempotent re-arm
-      }
-      Iterator.empty
+      Iterator.single(PsiRow(eventType, day, tc, nBins, halfUp(psi, 6).toDouble))
     }
-
-    override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[PsiRow] =
-      if (st.exists()) {
-        val day = st.get().counts
-        st.clear()
-        val tb = refCounts.sum
-        val tc = day.sum
-        var nBins = 0L
-        var s = 0.0
-        var i = 0
-        while (i < bins) {
-          // a bin empty on BOTH sides never reaches the batch group-by
-          if (refCounts(i) > 0 || day(i) > 0) {
-            nBins += 1
-            val p = (refCounts(i) + 1).toDouble / (tb + bins)
-            val q = (day(i) + 1).toDouble / (tc + bins)
-            s += (p - q) * math.log(p / q)
-          }
-          i += 1
-        }
-        val rounded = BigDecimal(s)
-          .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-        Iterator.single(PsiRow(key._1, key._2, tc, nBins, rounded))
-      } else Iterator.empty
   }
 
   /** Watermark-closed daily PSI vs a fixed reference histogram (see
@@ -1747,15 +1595,8 @@ object Streams {
     */
   def dailyPsiStream(events: Dataset[Event], refCounts: Array[Long],
                      lo: Double, hi: Double,
-                     watermark: String = "10 minutes"): Dataset[PsiRow] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts.getTime, 86400000L)))
-      .transformWithState(new DailyPsiProcessor(refCounts, lo, hi),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+                     watermark: String = "10 minutes"): Dataset[PsiRow] =
+    daily(events, watermark, new DailyPsiProcessor(refCounts, lo, hi))
 
   case class CalibRow(event_type: String, day_num: Long, bin: Long, n: Long,
                       n_pos: Long, mean_score: Double, pos_rate: Double)
@@ -1774,8 +1615,8 @@ object Streams {
     * "does the score still MEAN what it claims?" (per-bin positive rate
     * vs mean score). State is three bins-long long arrays per
     * (event_type, day) key — 24·bins bytes per open day, never the
-    * day's scores — and an event-time timer emits the day's observed
-    * bins exactly once when the watermark passes the day end.
+    * day's scores — and the day's observed bins emit exactly once when
+    * the watermark passes the day end.
     *
     * Arithmetic is the batch operator's term for term: bin =
     * min(⌊u·bins/10^scaleDp⌋, bins−1) on the pre-rounded integer units
@@ -1794,63 +1635,34 @@ object Streams {
     * array cannot index; the spec feeds the shared [0, 1) domain).
     * `labelOf` extracts the ground-truth label from the event (the
     * production record carries it; the fixed [[Event]] envelope does
-    * not). Same RocksDB state-store requirement as [[sessionizeTws]].
+    * not).
     */
   class DailyCalibrationProcessor(labelOf: Event => Boolean, bins: Int,
                                   scaleDp: Int)
-    extends StatefulProcessor[(String, Long), Event, CalibRow] {
+      extends DailyFold[CalibCounts, CalibRow]("calib", Encoders.product[CalibCounts]) {
     require(bins > 0, "dailyCalibrationStream: bins must be positive")
     private val unit = math.pow(10.0, scaleDp)
-    @transient private var st: ValueState[CalibCounts] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CalibCounts]("calib",
-        Encoders.product[CalibCounts], TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[CalibRow] = {
-      val c: CalibCounts =
-        if (st.exists()) st.get()
-        else CalibCounts(new Array[Long](bins), new Array[Long](bins),
-          new Array[Long](bins))
-      var touched = false
-      rows.foreach { e =>
-        if (e.value != null && java.lang.Double.isFinite(e.value.doubleValue)
-            && e.value.doubleValue >= 0.0) {
-          val v = e.value.doubleValue
-          val u = BigDecimal(v * unit)
-            .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
-          // exact integer binning on the pre-rounded units, term for term
-          // with the batch operator's fix: floor(v·bins) in double
-          // misplaces exact boundary scores (0.3·10 floors into bin 2)
-          val b = math.min(bins - 1L,
-            math.floor(u.toDouble * bins / unit).toLong).toInt
-          c.n(b) += 1L
-          c.su(b) += u
-          if (labelOf(e)) c.npos(b) += 1L
-          touched = true
-        }
-      }
-      if (touched) {
-        st.update(c)
-        getHandle.registerTimer((key._2 + 1) * 86400000L) // idempotent re-arm
-      }
-      Iterator.empty
+    protected def empty: CalibCounts = CalibCounts(new Array[Long](bins),
+      new Array[Long](bins), new Array[Long](bins))
+    protected def accepts(e: Event): Boolean = finite(e) && e.value.doubleValue >= 0.0
+    protected def add(c: CalibCounts, e: Event): CalibCounts = {
+      val u = halfUp(e.value.doubleValue * unit, 0).toLong
+      // exact integer binning on the pre-rounded units, term for term
+      // with the batch operator's fix: floor(v·bins) in double
+      // misplaces exact boundary scores (0.3·10 floors into bin 2)
+      val b = math.min(bins - 1L, math.floor(u.toDouble * bins / unit).toLong).toInt
+      c.n(b) += 1L
+      c.su(b) += u
+      if (labelOf(e)) c.npos(b) += 1L
+      c
     }
-
-    override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[CalibRow] =
-      if (st.exists()) {
-        val c = st.get()
-        st.clear()
-        def r6(x: Double): Double = BigDecimal(x)
-          .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-        (0 until bins).iterator.filter(c.n(_) > 0L).map { b =>
-          CalibRow(key._1, key._2, b.toLong, c.n(b), c.npos(b),
-            r6(c.su(b).toDouble / c.n(b) / unit),
-            r6(c.npos(b).toDouble / c.n(b)))
-        }
-      } else Iterator.empty
+    protected def close(eventType: String, day: Long, c: CalibCounts): Iterator[CalibRow] =
+      (0 until bins).iterator.filter(c.n(_) > 0L).map { b =>
+        CalibRow(eventType, day, b.toLong, c.n(b), c.npos(b),
+          halfUp(c.su(b).toDouble / c.n(b) / unit, 6).toDouble,
+          halfUp(c.npos(b).toDouble / c.n(b), 6).toDouble)
+      }
   }
 
   /** Watermark-closed daily calibration reliability table (see
@@ -1858,15 +1670,8 @@ object Streams {
     */
   def dailyCalibrationStream(events: Dataset[Event], labelOf: Event => Boolean,
                              bins: Int, scaleDp: Int = 4,
-                             watermark: String = "10 minutes"): Dataset[CalibRow] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts.getTime, 86400000L)))
-      .transformWithState(new DailyCalibrationProcessor(labelOf, bins, scaleDp),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+                             watermark: String = "10 minutes"): Dataset[CalibRow] =
+    daily(events, watermark, new DailyCalibrationProcessor(labelOf, bins, scaleDp))
 
   case class AucRow(event_type: String, day_num: Long, n_pos: Long,
                     n_neg: Long, auc: Double)
@@ -1897,66 +1702,41 @@ object Streams {
     * domain contract of [[DailyCalibrationProcessor]] — the batch
     * operator accepts any score domain, but a fixed-width unit array
     * cannot; round through `scaleDp` decimals first, as q_auc's
-    * declared input does). Same RocksDB state-store requirement as
-    * [[sessionizeTws]].
+    * declared input does).
     */
   class DailyAucProcessor(labelOf: Event => Boolean, scaleDp: Int)
-    extends StatefulProcessor[(String, Long), Event, AucRow] {
+      extends DailyFold[AucCounts, AucRow]("auc", Encoders.product[AucCounts]) {
     require(scaleDp >= 1 && scaleDp <= 6,
       s"dailyAucStream: scaleDp $scaleDp outside [1, 6] — state is " +
         "16*(10^scaleDp+1) bytes per open day")
     private val units = math.pow(10.0, scaleDp).toInt + 1
-    @transient private var st: ValueState[AucCounts] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AucCounts]("auc",
-        Encoders.product[AucCounts], TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[AucRow] = {
-      val c: AucCounts =
-        if (st.exists()) st.get()
-        else AucCounts(new Array[Long](units), new Array[Long](units))
-      var touched = false
-      rows.foreach { e =>
-        if (e.value != null && java.lang.Double.isFinite(e.value.doubleValue)
-            && e.value.doubleValue >= 0.0 && e.value.doubleValue <= 1.0) {
-          val u = BigDecimal(e.value.doubleValue * (units - 1))
-            .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toInt
-          if (labelOf(e)) c.npos(u) += 1L else c.nneg(u) += 1L
-          touched = true
-        }
-      }
-      if (touched) {
-        st.update(c)
-        getHandle.registerTimer((key._2 + 1) * 86400000L) // idempotent re-arm
-      }
-      Iterator.empty
+    protected def empty: AucCounts = AucCounts(new Array[Long](units), new Array[Long](units))
+    protected def accepts(e: Event): Boolean =
+      finite(e) && e.value.doubleValue >= 0.0 && e.value.doubleValue <= 1.0
+    protected def add(c: AucCounts, e: Event): AucCounts = {
+      val u = halfUp(e.value.doubleValue * (units - 1), 0).toInt
+      if (labelOf(e)) c.npos(u) += 1L else c.nneg(u) += 1L
+      c
     }
-
-    override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[AucRow] =
-      if (st.exists()) {
-        val c = st.get()
-        st.clear()
-        var cumnn = 0L
-        var u2 = 0L
-        var np = 0L
-        var nn = 0L
-        var u = 0
-        while (u < units) {
-          u2 += c.npos(u) * (2L * cumnn + c.nneg(u))
-          cumnn += c.nneg(u)
-          np += c.npos(u)
-          nn += c.nneg(u)
-          u += 1
-        }
-        if (np > 0L && nn > 0L) {
-          val auc = BigDecimal(u2.toDouble / (2.0 * np * nn))
-            .setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-          Iterator.single(AucRow(key._1, key._2, np, nn, auc))
-        } else Iterator.empty
-      } else Iterator.empty
+    protected def close(eventType: String, day: Long, c: AucCounts): Iterator[AucRow] = {
+      var cumnn = 0L
+      var u2 = 0L
+      var np = 0L
+      var nn = 0L
+      var u = 0
+      while (u < units) {
+        u2 += c.npos(u) * (2L * cumnn + c.nneg(u))
+        cumnn += c.nneg(u)
+        np += c.npos(u)
+        nn += c.nneg(u)
+        u += 1
+      }
+      if (np > 0L && nn > 0L)
+        Iterator.single(AucRow(eventType, day, np, nn,
+          halfUp(u2.toDouble / (2.0 * np * nn), 4).toDouble))
+      else Iterator.empty
+    }
   }
 
   /** Watermark-closed daily exact ROC-AUC (see [[DailyAucProcessor]]).
@@ -1990,8 +1770,6 @@ object Streams {
                      expectedTypes: Long = 1000L,
                      openDaysBound: Int = 2,
                      maxStateBytes: Long = 8L << 30): Dataset[AucRow] = {
-    import events.sparkSession.implicits._
-    ensureStateStoreCoordinator(events)
     require(expectedTypes > 0 && openDaysBound > 0 && maxStateBytes > 0,
       s"dailyAucStream: expectedTypes=$expectedTypes openDaysBound=" +
         s"$openDaysBound maxStateBytes=$maxStateBytes must all be positive")
@@ -2005,10 +1783,6 @@ object Streams {
         "per dp), pre-bucket event types, or raise maxStateBytes " +
         "deliberately (RocksDB spills past memory; this is the " +
         "degradation-is-a-choice line)")
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts.getTime, 86400000L)))
-      .transformWithState(new DailyAucProcessor(labelOf, scaleDp),
-        TimeMode.EventTime(), OutputMode.Append())
+    daily(events, watermark, new DailyAucProcessor(labelOf, scaleDp))
   }
 }

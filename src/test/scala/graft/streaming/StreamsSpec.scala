@@ -878,6 +878,33 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
+  test("funnelStream: sub-millisecond times order and gap-check in microseconds, like the batch funnel") {
+    def at(us: Long): Timestamp = {
+      val t = new Timestamp(us / 1000L)
+      t.setNanos((us % 1000000L * 1000L).toInt)
+      t
+    }
+    // u10: view and click inside ONE millisecond, the click 500 µs later;
+    // u20: the click lands 1,000,999 µs after the view — past the 1 s gap,
+    // though the millisecond stamps are exactly 1 s apart
+    val events = Seq(
+      Event(1L, at(100L), 10L, "view", 0.0),
+      Event(2L, at(600L), 10L, "click", 0.0),
+      Event(3L, at(1000L), 20L, "view", 0.0),
+      Event(4L, at(1001999L), 20L, "click", 0.0))
+    val advances = funnelStream(events.toDS(),
+      Seq("view" -> None, "click" -> Some(1L))).collect()
+    advances.map(a => (a.user_id, a.step, a.ts_ms)).toSet shouldBe
+      Set((10L, 1, 0L), (10L, 2, 0L), (20L, 1, 1L))
+    val streamCounts = advances.groupBy(_.step).view.mapValues(_.size.toLong).toMap
+    val batchCounts = graft.operators.Funnel.funnel(
+        events.toDF(), "user_id", "ts", "event_type",
+        Seq(graft.operators.Funnel.Step("view"),
+          graft.operators.Funnel.Step("click", Some(1L))))
+      .select("step", "n_users").as[(Int, Long)].collect().toMap
+    streamCounts shouldBe batchCounts.filter(_._2 > 0L)
+  }
+
   test("heavyHittersStream: exact-regime stream fold equals plain counts across batches") {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
