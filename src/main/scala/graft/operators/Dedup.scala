@@ -58,25 +58,11 @@ object Dedup {
     transform(sequence(lit(0), lit(numHashes - 1)),
       i => array_min(transform(shingleCol, s => xxhash64(i, s))))
 
-  /** LSH band keys: split the signature into `bands` bands of
-    * `rowsPerBand` values and hash each band. Two docs collide in a band
-    * iff that band of the signature matches exactly.
-    */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"), xxhash64(concat_ws(",",
-        slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))).cast("string")).as("bkey")))
-
-  /** Estimated Jaccard from two signatures: fraction of equal positions
-    * (native kernel; HOF form kept as documentation below).
+  /** Estimated Jaccard from two signatures: the fraction of equal
+    * positions (native kernel).
     */
   def estJaccard(sigA: Column, sigB: Column): Column =
     DedupExpr.sigAgreement(sigA, sigB)
-
-  /** The composed HOF form of [[estJaccard]]. */
-  def estJaccardComposed(sigA: Column, sigB: Column): Column =
-    size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x))
-      .cast("double") / size(sigA)
 
   /** MinHash+LSH near-duplicate pairs.
     *
@@ -402,12 +388,12 @@ object Dedup {
     * canonical set at the fixpoint, see the in-body proofs), so a round
     * is exactly TWO exchanges. Convergence = the edge bag's
     * (count, hash-sum) signature repeating between consecutive rounds;
-    * at the fixpoint every edge is (componentMin, v). Rounds execute in
-    * two-round strides with ONE driver action per stride (a union of
-    * the per-round signature aggregates). Every round's edges are a
-    * [[Lineage.cut]] (reliable when `reliable`), and once a stride's
-    * action has computed its cuts, the previous stride's are released,
-    * so the blocks held stay constant however many rounds run.
+    * at the fixpoint every edge is (componentMin, v). The rounds run on
+    * [[Fixpoint.converge]]: two-round strides with ONE driver action per
+    * stride (a union of the per-round signature aggregates). Every
+    * round's edges are a [[Lineage.cut]] (reliable when `reliable`), and
+    * once a stride's action has computed its cuts, the older ones are
+    * released, so the blocks held stay constant however many rounds run.
     *
     * Returns (labels, roundsRun): labels covers every endpoint of the
     * input (self-loop-only nodes label themselves). `roundsRun` counts
@@ -419,22 +405,17 @@ object Dedup {
     */
   private[graft] def clustersStarWithRounds(p: DataFrame, maxIters: Int,
                                             reliable: Boolean): (DataFrame, Int) = {
-    // every round's cut is computed by the caller's next action (the
-    // per-stride signature aggregate), so a round costs ZERO standalone
-    // actions (at test scale each action is a fixed job-latency tax)
-    def cut(df: DataFrame): DataFrame =
-      Lineage.cut(df, "Dedup.clustersStarWithRounds.edges", reliable)
     // NOT materialized: consumed exactly once by the final label join,
     // and its input p is already a checkpoint — an eager distinct here
     // was one more job + exchange ahead of the loop for no reuse.
     val nodes = p.select(col("src").as("id"))
       .unionAll(p.select(col("dst").as("id"))).distinct()
-    // canonical starting set: distinct (lo, hi), lo < hi — LAZY: the
-    // initial signature below is the action that computes it (and p).
-    var edges = cut(p.where(col("src") =!= col("dst"))
+    // canonical starting set: distinct (lo, hi), lo < hi — the loop cuts
+    // it lazily, and its first signature action computes it (and p).
+    val start = p.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("lo"),
         greatest(col("src"), col("dst")).as("hi"))
-      .distinct())
+      .distinct()
 
     // Star shape (r16): each star op is ONE exchange keyed by its
     // grouping vertex + ONE streaming window — the group minimum is
@@ -493,45 +474,15 @@ object Dedup {
           s => s.getField("_keep"))).as("_e"))
         .select(col("_e.lo").as("lo"), col("_e.hi").as("hi"))
     }
-    // One (count, multiset-hash) signature PER checkpoint of a stride,
-    // evaluated in a SINGLE action (a union of the per-checkpoint
-    // aggregates): the bag is unchanged between consecutive rounds iff
-    // the canonical set reached its fixpoint one round earlier (the
-    // small-star collapse argument above), so comparing CONSECUTIVE
-    // signatures keeps the original convergence criterion while paying
-    // one driver action per TWO rounds. The first branch's scan also
-    // computes the shared upstream checkpoint blocks (BlockManager's
-    // per-block write lock serializes concurrent same-partition
-    // computes, so each round's edges compute exactly once).
-    // Summands bounded < 2^40 so the ANSI-mode sum cannot overflow
-    // below ~8M billion edges.
-    def sigAgg(e: DataFrame, tag: Int): DataFrame =
-      e.agg(count(lit(1)).as("_c"),
-          sum(pmod(xxhash64(col("lo"), col("hi")), lit(1L << 40))).as("_s"))
-        .select(lit(tag).as("_i"), col("_c"), col("_s"))
-    def signatures(es: Seq[DataFrame]): Seq[(Long, Long)] =
-      es.zipWithIndex.map((sigAgg _).tupled).reduce(_.unionAll(_))
-        .collect().sortBy(_.getInt(0))
-        .map(r => (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))).toSeq
-
-    var sig = signatures(Seq(edges)).head // materializes the lazy start
-    var rounds = 0
-    var converged = sig._1 == 0L // empty edge set: nothing to propagate
-    while (!converged && rounds < maxIters) {
-      // a stride of (up to) two rounds per driver action: each round's
-      // edges are a lazy checkpoint; the stride's signature union is
-      // the action that computes all of them
-      val step = math.min(2, maxIters - rounds)
-      val stride = Iterator.iterate(cut(smallStar(largeStar(edges))))(
-        prev => cut(smallStar(largeStar(prev)))).take(step).toSeq
-      val sigs = signatures(stride)
-      converged = (sig +: sigs).sliding(2).exists(w => w(0) == w(1))
-      // the signature action computed every cut of the stride, so only
-      // stride.last is still read: the older blocks are dead
-      (edges +: stride.init).foreach(Lineage.release)
-      edges = stride.last
-      sig = sigs.last
-      rounds += step
+    // (count, multiset-hash) signature of the edge bag, which repeats
+    // between consecutive rounds iff the canonical set reached its
+    // fixpoint one round earlier (the small-star collapse argument
+    // above). Summands bounded < 2^40 so the ANSI-mode sum cannot
+    // overflow below ~8M billion edges.
+    val (edges, rounds) = Fixpoint.converge(start, maxIters,
+        "Dedup.clustersStarWithRounds.edges", reliable)(
+        _.agg(count(lit(1)), sum(pmod(xxhash64(col("lo"), col("hi")), lit(1L << 40))))) {
+      (e, _) => smallStar(largeStar(e))
     }
     val labels = nodes
       .join(edges.select(col("hi").as("id"), col("lo").as("label")),

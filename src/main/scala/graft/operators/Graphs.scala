@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,48 +17,19 @@ object Graphs {
     * pr_{t+1}(v) = (1−d)·𝟙[v=s] + d·Σ_{u→v} pr_t(u)/outdeg(u). The
     * similarity-graph retrieval primitive ("documents related to THIS
     * one, weighted by walk probability") behind graph-expanded recall.
-    * Same bit-reproducible ordered-sum machinery, per-round shuffle
-    * shape, and lineage discipline as [[pageRank]]; oracle-checkable by
-    * the same unrolled float-structurally-identical CTEs.
+    * It runs [[pageRank]]'s power-iteration body with its own seed and
+    * base term, so the same unrolled float-structurally-identical CTEs
+    * check it.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            sourceId: Long, iters: Int = 3,
-                           damping: Double = 0.85,
-                           checkpointInterval: Int = 2): DataFrame = {
-    require(iters >= 0, s"iters $iters")
-    require(checkpointInterval >= 1, s"checkpointInterval $checkpointInterval")
-    val e = Lineage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
-      "Graphs.personalizedPageRank.edges")
-    val nodes = Lineage.cut(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct(),
-      "Graphs.personalizedPageRank.nodes")
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
-    val withDeg = Lineage.cut(e.join(deg, Seq("src")),
-      "Graphs.personalizedPageRank.withDeg")
-    val base = when(col("id") === sourceId, lit(1.0) - lit(damping))
-      .otherwise(lit(0.0))
-    var pr = nodes.select(col("id"),
-      when(col("id") === sourceId, lit(1.0)).otherwise(lit(0.0)).as("pr"))
-    for (i <- 0 until iters) {
-      val raw = withDeg
-        .join(pr, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("pr") / col("_d")).as("c"))
-        .unionAll(nodes.select(col("id"), lit(0.0).as("c")))
-      // ordered-sum fold (see pageRank): bit-reproducible contributions
-      val w = Window.partitionBy(col("id")).orderBy(col("c"))
-      val wAll = w.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      val contribs = raw.select(col("id"), sum(col("c")).over(wAll).as("_in"),
-          row_number().over(w).as("_rn"))
-        .where(col("_rn") === 1)
-        .select(col("id"), col("_in"))
-      pr = contribs.select(col("id"),
-        (base + col("_in") * lit(damping)).as("pr"))
-      if ((i + 1) % checkpointInterval == 0 && i + 1 < iters)
-        pr = Lineage.cut(pr, "Graphs.personalizedPageRank.pr")
+                           damping: Double = 0.85): DataFrame =
+    powerIteration(edges, srcCol, dstCol, iters, damping, reliable = false,
+        "personalizedPageRank") { _ =>
+      val isSource = col("id") === sourceId
+      (when(isSource, lit(1.0)).otherwise(lit(0.0)),
+        when(isSource, lit(1.0) - lit(damping)).otherwise(lit(0.0)))
     }
-    pr
-  }
 
   /** Undirected simple graph induced by `edges`: both orientations of
     * every edge, self-loops dropped, duplicates removed, cut once (every
@@ -143,19 +114,19 @@ object Graphs {
     * the current labels on the source key, a (vertex, label) count
     * aggregate, and a per-vertex top-1 pick via the WindowGroupLimit-
     * prunable `row_number` — all shuffles keyed by vertex id, carrying
-    * (id, label, count) triples only. Lineage is truncated every
-    * `checkpointInterval` rounds like [[pageRank]]. Fixed `iters`
-    * keeps it oracle-checkable (unrolled CTEs); convergence looping is
-    * a caller-side concern.
+    * (id, label, count) triples only. The rounds run on
+    * [[Fixpoint.iterate]], which cuts the labels every second round.
+    * Fixed `iters` keeps it oracle-checkable (unrolled CTEs);
+    * convergence looping is a caller-side concern.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int, checkpointInterval: Int = 2): DataFrame = {
+                       iters: Int): DataFrame = {
     require(iters >= 0, s"iters $iters")
     val sym = undirected(edges, srcCol, dstCol)
     val nodes = Lineage.cut(sym.select(col("src").as("id")).distinct(),
       "Graphs.labelPropagation.nodes")
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    for (i <- 0 until iters) {
+    Fixpoint.iterate(nodes.select(col("id"), col("id").as("label")), iters,
+        "Graphs.labelPropagation.labels") { (labels, _) =>
       val votes = sym
         .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
         .groupBy(col("dst").as("id"), col("label"))
@@ -167,12 +138,9 @@ object Graphs {
         .where(col("_rn") === 1)
         .select(col("id"), col("label").as("_new"))
       // isolated vertices (none in a symmetrized graph, kept for safety)
-      labels = nodes.join(top, Seq("id"), "left")
+      nodes.join(top, Seq("id"), "left")
         .select(col("id"), coalesce(col("_new"), col("id")).as("label"))
-      if ((i + 1) % checkpointInterval == 0 && i + 1 < iters)
-        labels = Lineage.cut(labels, "Graphs.labelPropagation.labels")
     }
-    labels
   }
 
   /** Distinct vertices reachable within 2 hops (excluding self) on the
@@ -280,33 +248,38 @@ object Graphs {
     * Scale shape: each iteration is ONE shuffle — contributions =
     * edges ⋈ ranks on the source key (both sides hash-partitioned by
     * vertex id; AQE coalesces), then a sum aggregate keyed by
-    * destination. Rank lineage is truncated every `checkpointInterval`
-    * iterations by a [[Lineage.cut]] (a reliable `checkpoint()` when
-    * `reliable`, for every cut here) — the [[Dedup.clusters]]
-    * discipline; plain cache would double the analyzed plan every
-    * iteration, while a cut EVERY iteration pays its fixed cost every
-    * round (at low scale that cost dominates, so the default cuts every
-    * other round — plan depth stays ≤ interval, still bounded). Node
-    * count is collected once (a single long — the only driver action).
+    * destination. The rounds run on [[Fixpoint.iterate]], which cuts the
+    * ranks every second round (plan depth stays ≤ 2 rounds; a cut EVERY
+    * round would pay its fixed cost every round). With `reliable` every
+    * cut here is a reliable `checkpoint()`. Node count is collected once
+    * (a single long — the only driver action).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damping: Double = 0.85,
-               reliable: Boolean = false, checkpointInterval: Int = 2): DataFrame = {
+               reliable: Boolean = false): DataFrame =
+    powerIteration(edges, srcCol, dstCol, iters, damping, reliable, "pageRank") { nodes =>
+      val n = nodes.count() // computes nodes; the first round computes withDeg
+      (lit(1.0 / n), lit((1.0 - damping) / n))
+    }
+
+  /** pr_{t+1} = base + d·Σ_{u→v} pr_t(u)/outdeg(u) from pr₀ = seed, with
+    * `seedAndBase` mapping the node table to the two per-vertex columns.
+    */
+  private def powerIteration(edges: DataFrame, srcCol: String, dstCol: String,
+                             iters: Int, damping: Double, reliable: Boolean,
+                             op: String)(
+      seedAndBase: DataFrame => (Column, Column)): DataFrame = {
     require(iters >= 0, s"iters $iters")
-    require(checkpointInterval >= 1, s"checkpointInterval $checkpointInterval")
     def cut(df: DataFrame, name: String): DataFrame =
-      Lineage.cut(df, s"Graphs.pageRank.$name", reliable)
+      Lineage.cut(df, s"Graphs.$op.$name", reliable)
     val e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), "edges")
-    // nodes: the count() below computes it; withDeg: the first
-    // iteration's job does
     val nodes = cut(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct(), "nodes")
-    val n = nodes.count()
-    val base = (1.0 - damping) / n
+    val (seed, base) = seedAndBase(nodes)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
     val withDeg = cut(e.join(deg, Seq("src")), "withDeg")
-    var pr = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    for (i <- 0 until iters) {
+    Fixpoint.iterate(nodes.select(col("id"), seed.as("pr")), iters,
+        s"Graphs.$op.pr", reliable) { (pr, _) =>
       // zero-contribution seed rows fold the "nodes with no in-edges"
       // left join INTO the aggregate's shuffle — one exchange, not two
       val raw = withDeg
@@ -334,12 +307,8 @@ object Graphs {
           row_number().over(w).as("_rn"))
         .where(col("_rn") === 1)
         .select(col("id"), col("_in"))
-      pr = contribs.select(col("id"),
-        (lit(base) + col("_in") * damping).as("pr"))
-      if ((i + 1) % checkpointInterval == 0 && i + 1 < iters)
-        pr = cut(pr, "pr")
+      contribs.select(col("id"), (base + col("_in") * lit(damping)).as("pr"))
     }
-    pr
   }
 
   /** HITS hubs/authorities (Kleinberg) in EXACT integer arithmetic:
@@ -355,8 +324,9 @@ object Graphs {
     *
     * Scale shape: each half-round is ONE vertex-keyed equi-join of the
     * edge list to the current scores plus a sum aggregate — the
-    * [[pageRank]] shuffle pattern with decimal(38,0) sums, lineage
-    * truncated per round.
+    * [[pageRank]] shuffle pattern with decimal(38,0) sums. The
+    * half-rounds run on [[Fixpoint.iterate]], so lineage is cut once per
+    * round, at its hub table.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2): DataFrame = {
@@ -386,22 +356,23 @@ object Graphs {
         s"Long.MaxValue^(1/(2*iters=$iters)) — unnormalized integer HITS " +
         "scores would overflow the exact-arithmetic contract; lower " +
         "iters or run on a degree-bounded graph (e.g. a k-NN build)")
-    var hub = nodes.select(col("id"), lit(1L).cast("decimal(38,0)").as("h"))
-    var auth = nodes.select(col("id"), lit(1L).cast("decimal(38,0)").as("a"))
-    for (i <- 0 until iters) {
-      // a(v) = Σ_{u→v} h(u): zero seeds fold the no-in-edge vertices
-      // into the aggregate's shuffle (the pageRank discipline)
-      auth = Lineage.cut(e.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
-        .select(col("dst").as("id"), col("h").as("_c"))
+    // odd half-rounds: a(v) = Σ_{u→v} h(u); even: h(u) = Σ_{u→v} a(v).
+    // Zero seeds fold the vertices without such an edge into the
+    // aggregate's shuffle (the pageRank discipline)
+    def half(scores: DataFrame, r: Int): DataFrame = {
+      val (from, to, in, out) =
+        if (r % 2 == 1) ("src", "dst", "h", "a") else ("dst", "src", "a", "h")
+      e.join(scores.select(col("id").as(from), col(in)), Seq(from))
+        .select(col(to).as("id"), col(in).as("_c"))
         .unionAll(nodes.select(col("id"),
           lit(0L).cast("decimal(38,0)").as("_c")))
-        .groupBy(col("id")).agg(sum(col("_c")).as("a")), "Graphs.hits.auth")
-      hub = Lineage.cut(e.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
-        .select(col("src").as("id"), col("a").as("_c"))
-        .unionAll(nodes.select(col("id"),
-          lit(0L).cast("decimal(38,0)").as("_c")))
-        .groupBy(col("id")).agg(sum(col("_c")).as("h")), "Graphs.hits.hub")
+        .groupBy(col("id")).agg(sum(col("_c")).as(out))
     }
+    // the final tables are each read twice (the join and the max below)
+    val auth = Lineage.cut(Fixpoint.iterate(
+        nodes.select(col("id"), lit(1L).cast("decimal(38,0)").as("h")),
+        2 * iters - 1, "Graphs.hits.hub")(half), "Graphs.hits.auth")
+    val hub = Lineage.cut(half(auth, 2 * iters), "Graphs.hits.hub")
     val maxes = auth.agg(max(col("a")).as("_ma"))
       .crossJoin(hub.agg(max(col("h")).as("_mh")))
     nodes.join(auth, Seq("id")).join(hub, Seq("id"))
@@ -421,12 +392,13 @@ object Graphs {
     * dist 0). Exact integers end to end — engine-reproducible.
     *
     * Scale shape: classic frontier iteration. Each round joins the
-    * CURRENT FRONTIER ONLY (vertices first reached last round) against
-    * the edge table on the vertex key — one hash join + one min-
-    * aggregate per round, both shuffling (id, int) pairs; the visited
-    * set never re-expands (frontier = new ids only), so total work is
-    * O(edges touched), not O(frontier × rounds). Lineage is truncated
-    * with a [[Lineage.cut]] each round (the [[pageRank]] discipline).
+    * CURRENT FRONTIER ONLY (the rows first reached last round) against
+    * the edge table on the vertex key — one hash join + one distinct per
+    * round, both shuffling (id, int) pairs; the visited set never
+    * re-expands, so the join work is O(edges touched), not
+    * O(frontier × rounds). The rounds run on [[Fixpoint.converge]]: each
+    * round's (id, dist) table is a lazy cut, and one `count(*)` action
+    * per two-hop stride stops the loop once the frontier is empty.
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    sourceId: Long, maxHops: Int): DataFrame = {
@@ -434,32 +406,20 @@ object Graphs {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym = undirected(edges, srcCol, dstCol)
-    var dist = Lineage.cut(Seq((sourceId, 0)).toDF("id", "dist"),
-      "Graphs.bfsDistances.source")
-    var frontier = dist
-    var h = 1
-    var frontierNonEmpty = true
-    while (h <= maxHops && frontierNonEmpty) {
-      // the frontier-emptiness count below is the action that computes
-      // the cut — one job per hop
-      val next = Lineage.cut(frontier.join(sym, frontier("id") === sym("src"))
+    // round h adds the unseen neighbors of the rows at dist h-1; the row
+    // count repeats exactly when that frontier was empty
+    Fixpoint.converge(Seq((sourceId, 0)).toDF("id", "dist"), maxHops,
+        "Graphs.bfsDistances.dist")(_.agg(count(lit(1)))) { (dist, h) =>
+      val next = dist.where(col("dist") === h - 1)
+        .select(col("id").as("src"))
+        .join(sym, Seq("src"))
         .select(col("dst").as("id"))
         .distinct()
         // drop vertices already reached at a smaller distance
         .join(dist.select(col("id"), lit(true).as("_seen")), Seq("id"), "left")
         .where(col("_seen").isNull)
-        .select(col("id"), lit(h).as("dist")), "Graphs.bfsDistances.frontier")
-      frontierNonEmpty = next.limit(1).count() > 0
-      if (frontierNonEmpty) {
-        // no cut on the union: every branch is itself a cut frontier,
-        // so downstream joins re-read blocks, not recompute — and a
-        // per-hop cut of the union was a measurable share of BFS wall
-        // time on small frontiers (r9 isolated rerun)
-        dist = dist.unionAll(next)
-        frontier = next
-      }
-      h += 1
-    }
-    dist
+        .select(col("id"), lit(h).as("dist"))
+      dist.unionAll(next)
+    }._1
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 
 /** The engine's one lineage cut: every library site that truncates a
   * plan goes through [[cut]], and [[releaseAll]] frees only what it made.
@@ -30,6 +30,14 @@ object Lineage {
   /** Name prefix of every cut's RDD. */
   val Prefix = "graft-cut:"
 
+  /** The plan of every live cut. Its SQL metrics must outlive the lineage
+    * truncation: a task of a second job that also computed the cut still
+    * reports to them, and an update to a collected metric is lost
+    * ("attempted to access non-existent accumulator").
+    */
+  private val sources = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], QueryExecution]())
+
   def cut(df: DataFrame, site: String, reliable: Boolean = false): DataFrame = {
     val c =
       if (reliable) {
@@ -40,6 +48,7 @@ object Lineage {
         df.checkpoint(eager = true)
       } else df.localCheckpoint(eager = false)
     rddOf(c).setName(Prefix + site)
+    sources.put(rddOf(c), df.queryExecution)
     c
   }
 

@@ -1,10 +1,53 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 class GraphsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Descriptions of the SQL executions `body` starts: one per Dataset
+    * action and one per lineage cut. Listener events arrive
+    * asynchronously, in order; a marker job run after `body` is the last
+    * event, so once the listener has seen it, it has seen them all.
+    */
+  private def executions(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => seen.add(s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.exists(_.name == "drain-marker"))) drained = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.parallelize(Seq(1), 1).setName("drain-marker").count()
+      eventually(timeout(60.seconds)) { assert(drained) }
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  /** Ids of the persisted cuts named `graft-cut:<site>`. */
+  private def cutIds(site: String): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.collect {
+      case (id, r) if r.name == Lineage.Prefix + site => id
+    }.toSet
+
+  private def chain(n: Int) =
+    (0 until n).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
 
   test("pageRank on a cycle stays uniform") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
@@ -112,13 +155,58 @@ class GraphsSpec extends SparkSpec {
   }
 
   test("pageRank reliable mode produces identical values") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
+    val edges = es.toDF("src", "dst")
     val a = Graphs.pageRank(edges, "src", "dst", iters = 4)
       .as[(Long, Double)].collect().toMap
     val b = Graphs.pageRank(edges, "src", "dst", iters = 4, reliable = true)
       .as[(Long, Double)].collect().toMap
     a.keySet shouldBe b.keySet
     a.foreach { case (k, v) => b(k) shouldBe v } // bit-identical
+    // both operators run one power-iteration body: each equals, bit for
+    // bit, a driver-side iteration that folds each vertex's contributions
+    // in ascending order from 0.0 (the ordered-sum contract), across the
+    // round-2 cut
+    val ids = es.flatMap(e => Seq(e._1, e._2)).distinct
+    val outDeg = es.groupBy(_._1).map { case (u, out) => u -> out.size.toDouble }
+    def iterate(seed: Map[Long, Double], base: Long => Double): Map[Long, Double] =
+      (1 to 4).foldLeft(seed) { (pr, _) =>
+        ids.map { v =>
+          val in = (0.0 +: es.collect { case (u, `v`) => pr(u) / outDeg(u) }).sorted
+          v -> (base(v) + in.foldLeft(0.0)(_ + _) * 0.85)
+        }.toMap
+      }
+    val n = ids.size
+    iterate(ids.map(_ -> 1.0 / n).toMap, _ => (1.0 - 0.85) / n) shouldBe a
+    val ppr = Graphs.personalizedPageRank(edges, "src", "dst", sourceId = 1L, iters = 4)
+      .as[(Long, Double)].collect().toMap
+    ppr shouldBe iterate(ids.map(v => v -> (if (v == 1L) 1.0 else 0.0)).toMap,
+      v => if (v == 1L) 1.0 - 0.85 else 0.0)
+  }
+
+  test("pageRank cuts the ranks after rounds 2 and 4 of 5, never after the last") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    def cutsAndPlan(iters: Int): (Int, String) = {
+      val before = cutIds("Graphs.pageRank.pr")
+      val pr = Graphs.pageRank(edges, "src", "dst", iters = iters)
+      val plan = pr.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      ((cutIds("Graphs.pageRank.pr") -- before).size, plan)
+    }
+    // one operator-detail header per scan of the cut
+    def scans(plan: String): Int =
+      """(?m)^\(\d+\) Scan ExistingRDD graft-cut:Graphs\.pageRank\.pr$""".r
+        .findAllMatchIn(plan).size
+    val (two, twoPlan) = cutsAndPlan(2)
+    two shouldBe 0
+    scans(twoPlan) shouldBe 0
+    val (three, threePlan) = cutsAndPlan(3)
+    three shouldBe 1
+    scans(threePlan) shouldBe 1
+    val (five, fivePlan) = cutsAndPlan(5)
+    five shouldBe 2
+    // round 5 reads the round-4 cut, whose plan hides the round-2 one
+    scans(fivePlan) shouldBe 1
   }
 
   test("bfsDistances: min hops on an undirected path with a cycle and a stray") {
@@ -139,6 +227,51 @@ class GraphsSpec extends SparkSpec {
     // isolated source: only itself, regardless of budget
     Graphs.bfsDistances(chain, "src", "dst", 99L, maxHops = 4)
       .as[(Long, Int)].collect().toMap shouldBe Map(99L -> 0)
+  }
+
+  test("bfsDistances: one frontier-check action per two-hop stride") {
+    // a chain longer than the budget: the frontier never empties, so a
+    // per-hop emptiness check would run 8 actions
+    val got = executions {
+      Graphs.bfsDistances(chain(12), "src", "dst", 0L, maxHops = 8)
+    }
+    val actions = got.filterNot(_.startsWith("localCheckpoint"))
+    actions.size should be <= 4
+    Graphs.bfsDistances(chain(12), "src", "dst", 0L, maxHops = 8)
+      .as[(Long, Int)].collect().toMap shouldBe (0 to 8).map(i => i.toLong -> i).toMap
+  }
+
+  test("bfsDistances: a frontier that empties on a stride's first or second round") {
+    // 0-1-2: hop 3 (first round of the second stride) finds nothing
+    Graphs.bfsDistances(chain(2), "src", "dst", 0L, maxHops = 8)
+      .as[(Long, Int)].collect().toMap shouldBe Map(0L -> 0, 1L -> 1, 2L -> 2)
+    // 0-1-2-3: hop 4 (second round of the second stride) finds nothing
+    Graphs.bfsDistances(chain(3), "src", "dst", 0L, maxHops = 8)
+      .as[(Long, Int)].collect().toMap shouldBe
+      Map(0L -> 0, 1L -> 1, 2L -> 2, 3L -> 3)
+    // an odd budget ends on a one-round stride
+    Graphs.bfsDistances(chain(12), "src", "dst", 0L, maxHops = 3)
+      .as[(Long, Int)].collect().toMap shouldBe (0 to 3).map(i => i.toLong -> i).toMap
+    Graphs.bfsDistances(chain(12), "src", "dst", 0L, maxHops = 0)
+      .as[(Long, Int)].collect().toMap shouldBe Map(0L -> 0)
+  }
+
+  test("bfsDistances: persisted cuts stay constant however many hops run") {
+    val sc = spark.sparkContext
+    // every stride releases the cuts its action made dead, so a call
+    // leaves two cuts persisted (the undirected edges and the last
+    // distance table, both read by the result) whatever the hop count
+    def held(maxHops: Int): Int = {
+      val before = sc.emptyRDD[Int].id
+      val d = Graphs.bfsDistances(chain(20), "src", "dst", 0L, maxHops)
+      d.as[(Long, Int)].collect().toMap shouldBe
+        (0 to maxHops).map(i => i.toLong -> i).toMap
+      sc.getPersistentRDDs.collect {
+        case (id, r) if id > before && Option(r.name).exists(_.startsWith(Lineage.Prefix)) => id
+      }.size
+    }
+    held(2) shouldBe 2
+    held(12) shouldBe 2
   }
 
   test("personalizedPageRank: hand-iterated restart walk on a 3-node graph") {

@@ -1,6 +1,12 @@
 package graft.operators
 
+import java.lang.ref.WeakReference
+
 import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.functions._
 
 class LineageSpec extends SparkSpec {
 
@@ -48,5 +54,27 @@ class LineageSpec extends SparkSpec {
     spark.sparkContext.getCheckpointDir should not be empty
     c.queryExecution.executedPlan.toString should include("graft-cut:LineageSpec.reliable")
     c.count() shouldBe 20
+  }
+
+  test("a cut keeps its source plan's SQL metrics alive after the lineage truncation") {
+    // a task of a second job that also computed the cut reports to these
+    // metrics; once collected, its updates are lost ("attempted to
+    // access non-existent accumulator")
+    def cutAndWatch(): (DataFrame, Seq[WeakReference[SQLMetric]]) = {
+      val src = spark.range(0, 1000, 1, 4).toDF("id")
+        .groupBy((col("id") % 7).as("k")).count()
+      val c = Lineage.cut(src, "LineageSpec.metrics")
+      c.count() shouldBe 7 // computes the cut and truncates its lineage
+      val helper = new AdaptiveSparkPlanHelper {}
+      val metrics = helper.collect(src.queryExecution.executedPlan) { case p => p }
+        .flatMap(_.metrics.values).map(new WeakReference(_))
+      metrics should not be empty
+      (c, metrics)
+    }
+    val (c, metrics) = cutAndWatch()
+    (1 to 3).foreach { _ => System.gc(); Thread.sleep(50) }
+    metrics.count(_.get == null) shouldBe 0
+    c.count() shouldBe 7 // the cut is still live here
+    Lineage.release(c)
   }
 }

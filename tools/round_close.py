@@ -39,6 +39,8 @@ Checks, in order:
   10. The newest BENCH_r*/CORRECTNESS_r*/LEAKCHECK round artifacts are
      committed clean — the r14 verdict found them untracked at judge
      time; the artifact chain must stay in-history.
+  11. docs/PLANS.md is regenerated by graft.tools.ExplainDump and shows
+     no diff (a stale plan dossier hides the plan a change made).
 
 Exit 0 only when all gates pass. The typescan needs an oracle_sql.json;
 pass sfDir (default /root/testdata/sf0.01) and the script dumps one via
@@ -79,27 +81,21 @@ else:
         failures.append(f"BENCHDETAIL_r{rnd:02d} has undeclared keys: {extra[:8]}")
     print(f"bench-detail: {len(have)}/{len(declared)} declared queries covered")
 
+# The compiled classes (`sbt compile`) plus the Spark jars, for the gates
+# that run an engine main directly.
+java = ["java", "-cp",
+        os.path.join(repo, "target/scala-2.13/classes") + ":" + ":".join(
+            os.path.join("/opt/spark/jars", j)
+            for j in os.listdir("/opt/spark/jars") if j.endswith(".jar")),
+        "-Xmx4g"] + ["--add-opens=java.base/%s=ALL-UNNAMED" % m for m in (
+            "java.lang", "java.lang.invoke", "java.io", "java.net", "java.nio",
+            "java.util", "java.util.concurrent", "sun.nio.ch", "sun.nio.cs",
+            "sun.security.action", "sun.util.calendar")]
+
 # -- 2. oracle output types --------------------------------------------
 with tempfile.TemporaryDirectory() as tmp:
-    jars = ":".join(
-        os.path.join("/opt/spark/jars", j)
-        for j in os.listdir("/opt/spark/jars") if j.endswith(".jar"))
-    cp = os.path.join(repo, "target/scala-2.13/classes") + ":" + jars
-    dump = subprocess.run(
-        ["java", "-cp", cp, "-Xmx4g",
-         "--add-opens=java.base/java.lang=ALL-UNNAMED",
-         "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED",
-         "--add-opens=java.base/java.io=ALL-UNNAMED",
-         "--add-opens=java.base/java.net=ALL-UNNAMED",
-         "--add-opens=java.base/java.nio=ALL-UNNAMED",
-         "--add-opens=java.base/java.util=ALL-UNNAMED",
-         "--add-opens=java.base/java.util.concurrent=ALL-UNNAMED",
-         "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED",
-         "--add-opens=java.base/sun.nio.cs=ALL-UNNAMED",
-         "--add-opens=java.base/sun.security.action=ALL-UNNAMED",
-         "--add-opens=java.base/sun.util.calendar=ALL-UNNAMED",
-         "graft.Verify", sf_dir, tmp, "none"],
-        capture_output=True, text=True)
+    dump = subprocess.run(java + ["graft.Verify", sf_dir, tmp, "none"],
+                          capture_output=True, text=True)
     oracle_json = os.path.join(tmp, "oracle_sql.json")
     if not os.path.exists(oracle_json):
         failures.append(f"oracle_sql.json dump failed: {dump.stderr[-400:]}")
@@ -416,6 +412,20 @@ subprocess.run([sys.executable, os.path.join(repo, "tools/gen_query_index.py")],
 if subprocess.run(["git", "diff", "--quiet", "docs/QUERIES.md"],
                   cwd=repo).returncode != 0:
     failures.append("docs/QUERIES.md was stale — regenerated, commit it")
+
+# -- 11. plan dossier ---------------------------------------------------
+# docs/PLANS.md regenerates byte-identical from unchanged code (ExplainDump
+# masks the run-to-run tokens), so any diff is a plan change that was not
+# committed with the code that made it.
+plans = subprocess.run(java + ["graft.tools.ExplainDump"], cwd=repo,
+                       capture_output=True, text=True)
+if plans.returncode != 0:
+    failures.append("ExplainDump failed:\n" + plans.stderr[-800:])
+elif subprocess.run(["git", "diff", "--quiet", "docs/PLANS.md"],
+                    cwd=repo).returncode != 0:
+    failures.append("docs/PLANS.md was stale — regenerated, commit it")
+else:
+    print("plan dossier: docs/PLANS.md regenerates unchanged")
 
 if failures:
     print("\nROUND-CLOSE GATES FAILED:")
