@@ -79,13 +79,25 @@ object ExplainDump {
     * `[[Ljava.lang.String;@5e9f23b4`, `Ivf$CentroidAgg@4f347aae`), the
     * random suffix of per-run temp dirs (`/tmp/graft-embpairs1051…/pairs`),
     * exchange `plan_id`s and source line numbers in RDD call sites
-    * (`at Lineage.scala:39`).
+    * (`at Lineage.scala:39`). Expression ids (`id#2624L`) and RDD ids
+    * (`MapPartitionsRDD[634]`) are JVM-global counters, so they are
+    * renumbered from 1 in order of first appearance within the plan:
+    * one id keeps one number, and two ids keep two.
     */
   def normalize(plan: String): String =
-    plan.replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "@<hash>")
+    renumber(renumber(plan, exprId), rddId)
+      .replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "@<hash>")
       .replaceAll(s"$tmpDir/([A-Za-z][A-Za-z-]*)\\d+", "<tmp>/$1")
       .replaceAll("plan_id=\\d+", "plan_id=<n>")
       .replaceAll("(?<=\\.scala):\\d+", "")
+
+  private val exprId = "(?<=\\S#)\\d+".r
+  private val rddId = "(?<=RDD\\[)\\d+(?=\\])".r
+
+  private def renumber(plan: String, id: scala.util.matching.Regex): String = {
+    val seen = scala.collection.mutable.Map.empty[String, Int]
+    id.replaceAllIn(plan, m => seen.getOrElseUpdate(m.matched, seen.size + 1).toString)
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
@@ -100,7 +112,8 @@ object ExplainDump {
     sb.append("(`minhash_sig`, `cosine_sim`) inline in projections,\n")
     sb.append("`Scan ExistingRDD graft-cut:<site>` where a lineage cut is read.\n")
     sb.append("Hash codes, temp-dir suffixes, `plan_id`s and source line numbers\n")
-    sb.append("are masked, so a regeneration of unchanged code is byte-identical.\n")
+    sb.append("are masked, and expression and RDD ids are numbered per plan, so a\n")
+    sb.append("regeneration of unchanged code is byte-identical.\n")
     headline.foreach { name =>
       val plan = normalize(SparkEntry.queries(name)(spark, dir)
         .queryExecution.explainString(FormattedMode))
