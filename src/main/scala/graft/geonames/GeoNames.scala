@@ -279,13 +279,13 @@ object GeoNames {
       path, Seq("country_part"), filesPerPartition)
 
   def readBronze(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Layout.readPartitioned(spark, path).drop("country_part")
+    spark.read.parquet(path).drop("country_part")
 
   /** Prune-friendly one-country slice: filter on the PARTITION column so
     * pruning happens at planning time (directory-level skip).
     */
   def readBronzeCountry(spark: SparkSession, path: String, country: String): DataFrame =
-    graft.sources.Layout.readPartitioned(spark, path)
+    spark.read.parquet(path)
       .where(col("country_part") === country).drop("country_part")
 
   /** Parse an NDJSON envelope output back into typed (pits, relations)

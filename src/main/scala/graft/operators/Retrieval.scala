@@ -682,11 +682,6 @@ object Retrieval {
       .distinct()
   }
 
-  def substringSearch(docs: DataFrame, idCol: String, textCol: String,
-                      needle: String): DataFrame =
-    substringSearchIndexed(trigramPostings(docs, idCol, textCol),
-      docs, idCol, textCol, needle)
-
   /** Search against a PREBUILT posting table: the needle-gram IN-filter
     * reaches the posting scan (pushed to parquet row-group stats when
     * the index is gram-sorted on disk), postings intersect via one

@@ -30,23 +30,21 @@ object Layout {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Read back with explicit base path so partition columns materialize. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Persist as a bucketed managed table (bucket layout only exists for
-    * tables, not bare files). Joins between tables bucketed the same way
-    * on the join key skip the shuffle entirely.
+  /** Persist as a bucketed table (bucket layout only exists for tables,
+    * not bare files). Joins between tables bucketed the same way on the
+    * join key skip the shuffle entirely. The table is managed, or external
+    * at `location` when one is given: a managed table's warehouse
+    * directory outlives an in-memory catalog, so a process that re-creates
+    * the table under a fresh catalog would hit LOCATION_ALREADY_EXISTS.
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int, sortCol: Option[String] = None): Unit = {
+                    numBuckets: Int, sortCol: Option[String] = None,
+                    location: Option[String] = None): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
       .format("parquet")
       .bucketBy(numBuckets, bucketCol)
-    (sortCol match {
-      case Some(s) => w.sortBy(s)
-      case None => w
-    }).saveAsTable(table)
+    val sorted = sortCol.fold(w)(w.sortBy(_))
+    location.fold(sorted)(sorted.option("path", _)).saveAsTable(table)
   }
 
   /** Compact a parquet directory to bounded-size output files — the

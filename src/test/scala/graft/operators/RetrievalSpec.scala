@@ -452,7 +452,9 @@ class RetrievalSpec extends SparkSpec {
       (2L, "batch  BATCH batch"),          // ws+case normalize → 1 non-overlapping
       (3L, "batch job batch job"),         // both words, never adjacent — no hit
       (4L, "nothing here")).toDF("doc_id", "text")
-    val got = Retrieval.substringSearch(docs, "doc_id", "text", "batch batch")
+    val got = Retrieval.substringSearchIndexed(
+        Retrieval.trigramPostings(docs, "doc_id", "text"), docs, "doc_id", "text",
+        "batch batch")
       .orderBy("doc_id").as[(Long, Long)].collect()
     got shouldBe Array((1L, 1L), (2L, 1L))
   }
@@ -460,7 +462,8 @@ class RetrievalSpec extends SparkSpec {
   test("substringSearch counts non-overlapping occurrences left to right") {
     val docs = Seq((1L, "ab ab ab ab")).toDF("doc_id", "text")
     // needle "ab ab": occurrences at 0 and 6 (position 3 overlaps the first)
-    Retrieval.substringSearch(docs, "doc_id", "text", "ab ab")
+    Retrieval.substringSearchIndexed(Retrieval.trigramPostings(docs, "doc_id", "text"),
+        docs, "doc_id", "text", "ab ab")
       .as[(Long, Long)].collect() shouldBe Array((1L, 2L))
   }
 

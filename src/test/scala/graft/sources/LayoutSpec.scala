@@ -17,7 +17,7 @@ class LayoutSpec extends SparkSpec {
     Layout.writePartitioned(df, path, Seq("country"))
     new java.io.File(path).list().count(_.startsWith("country=")) shouldBe 3
 
-    val q = Layout.readPartitioned(spark, path).where(col("country") === "US")
+    val q = spark.read.parquet(path).where(col("country") === "US")
     q.count() shouldBe 2
     // pruning visible in the plan: partition filter present, one dir scanned
     val plan = q.queryExecution.executedPlan.toString
@@ -25,16 +25,23 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("writeBucketed + bucketed self-join plans with zero shuffle") {
-    Layout.writeBucketed(df, "t_bucketed", "id", 4, sortCol = Some("id"))
-    val t = spark.table("t_bucketed")
-    // hint forces SMJ (a 4-row table would broadcast); the property under
-    // test is that the SMJ needs no Exchange on either bucketed side
-    val joined = t.as("a").hint("merge").join(t.as("b"), "id")
-    val plan = joined.queryExecution.executedPlan.toString
-    plan should include("SortMergeJoin")
-    (plan should not).include("Exchange") // co-located: no shuffle on either side
-    joined.count() shouldBe 4
-    spark.sql("DROP TABLE t_bucketed")
+    val ext = Files.createTempDirectory("layout").toFile.getAbsolutePath + "/t"
+    Seq(("t_bucketed", None, "MANAGED"), ("t_bucketed_ext", Some(ext), "EXTERNAL"))
+      .foreach { case (name, location, kind) =>
+        Layout.writeBucketed(df, name, "id", 4, sortCol = Some("id"), location = location)
+        spark.catalog.getTable(name).tableType shouldBe kind
+        val t = spark.table(name)
+        // hint forces SMJ (a 4-row table would broadcast); the property under
+        // test is that the SMJ needs no Exchange on either bucketed side
+        val joined = t.as("a").hint("merge").join(t.as("b"), "id")
+        val plan = joined.queryExecution.executedPlan.toString
+        plan should include("SortMergeJoin")
+        (plan should not).include("Exchange") // co-located: no shuffle on either side
+        joined.count() shouldBe 4
+        spark.sql(s"DROP TABLE $name")
+      }
+    // the external table's files live at the given location and outlive the table
+    new java.io.File(ext).list().count(_.endsWith(".parquet")) should be > 0
   }
 
   test("compact: small files collapse to ceil(bytes/target), data identical") {
