@@ -229,9 +229,7 @@ private[graft] object RetrievalQueries {
     "q_pq_topk" -> ((s, dir) => {
       val emb = embeddingsCk(s, dir)
       val cb = Pq.train(emb, "embedding", m = 16, k = 64, sampleN = 2000)
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
+      val queries = Similarity.queryList(emb.where(col("vec_id") < 5), "vec_id", "embedding")
       // self-matches kept: PQ ranks by code similarity only, and the
       // query's own row scoring ≈1.0 at rank 1 is itself a useful check
       Pq.topK(Pq.encode(emb, "vec_id", "embedding", cb), cb, queries, k = 5)
@@ -249,9 +247,7 @@ private[graft] object RetrievalQueries {
     "q_sq8_topk" -> ((s, dir) => {
       val emb = embeddingsCk(s, dir)
       val b = graft.operators.Sq.train(emb, "embedding")
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
+      val queries = Similarity.queryList(emb.where(col("vec_id") < 5), "vec_id", "embedding")
       graft.operators.Sq.topK(
           graft.operators.Sq.encode(emb, "vec_id", "embedding", b), b, queries, k = 5)
         .select(col("query_id"), col("neighbor_id"), col("sq_score"),
@@ -281,9 +277,7 @@ private[graft] object RetrievalQueries {
     // recall at 1M)
     "q_ivfpq_topk" -> ((s, dir) => {
       val emb = embeddingsCk(s, dir)
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
+      val queries = Similarity.queryList(emb.where(col("vec_id") < 5), "vec_id", "embedding")
       Pq.ivfPqTopK(emb, "vec_id", "embedding", queries, k = 5,
           numCentroids = 16, nprobe = 4, m = 16, kCodes = 64, sampleN = 2000)
         .select(col("query_id"), col("neighbor_id"), col("adc_score"),
@@ -297,9 +291,7 @@ private[graft] object RetrievalQueries {
     // PqSpec proves full-coverage re-rank ≡ brute force exactly)
     "q_ivfpq_rerank" -> ((s, dir) => {
       val emb = embeddingsCk(s, dir)
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
+      val queries = Similarity.queryList(emb.where(col("vec_id") < 5), "vec_id", "embedding")
       val shortlist = Pq.ivfPqTopK(emb, "vec_id", "embedding", queries, k = 20,
         numCentroids = 16, nprobe = 4, m = 16, kCodes = 64, sampleN = 2000)
       Similarity.rerankExact(shortlist, emb, "vec_id", "embedding",

@@ -26,9 +26,6 @@ object TextAnalytics {
   def tokenCount(text: Column): Column =
     TextExpr.tokenStats(text).getField("n_tokens").cast("int")
 
-  /** HOF form of [[tokenCount]] (reference composition). */
-  def tokenCountComposed(text: Column): Column = size(tokens(text))
-
   /** Ratio of tokens found in `stopwords` (lower-cased exact match);
     * one-pass kernel, empty doc → 0.0.
     */
@@ -37,14 +34,6 @@ object TextAnalytics {
     val n = st.getField("n_tokens")
     when(n === 0, lit(0.0))
       .otherwise(st.getField("n_stop").cast("double") / n)
-  }
-
-  /** HOF form of [[stopwordRatio]] (reference composition). */
-  def stopwordRatioComposed(text: Column, stopwords: Seq[String]): Column = {
-    val toks = tokens(lower(text))
-    val sw = typedLit(stopwords.map(_.toLowerCase))
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(size(filter(toks, t => array_contains(sw, t))).cast("double") / size(toks))
   }
 
   /** Punctuation density: non-alphanumeric-non-space chars / total chars. */

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.BqExpr
@@ -22,15 +21,11 @@ import graft.functions.BqExpr
   * candidate ids back to the corpus — a hash join whose probe side is
   * shortlist-sized, never a second corpus scan. Nothing driver-side
   * scales with corpus rows; queries are a bounded broadcast list
-  * (require-capped).
+  * (capped at [[Similarity.MaxQueries]]: query codes ride the closure
+  * as literal long words, ⌈d/64⌉ per query, and the re-rank broadcasts
+  * the query vectors).
   */
 object Bq {
-
-  /** Driver-side query cap: query codes ride the closure as literal
-    * long words (⌈d/64⌉ per query) and the re-rank broadcasts the
-    * query vectors.
-    */
-  val MaxQueries: Int = 4096
 
   /** Sign-bit pack of one driver-side query vector (bit i = x_i > 0 —
     * the exact contract of the distributed `bq_encode` kernel).
@@ -50,29 +45,20 @@ object Bq {
     corpus.select(col(idCol).as("id"), BqExpr.encode(col(vecCol)).as("codes"))
 
   /** Per-query Hamming shortlist over sign-bit codes: one scan scores
-    * every query per row (fused XOR+popcount kernel), posexplode fans
-    * out (query, distance) and a per-query window keeps the r closest
-    * (WindowGroupLimit prunes to r per task before the shuffle).
-    * Deterministic tie-break (hamming asc, neighbor_id asc);
-    * self-matches survive here and are dropped by the re-rank.
+    * every query per row (fused XOR+popcount kernel),
+    * [[Similarity.fanOut]] turns the distances into (query, distance)
+    * rows and [[Similarity.rankPerQuery]] keeps the r closest, hamming
+    * ascending (WindowGroupLimit prunes to r per task before the
+    * shuffle). Self-matches survive here and are dropped by the re-rank.
     */
   def shortlist(encoded: DataFrame, queries: Seq[(Long, Array[Double])],
                 r: Int): DataFrame = {
     require(queries.nonEmpty, "bq shortlist: empty query list")
-    require(queries.length <= MaxQueries,
-      s"bq shortlist: ${queries.length} queries exceeds MaxQueries=$MaxQueries — " +
-        "query codes are a driver-side broadcast; raise the knob deliberately")
+    Similarity.requireQueryCap("bq shortlist", queries.length)
     val qcodes = queries.map { case (_, q) => packSigns(q) }.toArray
-    val qidArr = array(queries.map(q => lit(q._1)): _*)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    encoded
-      .select(col("id").as("neighbor_id"),
-        posexplode(BqExpr.hamming(col("codes"), qcodes)))
-      .select(element_at(qidArr, col("pos") + 1).as("query_id"),
-        col("neighbor_id"), col("col").as("hamming"))
-      .withColumn("_r", row_number().over(w))
-      .where(col("_r") <= r)
+    val scored = Similarity.fanOut(encoded, BqExpr.hamming(col("codes"), qcodes),
+      queries, "hamming", identity)
+    Similarity.rankPerQuery(scored, col("hamming").asc, r)
       .select(col("query_id"), col("neighbor_id"), col("hamming"))
   }
 
@@ -85,29 +71,14 @@ object Bq {
     * [[Similarity.bruteForceTopK]] EXACTLY (asserted in BqSpec); at
     * production r the re-rank repairs the sign-quantization error at
     * shortlist cost. `queries` must expose (qidCol long, qvecCol
-    * vector) and be bounded (collected + broadcast).
+    * vector) and be bounded: it is collected through
+    * [[Similarity.queryList]] and broadcast.
     */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            queries: DataFrame, qidCol: String, qvecCol: String,
            k: Int, r: Int, roundTo: Int = 6): DataFrame = {
     require(r >= k, s"bq topK: shortlist r=$r must be >= k=$k")
-    val qRows = queries
-      .select(col(qidCol).cast("long"), col(qvecCol)).limit(MaxQueries + 1)
-      .collect()
-    require(qRows.length <= MaxQueries,
-      s"bq topK: query side exceeds MaxQueries=$MaxQueries")
-    val qSeq = qRows.map { row =>
-      val vec = row.get(1) match {
-        case s: scala.collection.Seq[_] => s.map {
-          case f: Float => f.toDouble
-          case d: Double => d
-          case x => x.toString.toDouble
-        }.toArray
-        case other => throw new IllegalArgumentException(
-          s"bq topK: unsupported query vector ${other.getClass}")
-      }
-      (row.getLong(0), vec)
-    }.toSeq
+    val qSeq = Similarity.queryList(queries, qidCol, qvecCol)
     // r = Int.MaxValue is the documented "r >= corpus size" brute-force
     // mode; a raw r + 1 would overflow to Int.MinValue and the rank
     // filter would silently return nothing.

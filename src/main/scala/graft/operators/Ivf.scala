@@ -38,6 +38,15 @@ object Ivf {
         s"vector element ${x.getClass.getName}; expected float or double")
     }.toArray
 
+  /** L2-normalize a driver-side vector; a zero vector stays as it is.
+    * The one normalize behind the centroid table, the PQ codebooks and
+    * LUTs and the SQ8 query weights.
+    */
+  private[graft] def normalize(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    if (n > 0) v.map(_ / n) else v
+  }
+
   /** Typed Aggregator computing the elementwise mean of float vectors —
     * the custom-UDAF surface (SURVEY.md §2.4 A7), registered per-use via
     * `udaf()`. Buffer is (sums, count); merge is elementwise — classic
@@ -81,11 +90,7 @@ object Ivf {
     */
   private def collectCentroids(centroids: DataFrame): (Array[Long], Array[Array[Double]]) = {
     val rows = centroids.select(col("cluster_id"), col("cvec")).collect()
-      .map { r =>
-        val cv = vecToDouble(r.getSeq[Any](1))
-        val norm = math.sqrt(cv.map(x => x * x).sum)
-        (r.getLong(0), if (norm > 0) cv.map(_ / norm) else cv)
-      }
+      .map(r => (r.getLong(0), normalize(vecToDouble(r.getSeq[Any](1)))))
       .sortBy(_._1)
     (rows.map(_._1), rows.map(_._2))
   }
@@ -128,7 +133,8 @@ object Ivf {
 
   /** Approximate top-k: search only the nprobe closest clusters per
     * query. One shuffle on cluster_id (corpus side is the build output),
-    * then per-query ranking.
+    * then exact cosine ranked by [[Similarity.rankPerQuery]], self
+    * excluded.
     */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            queries: DataFrame, qidCol: String, qvecCol: String,
@@ -144,15 +150,10 @@ object Ivf {
       .withColumn("_pr", row_number().over(probeW))
       .where(col("_pr") <= nprobe)
       .select(col(qidCol).as("query_id"), col(qvecCol).as("_qv"), col("cluster_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    assignments
+    val pairs = assignments
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"), col("cluster_id"))
       .join(probes, Seq("cluster_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(Similarity.cosine(col("_cv"), col("_qv")), roundTo).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    Similarity.rankPerQuery(Similarity.exactScores(pairs, "neighbor_id", "_cv",
+      "query_id", "_qv", roundTo), col("cos_sim").desc, k)
   }
 }

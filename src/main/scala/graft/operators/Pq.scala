@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PqExpr
@@ -29,23 +28,18 @@ object Pq {
   /** cents(s) = subspace s's k centroids, flattened k·subDim doubles. */
   case class Codebooks(m: Int, k: Int, subDim: Int, cents: Array[Array[Double]])
 
-  /** Train per-subspace k-means codebooks on a driver-side sample.
-    * `sampleN` bounds driver memory (sampleN·dim doubles); pass a
-    * pre-shuffled frame if the corpus's leading partitions are not
-    * representative. Vectors are L2-normalized before training, so ADC
-    * scores approximate cosine.
-    */
-  private def normalizeD(s: Array[Double]): Array[Double] = {
-    val n = math.sqrt(s.map(x => x * x).sum)
-    if (n > 0) s.map(_ / n) else s
-  }
-
   /** Largest training sample the driver will hold (the FAISS pattern:
     * codebooks train on a bounded sample, never the corpus); an
     * oversized sampleN knob fails loudly instead of OOMing the collect.
     */
   val MaxTrainSample: Int = 1000000
 
+  /** Train per-subspace k-means codebooks on a driver-side sample.
+    * `sampleN` bounds driver memory (sampleN·dim doubles); pass a
+    * pre-shuffled frame if the corpus's leading partitions are not
+    * representative. Vectors are L2-normalized before training, so ADC
+    * scores approximate cosine.
+    */
   def train(corpus: DataFrame, vecCol: String, m: Int, k: Int = 256,
             sampleN: Int = 10000, iters: Int = 10): Codebooks = {
     require(sampleN > 0 && sampleN <= MaxTrainSample,
@@ -53,7 +47,7 @@ object Pq {
         s"$MaxTrainSample] — codebook training collects the sample to " +
         "the driver; lower the sampleN knob")
     val rows: Array[Array[Double]] = corpus.select(col(vecCol)).limit(sampleN)
-      .collect().map { r: Row => normalizeD(Ivf.vecToDouble(r.getSeq[Any](0))) }
+      .collect().map { r: Row => Ivf.normalize(Ivf.vecToDouble(r.getSeq[Any](0))) }
     trainOn(rows, m, k, iters)
   }
 
@@ -73,7 +67,7 @@ object Pq {
     val rows: Array[Array[Double]] = assignments
       .select(col(vecCol), col(clusterCol)).limit(sampleN)
       .collect().map { r: Row =>
-        val x = normalizeD(Ivf.vecToDouble(r.getSeq[Any](0)))
+        val x = Ivf.normalize(Ivf.vecToDouble(r.getSeq[Any](0)))
         val ci = java.util.Arrays.binarySearch(ids, r.getLong(1))
         require(ci >= 0, s"pq trainResidual: unknown cluster ${r.getLong(1)}")
         val c = cnorm(ci)
@@ -168,8 +162,7 @@ object Pq {
     * normalized query.
     */
   private def lut(cb: Codebooks, q: Array[Double]): Array[Double] = {
-    val n = math.sqrt(q.map(x => x * x).sum)
-    val qn = if (n > 0) q.map(_ / n) else q
+    val qn = Ivf.normalize(q)
     val out = new Array[Double](cb.m * cb.k)
     var s = 0
     while (s < cb.m) {
@@ -186,14 +179,6 @@ object Pq {
     out
   }
 
-  /** Approximate top-k per query over PQ codes: ONE scan of the encoded
-    * corpus computes all queries' ADC scores (array column), posexplode
-    * fans out (query_idx, score), and a per-query window keeps k —
-    * WindowGroupLimit prunes to k per task before the shuffle.
-    * `queries` is a bounded driver-side list (ids must not collide with
-    * corpus ids being excluded — self-matches are kept; PQ has no
-    * exact-id notion).
-    */
   /** IVF-PQ — the standard production ANN composition: an IVF coarse
     * index routes each query to its `nprobe` nearest clusters, and PQ
     * codes are ADC-scored ONLY inside those clusters. Per query the
@@ -203,8 +188,10 @@ object Pq {
     * broadcast-hash-join + WindowGroupLimit-pruned top-k — the corpus
     * itself shuffles only once, at IVF build, keyed by cluster.
     *
-    * `queries` is bounded and driver-side (LUTs are literals in the
-    * plan); centroids are the already-bounded IVF dimension.
+    * `queries` is bounded ([[Similarity.MaxQueries]]) and driver-side
+    * (LUTs are literals in the plan); centroids are the already-bounded
+    * IVF dimension. Ranked by [[Similarity.rankPerQuery]] on the rounded
+    * ADC score; self-matches are kept, as in [[topK]].
     *
     * `residual = true` (default) trains the codebooks on IVF residuals
     * and scores as q·c (exact, a probe-table constant) + q·PQ(residual)
@@ -218,6 +205,7 @@ object Pq {
                 numCentroids: Int, nprobe: Int = 4,
                 m: Int = 16, kCodes: Int = 256, sampleN: Int = 10000,
                 roundTo: Int = 6, residual: Boolean = true): DataFrame = {
+    Similarity.requireQueryCap("pq ivfPqTopK", queries.length)
     val (assignments, centroids) = Ivf.build(corpus, idCol, vecCol, numCentroids)
     // the (bounded) collected centroid table — the same driver-side
     // dimension Ivf.build already collects each Lloyd iteration
@@ -225,7 +213,7 @@ object Pq {
       (r.getLong(0), Ivf.vecToDouble(r.getSeq[Any](1)))
     }.sortBy(_._1)
     val ids = cents.map(_._1)
-    val cnorm = cents.map { case (_, v) => normalizeD(v) }
+    val cnorm = cents.map { case (_, v) => Ivf.normalize(v) }
     val cb =
       if (residual) trainResidual(assignments, vecCol, "cluster_id", ids, cnorm,
         m, kCodes, sampleN)
@@ -246,7 +234,7 @@ object Pq {
     // q̂·x̂ ≈ q̂·ĉ + q̂·PQ(x̂−ĉ) — so scoring adds a broadcast-joined
     // constant, never a per-row vector op
     val probePairs = queries.zipWithIndex.flatMap { case ((_, qv), qi) =>
-      val qn = normalizeD(qv)
+      val qn = Ivf.normalize(qv)
       ids.indices.map { ci => (dot(qn, cnorm(ci)), ids(ci), ci) }
         .sortBy { case (sim, cid, _) => (-sim, cid) }
         .take(nprobe).map { case (sim, cid, _) => (cid, qi, sim) }
@@ -255,32 +243,30 @@ object Pq {
     import spark.implicits._
     val probes = broadcast(probePairs.toDF("cluster_id", "qidx", "qdotc"))
     val luts = queries.map(q => lut(cb, q._2)).toArray
-    val qidArr = array(queries.map(q => lit(q._1)): _*)
     val adc = PqExpr.adcScoreAt(col("codes"), col("qidx"), cb.k, luts)
     val score = if (residual) col("qdotc") + adc else adc
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    encoded.join(probes, Seq("cluster_id"))
-      .select(element_at(qidArr, col("qidx") + 1).as("query_id"),
+    val scored = encoded.join(probes, Seq("cluster_id"))
+      .select(Similarity.queryIdAt(queries, col("qidx")).as("query_id"),
         col("id").as("neighbor_id"),
         round(score, roundTo).as("adc_score"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    Similarity.rankPerQuery(scored, col("adc_score").desc, k)
   }
 
+  /** Approximate top-k per query over PQ codes: ONE scan of the encoded
+    * corpus computes all queries' ADC scores (array column),
+    * [[Similarity.fanOut]] turns them into (query, score) rows, and
+    * [[Similarity.rankPerQuery]] keeps k per query on the rounded score —
+    * WindowGroupLimit prunes to k per task before the shuffle.
+    * `queries` is a bounded driver-side list ([[Similarity.MaxQueries]]);
+    * self-matches are kept (PQ has no exact-id notion).
+    */
   def topK(encoded: DataFrame, cb: Codebooks,
            queries: Seq[(Long, Array[Double])], k: Int,
            roundTo: Int = 6): DataFrame = {
+    Similarity.requireQueryCap("pq topK", queries.length)
     val luts = queries.map(q => lut(cb, q._2)).toArray
-    val qidArr = array(queries.map(q => lit(q._1)): _*)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    encoded
-      .select(col("id").as("neighbor_id"),
-        posexplode(PqExpr.adcScores(col("codes"), cb.k, luts)))
-      .select(element_at(qidArr, col("pos") + 1).as("query_id"),
-        col("neighbor_id"), round(col("col"), roundTo).as("adc_score"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val scored = Similarity.fanOut(encoded, PqExpr.adcScores(col("codes"), cb.k, luts),
+      queries, "adc_score", round(_, roundTo))
+    Similarity.rankPerQuery(scored, col("adc_score").desc, k)
   }
 }

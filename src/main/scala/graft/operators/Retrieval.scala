@@ -328,8 +328,8 @@ object Retrieval {
     * the k most-similar corpus vectors carrying a DIFFERENT label —
     * confusable-but-wrong examples, exactly the negatives an
     * embedding-model loss learns most from (the standard upgrade over
-    * random in-batch negatives). Ranking key is (rounded cosine desc,
-    * id asc) — the [[Similarity.bruteForceTopK]] determinism contract.
+    * random in-batch negatives). Ranked by [[Similarity.rankPerQuery]]
+    * on the rounded cosine, self excluded.
     *
     * Scale shape: the query set broadcasts (it is small by nature — a
     * training batch or probe set), the corpus is one map-side scan with
@@ -343,14 +343,9 @@ object Retrieval {
                     labelCol: String, queries: DataFrame, qidCol: String,
                     qvecCol: String, qlabelCol: String, k: Int,
                     roundTo: Int = 6): DataFrame = {
-    val joined = corpus.join(broadcast(queries),
-        col(idCol) =!= col(qidCol) && col(labelCol) =!= col(qlabelCol))
-      .select(col(qidCol).as("query_id"), col(idCol).as("neighbor_id"),
-        round(Similarity.cosine(col(vecCol), col(qvecCol)), roundTo).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    joined.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    val pairs = corpus.join(broadcast(queries), col(labelCol) =!= col(qlabelCol))
+    Similarity.rankPerQuery(Similarity.exactScores(pairs, idCol, vecCol,
+      qidCol, qvecCol, roundTo), col("cos_sim").desc, k)
   }
 
   /** IR-style retrieval quality metrics per query: reciprocal rank,
@@ -366,14 +361,15 @@ object Retrieval {
     * both are 0 when a label is unique in the corpus.
     *
     * Scale shape: the query set broadcasts; candidates rank through the
-    * same WindowGroupLimit-pruned top-k as [[Similarity.bruteForceTopK]]
-    * so each task exchanges ≤ k rows per query; the per-label totals
-    * are a dimension-sized aggregate broadcast back. Metric arithmetic
-    * is over ≤ k rows per query. At corpus scale the candidate stage
-    * swaps for an ANN shortlist exactly like [[hardNegatives]].
+    * WindowGroupLimit-pruned [[Similarity.rankPerQuery]] on the rounded
+    * cosine, so each task exchanges ≤ k rows per query; the per-label
+    * totals are a dimension-sized aggregate broadcast back. Metric
+    * arithmetic is over ≤ k rows per query. At corpus scale the
+    * candidate stage swaps for an ANN shortlist exactly like
+    * [[hardNegatives]].
     *
-    * Determinism: ranking key is (rounded cosine desc, id asc); DCG
-    * uses ln(rank+1)/ln 2 spelled identically in the DuckDB oracle.
+    * Determinism: DCG uses ln(rank+1)/ln 2 spelled identically in the
+    * DuckDB oracle.
     */
   def retrievalEval(corpus: DataFrame, idCol: String, vecCol: String,
                     labelCol: String, queries: DataFrame, qidCol: String,
@@ -386,15 +382,10 @@ object Retrieval {
       .agg(count(lit(1)).as("_lbl_n"))
     val totals = queries.join(broadcast(labelCounts), col(qlabelCol) === col("_lbl"))
       .select(col(qidCol).as("query_id"), (col("_lbl_n") - 1L).as("n_rel"))
-    val ranked = corpus.join(broadcast(queries), col(idCol) =!= col(qidCol))
-      .select(col(qidCol).as("query_id"), col(idCol).as("neighbor_id"),
-        (col(labelCol) === col(qlabelCol)).cast("int").as("rel"),
-        round(Similarity.cosine(col(vecCol), col(qvecCol)), roundTo).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    val agg = ranked.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val scored = Similarity.exactScores(corpus.join(broadcast(queries)), idCol,
+      vecCol, qidCol, qvecCol, roundTo,
+      (col(labelCol) === col(qlabelCol)).cast("int").as("rel"))
+    val agg = Similarity.rankPerQuery(scored, col("cos_sim").desc, k)
       .groupBy(col("query_id")).agg(
         sum(col("rel")).cast("long").as("hits"),
         min(when(col("rel") === 1, col("rank"))).as("_first"),
@@ -417,8 +408,8 @@ object Retrieval {
   }
 
   /** Embedding-space confusion matrix over a probe set: for each probe
-    * query, rank the corpus by cosine (the [[retrievalEval]] /
-    * [[Similarity.bruteForceTopK]] contract) and count top-k neighbors
+    * query, rank the corpus by cosine ([[Similarity.rankPerQuery]], self
+    * excluded, as in [[retrievalEval]]) and count top-k neighbors
     * by (query label, neighbor label). The diagonal measures class
     * cohesion; off-diagonal mass names exactly which label pairs the
     * embedding space confuses — the first diagnostic after an encoder
@@ -434,15 +425,10 @@ object Retrieval {
                      labelCol: String, queries: DataFrame, qidCol: String,
                      qvecCol: String, qlabelCol: String, k: Int,
                      roundTo: Int = 6): DataFrame = {
-    val ranked = corpus.join(broadcast(queries), col(idCol) =!= col(qidCol))
-      .select(col(qidCol).as("query_id"),
-        col(qlabelCol).as("query_label"), col(labelCol).as("neighbor_label"),
-        col(idCol).as("neighbor_id"),
-        round(Similarity.cosine(col(vecCol), col(qvecCol)), roundTo).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    ranked.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    val scored = Similarity.exactScores(corpus.join(broadcast(queries)), idCol,
+      vecCol, qidCol, qvecCol, roundTo,
+      col(qlabelCol).as("query_label"), col(labelCol).as("neighbor_label"))
+    Similarity.rankPerQuery(scored, col("cos_sim").desc, k)
       .groupBy(col("query_label"), col("neighbor_label"))
       .agg(count(lit(1)).as("n"))
   }
@@ -492,16 +478,10 @@ object Retrieval {
                   labelCol: String, queries: DataFrame, qidCol: String,
                   qvecCol: String, qlabelCol: String, k: Int,
                   roundTo: Int = 6): DataFrame = {
-    val ranked = corpus.join(broadcast(queries), col(idCol) =!= col(qidCol))
-      .select(col(qidCol).as("query_id"),
-        col(qlabelCol).as("true_label"), col(labelCol).as("neighbor_label"),
-        col(idCol).as("neighbor_id"),
-        round(Similarity.cosine(col(vecCol), col(qvecCol)), roundTo).as("cos_sim"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    val votes = ranked.withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
+    val scored = Similarity.exactScores(corpus.join(broadcast(queries)), idCol,
+      vecCol, qidCol, qvecCol, roundTo,
+      col(qlabelCol).as("true_label"), col(labelCol).as("neighbor_label"))
+    val votes = Similarity.rankPerQuery(scored, col("cos_sim").desc, k)
       .groupBy(col("query_id"), col("true_label"), col("neighbor_label"))
       .agg(count(lit(1)).as("votes"), min(col("rank")).as("_best"))
     val wVote = org.apache.spark.sql.expressions.Window

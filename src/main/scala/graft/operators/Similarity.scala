@@ -9,17 +9,28 @@ import org.apache.spark.sql.functions._
   * Two execution paths, both shuffle-lean:
   *   - [[bruteForceTopK]]: broadcast the (small) query set, compute cosine
   *     per (row × query) inside codegen, keep top-k per query with a
-  *     TakeOrdered-style window. Exact; the 100 TB baseline when the query
-  *     set is bounded (the corpus is never shuffled, only scanned).
+  *     WindowGroupLimit-pruned window. Exact; the 100 TB baseline when the
+  *     query set is bounded (the corpus is never shuffled, only scanned).
   *   - [[lshTopK]]: random-hyperplane (sign) LSH — bucket rows by an
   *     h-bit signature, join queries to their own bucket only, rank
   *     within bucket. Approximate; turns the row×query product into a
   *     per-bucket product, the scale path when queries are many.
   *
-  * All arithmetic is double-precision over `transform`-cast arrays using
-  * built-in higher-order functions (`zip_with` + `aggregate`) — no UDFs.
+  * This object also holds the per-query top-k pipeline that every
+  * vector-search operator (here, [[Retrieval]], [[Ivf]], [[Pq]], [[Sq]],
+  * [[Bq]]) shares: the query list ([[queryList]], capped at
+  * [[MaxQueries]]), the query fan-out of a one-scan ANN search
+  * ([[fanOut]]), the exact scorer ([[exactScores]]) and the ranking step
+  * ([[rankPerQuery]]), which states the determinism contract.
   */
 object Similarity {
+
+  /** Driver-side query cap, shared by every operator that takes a query
+    * list: each query rides the plan as literals or kernel reference
+    * objects (its id, plus a PQ LUT, SQ8 weight table or sign-bit
+    * words), so an unbounded list builds an unbounded driver-side model.
+    */
+  val MaxQueries: Int = 4096
 
   /** Elementwise cast to double (floats upcast exactly). */
   def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
@@ -35,27 +46,79 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpr.cosineSim(a, b)
 
-  /** The composed HOF form, kept as executable documentation/reference. */
-  def cosineComposed(a: Column, b: Column): Column = {
-    val ad = asDouble(a); val bd = asDouble(b)
-    dot(ad, bd) / (l2Norm(ad) * l2Norm(bd))
+  /** The ranking step of every per-query top-k, and the one statement of
+    * its determinism contract: rows partition by `query_id`, order by
+    * `score` (a rounded score column with its direction, so float
+    * reassociation cannot reorder near-ties) then `neighbor_id` asc, are
+    * numbered `rank` from 1, and only `rank <= k` survives. Equal scores
+    * therefore break toward the lower corpus id on any engine. Spark
+    * plans the cut as a WindowGroupLimit, Partial before the exchange and
+    * Final after it, so each task ships at most k rows per query.
+    */
+  private[graft] def rankPerQuery(scored: DataFrame, score: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(score, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
+
+  /** Exact scoring of (corpus row, query) pairs: drops self pairs (corpus
+    * id = query id) and emits (query_id, neighbor_id, carry…, cos_sim),
+    * cos_sim being the kernel cosine rounded to `roundTo`. `pairs` holds
+    * both ids and both vectors: the broadcast brute-force product
+    * `corpus.join(broadcast(queries))`, into whose join condition Catalyst
+    * folds the self test, or a candidate join (shortlist, LSH bucket,
+    * IVF probe).
+    */
+  private[graft] def exactScores(pairs: DataFrame, idCol: String, vecCol: String,
+                                 qidCol: String, qvecCol: String, roundTo: Int,
+                                 carry: Column*): DataFrame =
+    pairs.where(col(idCol) =!= col(qidCol))
+      .select(Seq(col(qidCol).as("query_id"), col(idCol).as("neighbor_id")) ++ carry :+
+        round(cosine(col(vecCol), col(qvecCol)), roundTo).as("cos_sim"): _*)
+
+  /** Fails, naming the knob, when `n` queries exceed [[MaxQueries]]. */
+  private[graft] def requireQueryCap(op: String, n: Int): Unit =
+    require(n <= MaxQueries,
+      s"$op: $n queries exceeds MaxQueries=$MaxQueries — the per-query tables " +
+        "are a driver-side broadcast; raise the knob deliberately")
+
+  /** The bounded driver collect of a query frame: (id, vector) pairs
+    * from `qidCol` and `qvecCol`, array<float> or array<double>, at most
+    * [[MaxQueries]] of them.
+    */
+  private[graft] def queryList(queries: DataFrame, qidCol: String,
+                               qvecCol: String): Seq[(Long, Array[Double])] = {
+    val rows = queries.select(col(qidCol), col(qvecCol)).limit(MaxQueries + 1).collect()
+    requireQueryCap("query list", rows.length)
+    rows.map(r => (r.getAs[Number](0).longValue, Ivf.vecToDouble(r.getSeq[Any](1)))).toSeq
+  }
+
+  /** The id of the query at 0-based position `pos` of a driver-side
+    * query list; the ids ride the plan as one literal array.
+    */
+  private[graft] def queryIdAt(queries: Seq[(Long, Array[Double])], pos: Column): Column =
+    element_at(array(queries.map(q => lit(q._1)): _*), pos + 1)
+
+  /** The query fan-out of a one-scan ANN search: `scores` holds one score
+    * per query for each `encoded` row (id, …); posexplode turns it into
+    * (query_id, neighbor_id, `name`) rows, `name` = `score` of the raw
+    * element.
+    */
+  private[graft] def fanOut(encoded: DataFrame, scores: Column,
+                            queries: Seq[(Long, Array[Double])], name: String,
+                            score: Column => Column): DataFrame =
+    encoded.select(col("id").as("neighbor_id"), posexplode(scores))
+      .select(queryIdAt(queries, col("pos")).as("query_id"), col("neighbor_id"),
+        score(col("col")).as(name))
 
   /** Exact top-k neighbours per query vector.
     * `queries` must be small (it is broadcast); `corpus` can be arbitrarily
-    * large. Ranking key is (rounded cosine desc, corpus id asc) so results
-    * are deterministic under float reassociation.
+    * large. Ranked by [[rankPerQuery]] on the rounded cosine.
     */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
-                     k: Int, roundTo: Int = 6): DataFrame = {
-    val joined = corpus.join(broadcast(queries), col(idCol) =!= col(qidCol))
-      .select(col(qidCol).as("query_id"), col(idCol).as("neighbor_id"),
-        round(cosine(col(vecCol), col(qvecCol)), roundTo).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    joined.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-  }
+                     k: Int, roundTo: Int = 6): DataFrame =
+    rankPerQuery(exactScores(corpus.join(broadcast(queries)), idCol, vecCol,
+      qidCol, qvecCol, roundTo), col("cos_sim").desc, k)
 
   /** Per-label centroid and per-dimension variance of an embedding
     * column — the class-prototype table behind prototype classification,
@@ -83,29 +146,11 @@ object Similarity {
         round(avg(col("v") * col("v")) - avg(col("v")) * avg(col("v")),
           roundTo).as("var_v"))
 
-  /** Deterministic pseudo-random unit-ish hyperplane component: a value in
-    * [-1, 1) derived from (plane index, dimension index) via xxhash64 —
-    * reproducible on every executor with zero state shipped.
-    */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    (xxhash64(lit(plane), dim).cast("double") / lit(Long.MaxValue.toDouble))
-
   /** h-bit sign-LSH signature of a vector: bit p = sign(v · plane_p).
     * Native kernel (graft.functions.VectorKernels.signLsh).
     */
   def signLshSignature(vec: Column, numPlanes: Int): Column =
     graft.functions.VectorExpr.signLsh(vec, numPlanes)
-
-  /** The composed HOF form, kept as executable documentation/reference. */
-  def signLshSignatureComposed(vec: Column, numPlanes: Int): Column = {
-    val vd = asDouble(vec)
-    (0 until numPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1), (x, i) => x * planeComponent(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Exact re-rank of an ANN shortlist — the production two-stage shape
     * (FAISS-style): a cheap approximate stage (ADC / LSH / IVF) keeps
@@ -114,24 +159,21 @@ object Similarity {
     * candidate source; corpus vectors rejoin BY ID (one hash join whose
     * probe side is the shortlist — orders of magnitude smaller than the
     * corpus), the query set broadcasts. With a full-coverage shortlist
-    * this equals [[bruteForceTopK]] EXACTLY (same rounded-cosine
-    * tie-break ranking key) — asserted in PqSpec; at production nprobe
+    * this equals [[bruteForceTopK]] EXACTLY (both score through
+    * [[exactScores]] and rank through [[rankPerQuery]]) — asserted in
+    * PqSpec; at production nprobe
     * the re-rank repairs ADC quantization error at shortlist cost.
     */
   def rerankExact(shortlist: DataFrame, corpus: DataFrame, idCol: String,
                   vecCol: String, queries: DataFrame, qidCol: String,
                   qvecCol: String, k: Int, roundTo: Int = 6): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    shortlist.select(col("query_id"), col("neighbor_id"))
+    val pairs = shortlist.select(col("query_id"), col("neighbor_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv")),
         Seq("neighbor_id"))
       .join(broadcast(queries.select(col(qidCol).as("query_id"),
         col(qvecCol).as("_qv"))), Seq("query_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("_cv"), col("_qv")), roundTo).as("cos_sim"))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    rankPerQuery(exactScores(pairs, "neighbor_id", "_cv", "query_id", "_qv", roundTo),
+      col("cos_sim").desc, k)
   }
 
   /** Approximate top-k: candidates = same-signature bucket, ranked by
@@ -145,11 +187,7 @@ object Similarity {
       signLshSignature(col(vecCol), numPlanes).as("_sig"))
     val q = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("_qv"),
       signLshSignature(col(qvecCol), numPlanes).as("_sig"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    c.join(q, Seq("_sig")).where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("_cv"), col("_qv")), roundTo).as("cos_sim"))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    rankPerQuery(exactScores(c.join(q, Seq("_sig")), "neighbor_id", "_cv",
+      "query_id", "_qv", roundTo), col("cos_sim").desc, k)
   }
 }

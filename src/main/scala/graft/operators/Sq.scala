@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.SqExpr
@@ -33,14 +32,6 @@ object Sq {
     * precedent): bounds are 2·d doubles.
     */
   val MaxDims: Int = 4096
-
-  /** Driver-side query cap (the [[Bq.MaxQueries]] sibling): the Q×d
-    * per-query weight tables ride the scoring kernel's closure /
-    * addReferenceObj, so an unbounded query list builds an unbounded
-    * driver-side model — against the invariant that nothing driver-side
-    * scales with corpus rows.
-    */
-  val MaxQueries: Int = 4096
 
   /** Train (min, Δ) per dimension: one distributed aggregate over the
     * bounded dimension axis; only d rows ever reach the driver.
@@ -76,40 +67,28 @@ object Sq {
     * encoded corpus scores every query per row (score = exact dot of
     * the normalized query with the decoded grid point, computed as
     * const_q + Σ w_q(i)·code_i without materializing the decode),
-    * posexplode fans out (query, score) and a per-query window keeps k
+    * [[Similarity.fanOut]] turns the scores into (query, score) rows and
+    * [[Similarity.rankPerQuery]] keeps k per query on the rounded score
     * (WindowGroupLimit prunes to k per task before the shuffle).
-    * `queries` is a bounded driver-side list; self-matches are kept
-    * (the [[Pq.topK]] contract).
+    * `queries` is a bounded driver-side list: its Q×d weight tables ride
+    * the scoring kernel as reference objects, so it is capped at
+    * [[Similarity.MaxQueries]]. Self-matches are kept (the [[Pq.topK]]
+    * contract).
     */
   def topK(encoded: DataFrame, b: Bounds,
            queries: Seq[(Long, Array[Double])], k: Int,
            roundTo: Int = 6): DataFrame = {
     require(queries.nonEmpty, "sq topK: empty query list")
-    require(queries.length <= MaxQueries,
-      s"sq topK: ${queries.length} queries exceeds MaxQueries=$MaxQueries — " +
-        "the Q×d weight tables are a driver-side broadcast; raise the knob " +
-        "deliberately")
+    Similarity.requireQueryCap("sq topK", queries.length)
     val d = b.mins.length
-    val weights = queries.map { case (_, q) =>
-      val n = math.sqrt(q.map(x => x * x).sum)
-      val qn = if (n > 0) q.map(_ / n) else q
+    val qns = queries.map { case (_, q) => Ivf.normalize(q) }
+    val weights = qns.map { qn =>
       require(qn.length == d, s"sq topK: query dim ${qn.length} != corpus dim $d")
       Array.tabulate(d)(i => qn(i) * b.deltas(i) / 255.0)
     }.toArray
-    val consts = queries.map { case (_, q) =>
-      val n = math.sqrt(q.map(x => x * x).sum)
-      val qn = if (n > 0) q.map(_ / n) else q
-      (0 until d).map(i => qn(i) * b.mins(i)).sum
-    }.toArray
-    val qidArr = array(queries.map(q => lit(q._1)): _*)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq_score").desc, col("neighbor_id").asc)
-    encoded
-      .select(col("id").as("neighbor_id"),
-        posexplode(SqExpr.scores(col("codes"), weights, consts)))
-      .select(element_at(qidArr, col("pos") + 1).as("query_id"),
-        col("neighbor_id"), round(col("col"), roundTo).as("sq_score"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val consts = qns.map(qn => (0 until d).map(i => qn(i) * b.mins(i)).sum).toArray
+    val scored = Similarity.fanOut(encoded, SqExpr.scores(col("codes"), weights, consts),
+      queries, "sq_score", round(_, roundTo))
+    Similarity.rankPerQuery(scored, col("sq_score").desc, k)
   }
 }

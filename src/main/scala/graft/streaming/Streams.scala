@@ -1156,14 +1156,11 @@ object Streams {
   case class TokenEvent(shard: Int, token: String)
   /** A shard's current estimate for a token after a batch. */
   case class TokenCount(token: String, est: Long)
-  // NOTE: Encoders.product codegen for the processor state classes in
-  // this object (this one, LastEvent, LandmarkState, OpenIsland, …)
-  // trips a Janino method-resolution limitation on nested case classes
-  // and falls back to interpreted serialization with a per-batch ERROR
-  // log line — cosmetic: the fallback is correct, it affects plain-long
-  // state classes just the same, and the cost is per state row, not per
-  // event.
-  private case class MgState(items: Map[String, Long])
+  // private[streaming], like every state class here: the projection
+  // Spark generates for a state encoder calls the class's constructor
+  // and accessors, which a `private` nested case class hides, so codegen
+  // fails and Spark falls back to an interpreted projection
+  private[streaming] case class MgState(items: Map[String, Long])
 
   /** Continuous Misra-Gries heavy hitters via `transformWithState` —
     * trending-token tracking over an unbounded stream with HARD-bounded

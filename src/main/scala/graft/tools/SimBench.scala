@@ -55,8 +55,7 @@ object SimBench {
       .localCheckpoint(true)
     encoded.count()
     val t5 = System.nanoTime()
-    val qSeq = queries.collect().map(r =>
-      (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
+    val qSeq = Similarity.queryList(queries, "query_id", "qv")
     val pq = graft.operators.Pq.topK(encoded, cb, qSeq, k = 1)
     val pqHits = pq.where(col("neighbor_id") === col("query_id") - n).count()
     val t6 = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Baskets, Bpe, Bq, Pq, Sampling, Sq, Stats}
+import graft.operators.{Baskets, Bpe, Bq, Pq, Sampling, Similarity, Sq, Stats}
 
 /** Runtime cap guards on driver-side bounded state: every knob that
   * gates a driver collect must fail LOUDLY, naming itself, when set
@@ -43,14 +43,27 @@ class GuardSpec extends SparkSpec {
   }
 
   test("Sq.topK rejects a query list past MaxQueries, naming the knob") {
+    // one cap, Similarity.MaxQueries, guards every query-list consumer;
+    // the PQ pair embeds Q×m×k LUT doubles as plan literals
+    val queries = (0 to Similarity.MaxQueries).map(i => (i.toLong, Array(1.0, 0.0)))
     val b = Sq.Bounds(Array(-1.0, -1.0), Array(2.0, 2.0))
-    val encoded = Seq((1L, Array[Byte](0, 0))).toDF("id", "codes")
-    val queries = (0 to Sq.MaxQueries).map(i => (i.toLong, Array(1.0, 0.0)))
-    val e = intercept[IllegalArgumentException] {
-      Sq.topK(encoded, b, queries, k = 1)
+    val cb = Pq.Codebooks(m = 1, k = 1, subDim = 2, cents = Array(Array(1.0, 0.0)))
+    val vecs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("id", "v")
+    val consumers: Seq[(String, () => Any)] = Seq(
+      "Sq.topK" -> (() => Sq.topK(Seq((1L, Array[Byte](0, 0))).toDF("id", "codes"),
+        b, queries, k = 1)),
+      "Pq.topK" -> (() => Pq.topK(Seq((1L, Array[Byte](0))).toDF("id", "codes"),
+        cb, queries, k = 1)),
+      "Pq.ivfPqTopK" -> (() => Pq.ivfPqTopK(vecs, "id", "v", queries, k = 1,
+        numCentroids = 1, nprobe = 1, m = 1, kCodes = 1, sampleN = 2)),
+      "Bq.shortlist" -> (() => Bq.shortlist(Bq.encode(vecs, "id", "v"), queries, r = 1)))
+    consumers.foreach { case (name, run) =>
+      withClue(s"$name: ") {
+        val e = intercept[IllegalArgumentException](run())
+        e.getMessage should include("MaxQueries")
+        e.getMessage should include("driver-side")
+      }
     }
-    e.getMessage should include("MaxQueries")
-    e.getMessage should include("driver-side")
   }
 
   test("bq_hamming fails loudly on a ragged corpus row, naming both widths") {

@@ -62,6 +62,20 @@ class BqSpec extends SparkSpec {
     bq shouldBe brute
   }
 
+  test("topK: duplicate corpus vectors tie, k cuts the tie at the lower neighbor_ids") {
+    // ids 1002, 1001, 1000 copy query 0: Hamming 0 and cosine 1.0 for all
+    // three, self excluded, and k = 2 cuts through the tie
+    val dupDf = (corpus ++ Seq(1002L, 1001L, 1000L).map(id => (id, corpus.head._2)))
+      .toDF("vec_id", "embedding")
+    val got = Bq.topK(dupDf, "vec_id", "embedding",
+        queriesDf.where(col("query_id") === 0L), "query_id", "qv", k = 2, r = 50)
+      .select("neighbor_id", "cos_sim", "rank").as[(Long, Double, Int)].collect()
+      .sortBy(_._3)
+    got.map(_._1) shouldBe Array(1000L, 1001L)
+    got.map(_._2) shouldBe Array(1.0, 1.0)
+    got.map(_._3) shouldBe Array(1, 2)
+  }
+
   test("hamming shortlist at r=50 recovers most of the exact top-5") {
     val got = Bq.topK(corpusDf, "vec_id", "embedding",
         queriesDf, "query_id", "qv", k = 5, r = 50)

@@ -69,6 +69,27 @@ class PqSpec extends SparkSpec {
     (recalls.sum / recalls.size) should be >= 0.7
   }
 
+  test("topK: duplicate corpus vectors tie, k cuts the tie at the lower neighbor_ids") {
+    // ids 1002, 1001, 1000 copy id 0: four identical codes, one ADC score
+    val tie = Seq(0L, 1000L, 1001L, 1002L)
+    val base = corpus(64)
+    val dupDf = base.union(tie.reverse.init.map(id => (id, vec(0L, 32, 8, 0.3)))
+      .toDF("vec_id", "embedding"))
+    val cb = Pq.train(dupDf, "embedding", m = 4, k = 8, sampleN = 67, iters = 5)
+    val encoded = Pq.encode(dupDf, "vec_id", "embedding", cb)
+    val queries = Seq((5000L, vec(0L, 32, 8, 0.3).map(_.toDouble).toArray))
+    def run(k: Int) = Pq.topK(encoded, cb, queries, k)
+      .select("neighbor_id", "adc_score", "rank").as[(Long, Double, Int)].collect()
+      .sortBy(_._3)
+    val tied = run(67).filter(r => tie.contains(r._1))
+    tied.map(_._2).distinct should have length 1
+    tied.map(_._1).toSeq shouldBe tie // ranked by neighbor_id within the tie
+    val cut = tied(1)._3 // k keeps two of the four tied rows
+    val got = run(cut)
+    got.map(_._3).toSeq shouldBe (1 to cut)
+    got.map(_._1).filter(tie.contains).toSeq shouldBe tie.take(2)
+  }
+
   test("ivfPqTopK: probed-cluster ADC matches full-scan ADC for in-cluster neighbours") {
     val df = corpus(400).localCheckpoint(true)
     val queries = df.where(col("vec_id") < 3)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -13,6 +14,31 @@ class SimilaritySpec extends SparkSpec {
     (3L, Seq(-1.0f, 0.0f, 0.0f)),
     (4L, Seq(2.0f, 0.0f, 0.0f))
   ).toDF("vec_id", "embedding")
+
+  /** HOF form of [[Similarity.cosine]]: the parity oracle. */
+  private def cosineComposed(a: Column, b: Column): Column = {
+    val ad = Similarity.asDouble(a); val bd = Similarity.asDouble(b)
+    Similarity.dot(ad, bd) / (Similarity.l2Norm(ad) * Similarity.l2Norm(bd))
+  }
+
+  /** Deterministic pseudo-random unit-ish hyperplane component: a value in
+    * [-1, 1) derived from (plane index, dimension index) via xxhash64 —
+    * reproducible on every executor with zero state shipped.
+    */
+  private def planeComponent(plane: Int, dim: Column): Column =
+    (xxhash64(lit(plane), dim).cast("double") / lit(Long.MaxValue.toDouble))
+
+  /** HOF form of [[Similarity.signLshSignature]]: the parity oracle. */
+  private def signLshSignatureComposed(vec: Column, numPlanes: Int): Column = {
+    val vd = Similarity.asDouble(vec)
+    (0 until numPlanes).map { p =>
+      val proj = aggregate(
+        zip_with(vd, sequence(lit(0), functions.size(vd) - 1),
+          (x, i) => x * planeComponent(p, i)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
+  }
 
   test("dot / l2Norm / cosine match hand-computed values") {
     val r = vecs.where(col("vec_id") === 2L)
@@ -30,7 +56,7 @@ class SimilaritySpec extends SparkSpec {
   test("sign-LSH kernel is value-identical to the composed HOF signature") {
     val both = vecs.select(
         Similarity.signLshSignature(col("embedding"), 12).as("k"),
-        Similarity.signLshSignatureComposed(col("embedding"), 12).as("h"))
+        signLshSignatureComposed(col("embedding"), 12).as("h"))
       .as[(Long, Long)].collect()
     both.foreach { case (k, h) => k shouldBe h }
   }
@@ -38,7 +64,7 @@ class SimilaritySpec extends SparkSpec {
   test("kernel cosine is bit-identical to the composed HOF cosine") {
     val both = vecs.crossJoin(vecs.select(col("embedding").as("e2")))
       .select(Similarity.cosine(col("embedding"), col("e2")).as("k"),
-        Similarity.cosineComposed(col("embedding"), col("e2")).as("h"))
+        cosineComposed(col("embedding"), col("e2")).as("h"))
       .as[(Double, Double)].collect()
     both.foreach { case (k, h) =>
       // kernel deviates from the HOF form only at zero norms: 0.0, not NaN
@@ -148,6 +174,16 @@ class SimilaritySpec extends SparkSpec {
     // cos to q=[1,0,0]: id4=1.0, id2=0.707, id1=0.0, id3=-1.0
     got.map(_._1) shouldBe Array(4L, 2L, 1L)
     got.map(_._2) shouldBe Array(1, 2, 3)
+    // duplicate corpus vectors: ids 6 and 5 copy id 4, so three rows tie
+    // at cosine 1.0 and k = 2 cuts through the tie — the lower ids win
+    val dups = vecs.union(Seq((6L, Seq(2.0f, 0.0f, 0.0f)), (5L, Seq(2.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding"))
+    val tied = Similarity.bruteForceTopK(dups, "vec_id", "embedding",
+        queries, "query_id", "qv", k = 2)
+      .select("neighbor_id", "cos_sim", "rank").as[(Long, Double, Int)].collect().sortBy(_._3)
+    tied.map(_._1) shouldBe Array(4L, 5L)
+    tied.map(_._2) shouldBe Array(1.0, 1.0)
+    tied.map(_._3) shouldBe Array(1, 2)
   }
 
   test("lshTopK: identical-direction vectors share a bucket, rank by cosine") {

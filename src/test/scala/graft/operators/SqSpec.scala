@@ -74,6 +74,26 @@ class SqSpec extends SparkSpec {
     (recalls.sum / recalls.length) should be >= 0.9
   }
 
+  test("topK: duplicate corpus vectors tie, k cuts the tie at the lower neighbor_ids") {
+    // ids 1002, 1001, 1000 copy id 0: four identical codes, one score
+    val tie = Seq(0L, 1000L, 1001L, 1002L)
+    val dupDf = (corpus ++ tie.reverse.init.map(id => (id, corpus.head._2)))
+      .toDF("vec_id", "embedding")
+    val b = Sq.train(dupDf, "embedding")
+    val encoded = Sq.encode(dupDf, "vec_id", "embedding", b)
+    val queries = Seq((5000L, corpus.head._2))
+    def run(k: Int) = Sq.topK(encoded, b, queries, k)
+      .select("neighbor_id", "sq_score", "rank").as[(Long, Double, Int)].collect()
+      .sortBy(_._3)
+    val tied = run(corpus.length + 3).filter(r => tie.contains(r._1))
+    tied.map(_._2).distinct should have length 1
+    tied.map(_._1).toSeq shouldBe tie // ranked by neighbor_id within the tie
+    val cut = tied(1)._3 // k keeps two of the four tied rows
+    val got = run(cut)
+    got.map(_._3).toSeq shouldBe (1 to cut)
+    got.map(_._1).filter(tie.contains).toSeq shouldBe tie.take(2)
+  }
+
   test("topK plan: map-only scoring, WindowGroupLimit prunes the per-query sort") {
     val b = Sq.train(corpusDf, "embedding")
     val plan = Sq.topK(Sq.encode(corpusDf, "vec_id", "embedding", b), b,

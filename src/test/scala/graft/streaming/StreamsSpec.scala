@@ -2115,6 +2115,37 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
+  test("heavyHittersStream: the MG state projection compiles, with no interpreted fallback") {
+    // CODEGEN_ONLY turns Spark's silent fallback to an interpreted
+    // projection into an error: a state class the generated code cannot
+    // reach (a `private` nested case class) fails the query
+    val confs = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val stream = MemoryStream[String]
+      val name = s"mem_${System.nanoTime()}"
+      val q = heavyHittersStream(stream.toDS(), capacity = 4, shards = 2)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        stream.addData("a", "b", "a"); q.processAllAvailable()
+        stream.addData("a"); q.processAllAvailable() // reads the stored state
+      } finally q.stop()
+      q.exception shouldBe empty
+      spark.table(name).as[TokenCount].collect()
+        .groupBy(_.token).view.mapValues(_.map(_.est).max).toMap shouldBe
+        Map("a" -> 3L, "b" -> 1L)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("teardown discipline: StateStore.stop() unloads the RocksDB providers query.stop() leaves behind") {
     // Pins the mechanism behind the r15 endurance-teardown fix
     // (docs/THROUGHPUT.md "Teardown caveat"): stopping a streaming query
